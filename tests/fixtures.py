@@ -94,3 +94,48 @@ def staging_batch_2(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
         STAGING_AUTHORS,
     )
     return main, authors
+
+
+def staging_batch_chained(
+    spark: SparkSession, b: int, papers: int = 12
+) -> tuple[DataFrame, DataFrame]:
+    """Batch ``b`` of a deterministic micro-batch chain: ``papers`` new
+    papers plus a replay of batch ``b - 1``'s first two, each with 1-3
+    authors from a name pool that grows by four names a batch (so later
+    batches mix existing and new authors, venues and affiliations), and
+    NULL year/type/venue/affiliation/citation sentinels sprinkled in."""
+    main, authors = [], []
+    for bb in ([b - 1] if b else []) + [b]:
+        for i in range(2 if bb < b else papers):
+            k = bb * papers + i
+            pid = f"C{bb:02d}.{i:04d}"
+            main.append(
+                (
+                    None if k % 7 == 0 else 1990 + k % 30,
+                    ("Physics", "Mathematics", "Biology")[k % 3],
+                    None if k % 5 == 0 else ("journal-article", "preprint")[k % 2],
+                    None if k % 11 == 0 else f"Venue {k % (4 + bb)}",
+                    f"Publisher {k % 3}",
+                    pid,
+                    None if k % 4 == 0 else f"10.9/{k}",
+                    f"Paper {k}",
+                    f"v{k % 4 + 1}",
+                    None if k % 9 == 0 else (k * 37) % 23,
+                )
+            )
+            for j in range(k % 3 + 1):
+                n = (k * 5 + j * 3) % (6 + 4 * bb)
+                authors.append(
+                    (
+                        f"G{n}",
+                        f"F{n}",
+                        None if n % 6 == 0 else f"Inst {n % (3 + bb)}",
+                        ("male", "female", "unknown")[(n + bb) % 3],
+                        f"G{n} F{n}",
+                        pid,
+                    )
+                )
+    return (
+        spark.createDataFrame(main, STAGING_MAIN),
+        spark.createDataFrame(authors, STAGING_AUTHORS),
+    )

@@ -132,13 +132,16 @@ def test_fused_pair_feeds_match_distributed_bench_config(spark, monkeypatch):
         assert fused == dist, name
 
 
-def test_pairs_dedup_and_codes_edge_cases():
+def test_pairs_dedup_and_codes_edge_cases(monkeypatch):
     """r20 synthetic edges for the fused feed's numpy groupBy twin:
     multiplicity counts, the lexsort fallback for unpackable key
-    spaces, the NULL-key guard, and namespaced code order."""
+    spaces (including the int64-wrap boundary), the NULL-key guard,
+    and namespaced code order."""
     import numpy as np
     import pyarrow as pa
     import pytest
+
+    lexsort = np.lexsort
 
     # packed path: counts + ascending (custkey, suppkey) order
     t = pa.table({"o_custkey": [5, 2, 5, 2], "l_suppkey": [7, 1, 7, 9]})
@@ -152,6 +155,21 @@ def test_pairs_dedup_and_codes_edge_cases():
     uc2, us2, w2 = graph._pairs_dedup(t2)
     assert uc2.tolist() == [-3, 2**40] and us2.tolist() == [1, 2**40]
     assert w2.tolist() == [2, 1]
+    # boundary: cmax == (2**63 - 1) // (smax + 1) with a large suppkey
+    # would pack past int64 max and wrap negative — must take the
+    # lexsort fallback and decode the exact pairs
+    smax = 2**31
+    cmax = (2**63 - 1) // (smax + 1)
+    assert cmax * (smax + 1) + smax > 2**63 - 1
+    t3 = pa.table({"o_custkey": [cmax, 1, cmax], "l_suppkey": [smax, 0, smax]})
+    sorts = []
+    monkeypatch.setattr(
+        np, "lexsort", lambda keys: sorts.append(keys) or lexsort(keys)
+    )
+    uc3, us3, w3 = graph._pairs_dedup(t3)
+    assert sorts, "took the packed-key path on an unpackable key space"
+    assert uc3.tolist() == [1, cmax] and us3.tolist() == [0, smax]
+    assert w3.tolist() == [1, 2]
     # NULL keys refuse loudly (the projection would NULL-collapse them)
     with pytest.raises(ValueError, match="NULL"):
         graph._pairs_dedup(
@@ -420,20 +438,102 @@ def test_star_load_footer_bound_proves_small_only(spark, monkeypatch):
     assert over == base
 
 
-def test_star_local_gate_skips_non_bootstrap_state(spark):
-    """A state that already holds rows must NEVER take the first-batch
-    kernel: batch 2 over a kernel-built state runs distributed and keys
-    continue past max(existing)."""
+def test_star_local_kernel_matches_distributed_chained_batches(
+    spark, monkeypatch
+):
+    """Incremental batches take the kernel too: four chained batches
+    through the kernel vs the distributed loader (LOCAL_STAR_ROWS = -1)
+    — all nine tables bit-equal after every batch, and the kernel branch
+    really taken each time. The batches cover a duplicate id within one
+    batch, an author whose only papers have zero citations (h 0, g
+    NULL), an existing author arriving with another gender (stored one
+    kept), a new author whose only paper is a replay (dim row with NULL
+    h/g, no bridge), a whole replayed batch (adds no rows), and dense
+    surrogate keys continuing past max(existing)."""
     from tests.fixtures import staging_batch_1, staging_batch_2
     from ut_data_engineering_group_project_2022_spark.operators import star
+    from ut_data_engineering_group_project_2022_spark.schemas import (
+        STAGING_AUTHORS,
+        STAGING_MAIN,
+    )
 
     m1, a1 = staging_batch_1(spark)
-    state = star.load_batch(star.empty_star(spark), m1, a1)
-    assert not star._bootstrap_only(state)
     m2, a2 = staging_batch_2(spark)
-    state2 = star.load_batch(state, m2, a2)
-    keys = sorted(r.author_key for r in state2.dim_author.collect())
-    assert keys == list(range(1, len(keys) + 1))
+    art = (2009, "Mathematics", "journal-article", "J. Comb.", "Elsevier")
+    m1 = m1.unionByName(
+        spark.createDataFrame(
+            [
+                (*art, "0703.0001", None, "Zero", "v1", 0),
+                (*art, "0703.0002", None, "Dup", "v1", 4),
+                (*art, "0703.0002", None, "Dup", "v1", 4),
+            ],
+            STAGING_MAIN,
+        )
+    )
+    a1 = a1.unionByName(
+        spark.createDataFrame(
+            [
+                ("Zero", "Z", None, "male", "Zero Z", "0703.0001"),
+                ("John", "Smith", "MIT", "male", "John Smith", "0703.0002"),
+            ],
+            STAGING_AUTHORS,
+        )
+    )
+    # batch 2 also replays 0701.0001, now credited to a new author, and
+    # brings John Smith back on a new paper with another gender
+    m2 = m2.unionByName(m1.filter(F.col("id") == "0701.0001")).unionByName(
+        spark.createDataFrame(
+            [(*art, "0704.0001", "10.4/d", "More", "v2", 7)], STAGING_MAIN
+        )
+    )
+    a2 = a2.unionByName(
+        spark.createDataFrame(
+            [
+                ("New", "Replay", "UT", "female", "New Replay", "0701.0001"),
+                ("John", "Smith", "ETH", "female", "John Smith", "0704.0001"),
+            ],
+            STAGING_AUTHORS,
+        )
+    )
+    m4 = spark.createDataFrame(
+        [
+            (2010, "Chemistry", "preprint", "ChemRxiv", "ACS",
+             "0705.0001", None, "Bonds", "v1", 3),
+        ],
+        STAGING_MAIN,
+    )
+    a4 = spark.createDataFrame(
+        [
+            ("Anna", "Doe", "MIT", "female", "Anna Doe", "0705.0001"),
+            ("Cy", "Lo", "KCL", "male", "Cy Lo", "0705.0001"),
+        ],
+        STAGING_AUTHORS,
+    )
+    kernel = dist = star.empty_star(spark)
+    seen = []
+    for m, a in [(m1, a1), (m2, a2), (m2, a2), (m4, a4)]:
+        kernel = star.load_batch(kernel, m, a)
+        assert star._kernel_output(kernel) is not None
+        monkeypatch.setattr(star, "LOCAL_STAR_ROWS", -1)
+        dist = star.load_batch(dist, m, a)
+        monkeypatch.undo()
+        got = _star_tables(kernel)
+        assert got == _star_tables(dist)
+        for dim, key in (("dim_author", 0), ("dim_venue", 0),
+                         ("dim_domain", 0), ("dim_affiliation", 0)):
+            keys = sorted(r[key] for r in got[dim])
+            assert keys == list(range(1, len(keys) + 1)), dim
+        seen.append(got)
+    assert seen[2] == seen[1]  # the replayed batch added nothing
+    authors = {r[1]: r for r in seen[-1]["dim_author"]}
+    assert authors["John Smith"][2] == "male"
+    assert authors["Zero Z"][3:] == (0, None)
+    replay_key = authors["New Replay"][0]
+    assert authors["New Replay"][3:] == (None, None)
+    assert all(r[1] != replay_key for r in seen[-1]["bridge_author_group"])
+    assert authors["Cy Lo"][0] == len(authors)  # continued past the max
+    dup = [r for r in seen[-1]["paper_fact"] if r[6] == "0703.0002"]
+    assert len(dup) == 2 and dup[0][4] != dup[1][4]
 
 
 def test_knn_local_kernels_match_distributed_bench_config(spark, monkeypatch):

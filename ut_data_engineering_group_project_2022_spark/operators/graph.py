@@ -104,8 +104,14 @@ def _pairs_dedup(t):
         e = np.empty(0, np.int64)
         return e, e, e
     cmax, smax = int(ck.max()), int(sk.max())
-    if int(ck.min()) < 0 or int(sk.min()) < 0 or cmax > (2**63 - 1) // (smax + 1):
-        # unpackable key space: lexicographic sort of the raw pairs
+    if (
+        int(ck.min()) < 0
+        or int(sk.min()) < 0
+        or cmax > ((2**63 - 1) - smax) // (smax + 1)
+    ):
+        # unpackable key space (the largest packed key
+        # cmax * (smax + 1) + smax must fit int64): lexicographic sort
+        # of the raw pairs
         order = np.lexsort((sk, ck))
         cs, ss = ck[order], sk[order]
         starts = np.flatnonzero(
