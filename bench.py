@@ -3,29 +3,21 @@
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 
-  {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {"<name>": sec, ...}, "sf": <sf>}
+  {"metric": "headline_suite_wall_seconds", "value": <total sec>,
+   "unit": "sec", "queries": {"<name>": sec, ...}, "cold_total": ...,
+   "star_load_seconds": ..., "noise_probe_seconds": ...,
+   "job_latency_ms_start": ..., "r1_suite_total": ..., "sf": <sf>}
 
 Each query is forced end-to-end with the `noop` sink (full computation,
 no driver-side collect). Progress goes to stderr; stdout carries only
-the JSON line.
-
-r8 drift verdict (the r7 "knn/Python-worker family" watch item): the
-host swings 1.5-3x minute-to-minute — llm_knn_pq_rerank read 4.3 s in
-one full-bench run and 1.38 s in the next with identical code, and
-llm_knn_bruteforce's r7 regression reversed with zero code change.
-The one real component was knn_pq's r7 per-row assert_true dim gate
-(~0.4 s of defeated codegen at sf0.1), replaced in r8 with an
-aggregate-folded check. Mitigations here: `noise_probe_seconds` (a
-fixed reference job) rides the payload, and a query whose two runs
-disagree by >40% gets an adaptive third pass.
+the JSON line. The full record, plus every raw pass per query
+(`queries_runs`), lands in the untracked sidecar BENCH_local.json.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
 import time
 from pathlib import Path
@@ -39,6 +31,19 @@ from pyspark.sql import functions as F  # noqa: E402
 from ut_data_engineering_group_project_2022_spark.plans import all_queries  # noqa: E402
 from ut_data_engineering_group_project_2022_spark.session import get_spark  # noqa: E402
 
+# The headline suite's original 14 queries. `value` covers the full
+# current suite, while `r1_suite_total` sums only these so totals stay
+# comparable against the round-1 anchor in BASELINE.md.
+R1_SUITE = {
+    "bi_rank_customers_by_order_count", "bi_rank_customers_by_revenue",
+    "bi_rank_parts_by_shipped_qty", "bi_rank_suppliers_by_region_revenue",
+    "graph_pagerank", "llm_knn_bruteforce", "llm_minhash_lsh",
+    "metric_hindex", "star_q01_authors_by_papers_in_domain",
+    "tpch_q10_returned_items", "tpch_q1_pricing_summary",
+    "tpch_q3_shipping_priority", "tpch_q5_local_supplier_volume",
+    "tpch_q6_forecast_revenue",
+}
+
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -50,86 +55,41 @@ def main() -> None:
     # in a timed run.
     spark.sparkContext.setLogLevel("ERROR")
 
+    def noop(df) -> None:
+        df.write.format("noop").mode("overwrite").save()
+
     # Warm the JVM (codegen, shuffle machinery) so the first timed query
     # doesn't absorb session startup cost.
-    spark.range(1_000_000).groupBy((F.col("id") % 16).alias("k")).count().write.format(
-        "noop"
-    ).mode("overwrite").save()
-    # Host-noise probe: a fixed CPU-bound reference job, timed AFTER
-    # warmup. The bench host swings ~1.5x minute-to-minute (r7/r8 drift
-    # diagnosis: llm_knn_pq_rerank read 4.3 s in one bench run and
-    # 1.5 s in the next with identical code); this number lets a later
-    # reader normalize round-over-round comparisons instead of
-    # mistaking host load for regressions.
+    noop(spark.range(1_000_000).groupBy((F.col("id") % 16).alias("k")).count())
+
+    # CPU probe: a fixed single-stage CPU-bound reference job.
     def probe() -> float:
         t0 = time.monotonic()
-        spark.range(50_000_000).select(
-            F.sum(F.hash("id").cast("bigint")).alias("s")
-        ).write.format("noop").mode("overwrite").save()
+        noop(spark.range(50_000_000).select(F.sum(F.hash("id").cast("bigint")).alias("s")))
         return round(time.monotonic() - t0, 3)
 
-    # Per-JOB latency probe (r12): the CPU probe above is a single
-    # long-running stage and reads quiet even when task-dispatch/wakeup
-    # latency on the (shared) physical host is 2-3x elevated — measured
-    # r12: CPU probe 0.14-0.20 s warm while graph_connected_components
-    # ran 13.7 s vs its 3.8 s quiet record and a tiny 2-stage job took
-    # 230 ms vs the ~70-90 ms a quiet minute gives. Job-count-heavy
-    # rows (CC, louvain, pagerank, the star loader) scale with THIS
-    # number, not with CPU throughput, so the payload records both
-    # dimensions. min-of-5 with the FIRST rep discarded (r12 ADVICE):
-    # one rep is one scheduler round trip and single samples swing on
-    # wakeup jitter, and the very first rep on a fresh JVM additionally
-    # pays codegen/JIT of the probe job itself — the same cold-reading
-    # effect the CPU probe's min-of-2 mitigates — which would push the
-    # min above the quiet bar and trigger a spurious 25 s wait cycle.
+    # Dispatch probe: a tiny 2-stage job, which reads task-dispatch
+    # latency rather than CPU throughput. min-of-5 with the first rep
+    # discarded: one rep is one scheduler round trip and single samples
+    # swing on wakeup jitter, and the first rep on a fresh JVM also pays
+    # the probe job's own codegen.
     def job_probe() -> float:
         reps = []
         for _ in range(5):
             t0 = time.monotonic()
-            spark.range(10_000).groupBy((F.col("id") % 8).alias("k")).count().write.format(
-                "noop"
-            ).mode("overwrite").save()
+            noop(spark.range(10_000).groupBy((F.col("id") % 8).alias("k")).count())
             reps.append(time.monotonic() - t0)
         return round(min(reps[1:]) * 1000, 1)
 
-    # Quiet-host gate (r9 verdict ask #1): BENCH_r09 was recorded under
-    # 1.27x sustained host load (probe 0.821 vs the 0.645 reference) and
-    # its raw numbers under-sold the engine. If the minute is loud
-    # (probe > ~0.70), wait it out — bounded by
-    # $SPARK_GRAFT_QUIET_WAIT_S (default 240 s) so a permanently loud
-    # host still produces a record — and re-probe; the suite runs on the
-    # quietest minute found within the budget.
+    # Quiet-minute gate: while either probe is over its bar, wait 25 s
+    # and re-probe, bounded by $SPARK_GRAFT_QUIET_WAIT_S so a permanently
+    # loud host still produces a record. The recorded probes are the
+    # last minute's readings, the one the suite runs in. The CPU probe is
+    # min-of-2 because a fresh JVM's first probe reads ~2-3x slow on its
+    # own codegen, which is not host load.
     quiet_bar = float(os.environ.get("SPARK_GRAFT_QUIET_BAR_S", "0.70"))
-    # Job-dispatch quiet bar (r12): the CPU probe alone admitted suites
-    # onto minutes where task-dispatch latency was 2-3x elevated and the
-    # job-count-heavy rows read 1.3-3.6x slow (see job_probe above).
-    # Default tightened 120 -> 100 ms (r12 verdict): the 120-180 ms
-    # corridor produced flag-null records whose job-count-heavy rows sat
-    # in the ordinary 4.6-5.3 s band — 100 ms sits just above the
-    # measured quiet band (83-95 ms across nine calibrated runs) so a
-    # default-env run only admits genuinely quiet minutes. The wait
-    # stays bounded by the same budget, so a permanently loud host still
-    # produces a (band-labelled, possibly flagged) record.
     quiet_job_bar = float(os.environ.get("SPARK_GRAFT_QUIET_JOB_MS", "100"))
-    # Elevated-dispatch FLAG bar, derived from the gate bar (r12 ADVICE:
-    # the two thresholds were independent constants — an operator
-    # raising the env bar for a known-slow host got every record flagged
-    # at the hardcoded 180 ms). 1.8x the gate bar reproduces the
-    # calibrated 180 ms at the default gate of 100 ms (quiet 83-95,
-    # ordinary 105-160, loud 174-266) and scales with the env knob.
-    flag_job_bar = 1.8 * quiet_job_bar
-    # Budget raised 240 -> 600 s (r12): across the r12 session's five
-    # gated hunts, reaching a quiet minute took 4-11 probe iterations
-    # (~100-275 s of waiting) — a 240 s budget forfeits roughly half of
-    # them, and the minutes it forfeits are exactly the ones that
-    # produced the round's only records meeting the perf targets. The
-    # wait stays bounded: a permanently loud host still yields a
-    # (flagged) record after 10 minutes.
     wait_budget = float(os.environ.get("SPARK_GRAFT_QUIET_WAIT_S", "600"))
-    # min-of-2: the very first probe of a fresh JVM reads ~2-3x slow
-    # (codegen/JIT of the probe job itself), which is JVM warmth, not
-    # host load — a single cold reading would spuriously trip both the
-    # quiet-gate and the start/end disagreement flag (r11).
     noise_probe = min(probe(), probe())
     job_latency_start = job_probe()
     waited = 0.0
@@ -143,12 +103,6 @@ def main() -> None:
     ) and waited < wait_budget:
         time.sleep(25)
         waited += 25
-        # Latest minute's min-of-2, not min-so-far: the suite runs in
-        # THIS minute, so the recorded probe must reflect this minute's
-        # load or the normalized view mis-normalizes. min-of-2 keeps the
-        # loop reading consistent with the initial/end readings (r11
-        # ADVICE) — a single sample here would let one scheduler hiccup
-        # stand as the recorded start probe.
         noise_probe = min(probe(), probe())
         job_latency_start = job_probe()
         print(
@@ -160,345 +114,61 @@ def main() -> None:
     # Warm the Arrow Python-worker path too (fork + Arrow IPC setup is
     # ~2-3 s on first use and would otherwise land on whichever
     # mapInPandas-using query runs first in the cold pass).
-    spark.range(1_000).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
+    noop(spark.range(1_000).mapInPandas(lambda it: it, "id long"))
 
     # Pre-build the star warehouse and report its load time as its own
-    # metric: star.load_batch (dims/bridges/facts with surrogate keys) is
-    # the session's one-time ETL shared by all star_q*/bi_* queries via a
-    # state cache — timing it inside star_q01's cold run made that row
-    # read ~12 s of loader, ~0.4 s of query (r6 cold/warm-gap analysis).
-    # A real warehouse amortizes the load exactly like this; the bench
-    # now measures it separately instead of hiding it in one query row.
+    # metric: star.load_batch is the session's one-time ETL shared by all
+    # star_q*/bi_* queries via a state cache, so a real warehouse
+    # amortizes it exactly like this, outside every query row.
     from ut_data_engineering_group_project_2022_spark.plans.star_queries import (
         _star_views,
     )
 
-    # Single-rep dispatch probe, shared by the loader bracket below and
-    # the per-row trace (r15). Probe codegen is already JIT-warm here:
-    # job_probe() has run min-of-5 at least once in the gate loop.
-    def probe_rep_ms() -> float:
-        t0 = time.monotonic()
-        spark.range(10_000).groupBy((F.col("id") % 8).alias("k")).count().write.format(
-            "noop"
-        ).mode("overwrite").save()
-        return round((time.monotonic() - t0) * 1000, 1)
-
-    # Loader-bracketing probe pair (r19, per the r18 verdict): the star
-    # load runs BEFORE the per-row trace starts, so its band regressor
-    # has been probe_mean3 — three samples that straddle the load's own
-    # window — and both r18 star_load band misses were exactly this
-    # blind spot (a quiet start-probe on a loud minute predicts an
-    # optimistic load time that the honest reading then misses). One
-    # single-rep dispatch sample immediately before and after the load
-    # records the load's own local weather; once >=10 committed records
-    # carry the pair, evaluate mean(before, after) as the star_load
-    # regressor — the same staged protocol the r18 trace-median re-base
-    # validated. Single samples jitter (~±30 ms on scheduler wakeup):
-    # adjudication context for now, never a gate input.
-    star_load_probe_before = probe_rep_ms()
     t0 = time.monotonic()
     _star_views(spark, sf_dir)
     star_load = round(time.monotonic() - t0, 3)
-    star_load_probe_after = probe_rep_ms()
-    print(
-        f"[bench] star warehouse load: {star_load:.3f}s (bracketing dispatch"
-        f" probes {star_load_probe_before:.0f}/{star_load_probe_after:.0f}ms)",
-        file=sys.stderr,
-    )
-
-    # Warm-baseline probe for the end-of-suite detector (r11 ADVICE):
-    # the probe job JITs from ~0.18 s at start (min-of-2 on a fresh JVM)
-    # to ~0.07-0.15 s once warm, so an end-vs-START comparison at 1.3x
-    # only trips on a host ~3-5x loud — it misses the 1.5-2x swings the
-    # flag exists for. By this point the probe has executed >=2 times
-    # and the star load has driven the JVM through heavy codegen, so a
-    # min-of-2 here reads in the warm range and the end comparison
-    # becomes like-for-like. The quiet-GATE above stays on the start
-    # probe (it guards suite admission, where cold-ish is fine).
-    noise_probe_warm = min(probe(), probe())
-    job_latency_warm = job_probe()
-    print(
-        f"[bench] warm-baseline probe: {noise_probe_warm:.3f}s,"
-        f" job latency {job_latency_warm:.0f}ms",
-        file=sys.stderr,
-    )
+    print(f"[bench] star warehouse load: {star_load:.3f}s", file=sys.stderr)
 
     specs = {n: s for n, s in all_queries().items() if s.bench}
     timings: dict[str, float] = {}
     raw: dict[str, list[float]] = {}
-
-    # Per-row dispatch-weather trace (r15): the three suite-level probes
-    # sample three instants while the rows run across many minutes of
-    # host weather; every band miss adjudicated in the r15 hunt log
-    # (bench_snapshots/README.md) traced to a loud episode the probes
-    # straddled — CC/pagerank, the longest job chains, integrate weather
-    # the instantaneous probes never saw. One SINGLE-REP probe between
-    # rows (~100 ms each, probe codegen already JIT-warm from the
-    # gate/warm probes, taken OUTSIDE every row's timed window) records
-    # the weather as a (len(rows)+1)-sample trace. Single samples jitter
-    # on scheduler wakeup (the reason job_probe is min-of-5), so the
-    # trace is for post-hoc row-local adjudication (neighbor averaging —
-    # tools/band_check.py row_weather()), never for gating: all gate/
-    # flag/band logic stays on the established min-of-5 probes. Sidecar
-    # only; sample i precedes sorted-row i, the last sample follows the
-    # final row. star_load runs before this loop and carries its own
-    # bracketing probe pair (star_load_probe_*_ms, r19) instead.
-    job_probe_trace: list[float] = []
-    # Two timed executions per query, min reported: steady-state timing —
-    # the host is shared and a single pass can absorb 2-3x external noise;
-    # min-of-2 also reflects warm-path behavior for stateful queries (the
-    # star-load queries amortize their one-time load like a real warehouse).
-    # Both raw passes are emitted too (queries_runs) so round-over-round
-    # comparisons can be made cold-vs-cold or min-vs-min, and run variance
-    # (host noise) is visible in the recorded artifact.
+    # Two timed executions per query, min reported: the host is shared
+    # and a single pass can absorb 2-3x external noise, and min-of-2 also
+    # reflects warm-path behavior for stateful queries. When the two runs
+    # disagree by >40% one more pass runs and the MEDIAN of 3 is reported
+    # (a min-of-3 would bias exactly the noisy rows downward). Every raw
+    # pass is kept as `queries_runs` in the sidecar.
     for name in sorted(specs):
-        job_probe_trace.append(probe_rep_ms())
         runs = []
         for _ in range(2):
             t0 = time.monotonic()
-            df = specs[name].spark(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
+            noop(specs[name].spark(spark, sf_dir))
             runs.append(round(time.monotonic() - t0, 3))
-        # Adaptive third pass: when the two runs disagree by >40% the
-        # minute's host load is suspect (documented 1.5-3x swings) — one
-        # more sample keeps a noise spike from becoming the recorded
-        # warm time. Only disagreeing queries pay for it. The recorded
-        # statistic for a 3-run query is the MEDIAN (not the min): the r8
-        # min-of-3 gave exactly the noisy queries an extra sample to draw
-        # a minimum from, biasing their warm times downward relative to
-        # the stable min-of-2 rows (r8 ADVICE).
         if max(runs) > 1.4 * min(runs):
             t0 = time.monotonic()
-            specs[name].spark(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            noop(specs[name].spark(spark, sf_dir))
             runs.append(round(time.monotonic() - t0, 3))
         raw[name] = runs
         timings[name] = min(runs) if len(runs) == 2 else sorted(runs)[1]
-        # Noise-normalized view (stderr only): each time divided by this
-        # run's host-load factor (start probe / the r8 reference probe of
-        # 0.645 s), so a reader can separate host drift from real
-        # regressions without re-deriving the probe baseline (r8 verdict
-        # ask #4). The factor is clamped to >=1 (r10 verdict: a probe
-        # FASTER than the reference — r10 read 0.265 s — means a quiet
-        # minute, not a host that magically speeds Spark up; the
-        # unclamped model inflated every normalized time 2.43x). The
-        # stdout payload keeps RAW times only.
-        norm = timings[name] / max(noise_probe / 0.645, 1.0)
-        print(
-            f"[bench] {name}: {timings[name]:.3f}s"
-            f" (noise-normalized {norm:.3f}s, runs: {runs})",
-            file=sys.stderr,
-        )
+        print(f"[bench] {name}: {timings[name]:.3f}s (runs: {runs})", file=sys.stderr)
 
-    job_probe_trace.append(probe_rep_ms())  # closing sample after the last row
-
-    # End-of-suite probe (r10 verdict: one start-of-suite probe cannot
-    # certify an ~80 s run — BENCH_r10's gate passed at 0.265 s and the
-    # host then went loud mid-suite, visible only in per-query run
-    # spreads). Both probes ride the payload; when they disagree the
-    # suite straddled a load change and the raw numbers are low-trust.
-    noise_probe_end = min(probe(), probe())
-    job_latency_end = job_probe()
-    # Second detector: queries whose WARM runs disagree. Probes only
-    # bracket the suite; a load burst BETWEEN them shows up exactly as
-    # run disagreement (BENCH_r10: quiet probes, but tpch_q1's runs
-    # spanned 1.5-3.3 s). Run 1 is excluded — a slow first pass is the
-    # query's own cold cost (plan codegen), the normal signature even on
-    # a silent host — so only 3-run queries whose 2nd and 3rd passes
-    # still disagree >40% AND >0.3 s count: that shape (warm runs apart)
-    # is host load, not warmup.
-    adaptive = sum(
-        1
-        for r in raw.values()
-        if len(r) == 3
-        and max(r[1:]) > 1.4 * min(r[1:])
-        and max(r[1:]) - min(r[1:]) > 0.3
-    )
-    # The probe comparison is ONE-SIDED: the probe job keeps getting
-    # faster as the JVM JITs across the suite (measured r11: 0.62 cold,
-    # ~0.15 after 5 reps, ~0.07 after a full suite), so end-faster is
-    # ambiguous (JIT vs host quieting) and must not flag; end-SLOWER
-    # despite deeper JIT is unambiguous host load. The baseline is the
-    # WARM probe taken after the star load (r11 ADVICE): both ends of
-    # the comparison are then JIT-warm readings and the 1.3x multiplier
-    # actually corresponds to ~1.3x host load, not 3-5x. The 0.05 s
-    # absolute guard keeps sub-0.1 s warm baselines from flagging on
-    # scheduler jitter alone.
-    noise_flag = None
-    if (
-        noise_probe_end > 1.3 * noise_probe_warm
-        and noise_probe_end - noise_probe_warm > 0.05
-    ):
-        noise_flag = (
-            "host got loud across the suite (end probe >1.3x the warm"
-            " baseline despite JIT) — raw numbers low-trust"
-        )
-    elif adaptive >= 3:
-        noise_flag = (
-            f"host loud mid-suite ({adaptive}/{len(raw)} queries needed"
-            " an adaptive 3rd pass) — raw numbers low-trust"
-        )
-    elif (
-        job_latency_start > flag_job_bar
-        or job_latency_warm > flag_job_bar
-        or job_latency_end > flag_job_bar
-    ):
-        # Bar calibrated on the r12 session's nine runs: genuinely quiet
-        # minutes read 83-95 ms (the one such minute gave the session's
-        # best record across the board — CC 4.03 s, star_load 7.1 s),
-        # ordinary minutes 105-160 ms, and loud episodes 174-266 ms with
-        # BOTH CPU probes quiet while the suite's job-count-heavy rows
-        # ran 2-3.6x slow. The default flag bar (180 ms = 1.8x the
-        # 100 ms gate) sits in the gap between the ordinary band and the
-        # loud episodes, and tracks the env knob when an operator
-        # recalibrates for a slower host.
-        # All THREE probes participate (r13 ADVICE): the start probe
-        # brackets the star load, and a budget-exhausted admission with
-        # a loud start but calm warm/end previously produced a flag-null
-        # record whose dispatch_band read 'loud' — a combination the
-        # snapshot naming scheme doesn't anticipate. Flag and band now
-        # derive from the same worst-of-three view.
-        noise_flag = (
-            f"task-dispatch latency elevated (job probe"
-            f" {max(job_latency_start, job_latency_warm, job_latency_end):.0f}ms >"
-            f" {flag_job_bar:.0f}ms) —"
-            " job-count-heavy rows (graph_*, star_load) low-trust"
-        )
-    # Self-describing dispatch band (r12 verdict ask): a flag-null
-    # record whose job probes sit in the 100-180 ms corridor is
-    # admissible but its job-count-heavy rows (graph_*, star_load) read
-    # in the ordinary 4.6-5.3 s band, not the quiet 4.0-4.3 s band —
-    # label the record so a reader compares like-for-like without
-    # re-deriving the calibration. The worst of the three probes names
-    # the band: star_load runs between start and warm, the queries
-    # between warm and end, so all three bracket timed work. The quiet
-    # threshold is the GATE bar itself (default 100 ms), not a separate
-    # constant: an r13 run whose worst probe was 110 ms gave CC 4.76 s —
-    # ordinary-band behavior — so a ≤120 ms "quiet" label would
-    # over-claim; only minutes inside the calibrated 83-95 ms quiet band
-    # (plus the gate's small margin) earn the label.
-    worst_job = max(job_latency_start, job_latency_warm, job_latency_end)
-    if worst_job <= quiet_job_bar:
-        dispatch_band = "quiet"
-    elif worst_job <= flag_job_bar:
-        dispatch_band = "ordinary"
-    else:
-        dispatch_band = "loud"
-    if noise_flag:
-        print(f"[bench] WARNING: {noise_flag} "
-              f"(start {noise_probe:.3f}s, warm {noise_probe_warm:.3f}s,"
-              f" end {noise_probe_end:.3f}s)",
-              file=sys.stderr)
-
-    total = round(sum(timings.values()), 3)
-    cold_total = round(sum(r[0] for r in raw.values()), 3)
-    # The headline suite grew from 14 queries (rounds 1-4) to 19 in round
-    # 5; `value` covers the full current suite, while `r1_suite_total`
-    # sums only the original 14 so round-over-round totals stay
-    # comparable against the round-1 anchor in BASELINE.md.
-    r1_suite = {
-        "bi_rank_customers_by_order_count", "bi_rank_customers_by_revenue",
-        "bi_rank_parts_by_shipped_qty", "bi_rank_suppliers_by_region_revenue",
-        "graph_pagerank", "llm_knn_bruteforce", "llm_minhash_lsh",
-        "metric_hindex", "star_q01_authors_by_papers_in_domain",
-        "tpch_q10_returned_items", "tpch_q1_pricing_summary",
-        "tpch_q3_shipping_priority", "tpch_q5_local_supplier_volume",
-        "tpch_q6_forecast_revenue",
-    }
-    r1_total = round(sum(t for n, t in timings.items() if n in r1_suite), 3)
     payload = {
         "metric": "headline_suite_wall_seconds",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
-        "cold_total": cold_total,
+        "cold_total": round(sum(r[0] for r in raw.values()), 3),
         "star_load_seconds": star_load,
-        # Loader-bracketing dispatch samples (r19): the load's own local
-        # weather, which probe_mean3 cannot see (it runs pre-trace).
-        # Candidate star_load regressor once >=10 records carry them.
-        "star_load_probe_before_ms": star_load_probe_before,
-        "star_load_probe_after_ms": star_load_probe_after,
         "noise_probe_seconds": noise_probe,
-        "noise_probe_start": noise_probe,
-        "noise_probe_warm": noise_probe_warm,
-        "noise_probe_end": noise_probe_end,
         "job_latency_ms_start": job_latency_start,
-        "job_latency_ms_warm": job_latency_warm,
-        "job_latency_ms_end": job_latency_end,
-        "dispatch_band": dispatch_band,
-        "adaptive_pass_count": adaptive,
-        "noise_flag": noise_flag,
-        "r1_suite_total": r1_total,
+        "r1_suite_total": round(sum(t for n, t in timings.items() if n in R1_SUITE), 3),
         "sf": sf,
-        # Compact trace summary for the DRIVER record (the full trace is
-        # sidecar-only): median vs max of the between-row single-rep
-        # probes. A max far above the median (first sf0.1 trace: median
-        # 144 / max 378 ms) is a loud episode localized WITHIN the suite
-        # — the pattern that made probe-mean3-quiet records read their
-        # graph rows outside the fitted bands all through r15.
-        # statistics.median, not sorted()[len//2] (r15 ADVICE): the
-        # trace has len(queries)+1 samples, so the upper-middle pick
-        # would silently shift whenever the bench set changes parity.
-        "job_probe_trace_median_ms": round(
-            statistics.median(job_probe_trace), 1
-        ) if job_probe_trace else None,
-        "job_probe_trace_max_ms": max(job_probe_trace) if job_probe_trace else None,
     }
-    # Belt-and-braces: the driver captures only the tail of stdout (the r7
-    # line grew past its 2 KB window via queries_runs and came back
-    # "parsed": null). Full detail (all raw passes per query) goes to a
-    # sidecar file; stdout carries exactly ONE compact line, printed last.
-    # The sidecar is gitignored and UNTRACKED (r8 ADVICE + r11 verdict:
-    # the r11 `git add -f` snapshot kept churning because the live file
-    # is rewritten on every run) — to record a round, COPY it to
-    # bench_snapshots/r{N}_quiet.json and commit that; the live sidecar
-    # stays out of version control.
-    detail = dict(payload)
-    detail["queries_runs"] = raw
-    # Sidecar-only (stdout must stay one compact line): the per-row
-    # dispatch-weather trace collected between suite rows. Alignment:
-    # sample i precedes row i of job_probe_trace_rows (the loop order,
-    # recorded explicitly so pairing is self-describing rather than a
-    # cross-file sorted() convention — r15 ADVICE), sample -1 follows
-    # the last row; tools/band_check.py row_weather() derives each
-    # row's local weather as the mean of its bracketing samples.
-    detail["job_probe_trace_ms"] = job_probe_trace
-    detail["job_probe_trace_rows"] = sorted(specs)
-    # Self-adjudication (r15): attach the weather-conditioned band
-    # verdicts (tools/band_check.py, fit documented in
-    # bench_snapshots/README.md) so every sidecar carries its own
-    # inside/outside reading for the job-count-heavy rows, and embed
-    # the compact `band_outside` list in the DRIVER-visible stdout
-    # payload ([] = all inside; non-empty = investigate those rows;
-    # null = bands inapplicable). Both are computed from DETAIL — the
-    # dict that carries the probe trace — not the bare payload (r16):
-    # computing from the trace-less payload made the driver field miss
-    # the louvain trace-conditioned adjudication, so the one row the
-    # rule exists to stop flagging kept getting flagged exactly where
-    # it matters most. Best-effort: a band_check problem must never
-    # lose a bench record.
-    try:
-        sys.path.insert(0, str(Path(_REPO, "tools")))
-        import band_check
-
-        verdicts = band_check.check(detail)
-        detail["band_check"] = band_check.render(verdicts)
-        # band_outside derives from the structured status field, not
-        # the rendered prose (r16 ADVICE: suffix-matching verdict text
-        # meant any rewording silently changed driver output).
-        payload["band_outside"] = detail["band_outside"] = band_check.outside_from(
-            verdicts
-        )
-    except Exception as ex:  # noqa: BLE001
-        detail["band_check"] = [f"band_check unavailable: {ex!r}"]
-        payload["band_outside"] = detail["band_outside"] = None
-    finally:
-        sys.path.pop(0)
-    # Trailing newline so committed snapshot copies diff cleanly
-    # (r15 ADVICE: r15_ordinary_trace.json landed newline-less).
+    # The driver captures only the tail of stdout, so stdout carries
+    # exactly ONE compact line, printed last; the raw passes go to the
+    # gitignored sidecar. To record a round, copy the sidecar into
+    # bench_snapshots/ and commit the copy.
+    detail = dict(payload, queries_runs=raw)
     Path(_REPO, "BENCH_local.json").write_text(json.dumps(detail, indent=1) + "\n")
     spark.stop()
     print(json.dumps(payload, separators=(",", ":")))

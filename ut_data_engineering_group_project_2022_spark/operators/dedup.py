@@ -750,20 +750,6 @@ def incremental_neardup(
     match_id)`` with ``match_id`` = smallest verified corpus doc id
     (NULL when the doc is novel).
 
-    Bench drift verdict (r11 watch item, closed r12): BENCH_r11 showed
-    llm_incremental_dedup at 3.275 s vs 2.728 s in r10 (~1.14x of r9's
-    ~2.87 s) with zero code change on this path since r9. The r12
-    adjudication ran six back-to-back reps in ONE session bracketed by
-    probes (CPU 0.224/0.087 s — quiet; job-dispatch 174/117 ms —
-    moderately loud): warm reps spanned 2.753-3.468 s, median 3.224 —
-    the entire r10->r11 delta sits INSIDE the same-minute spread of
-    identical code. The same r12 session's full bench, on an even
-    louder minute (job probe ~230 ms), read 2.952/2.656 s warm — BELOW
-    the r11 value. Verdict: host variance (this query's ~15 jobs make
-    it job-dispatch-latency-bound at sf0.1, like the graph rows), not
-    a code regression; no action on this plan. Future readings should
-    be compared against the same-record `job_latency_ms_*` probes
-    (in the bench payload as of r12).
     """
     tagged = batch.select(
         "doc_id", "text", F.lit(True).alias("__is_batch")

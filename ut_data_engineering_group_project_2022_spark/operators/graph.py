@@ -1759,17 +1759,10 @@ def connected_components(
     variant belongs in a convergence-driven deployment mode, not this
     oracle-replayable operator.
 
-    r12 bench-row distribution note (zero code change this round): the
-    bench row is job-dispatch-latency-bound (49 jobs per execution,
-    counted via statusTracker at sf0.1, over 12.9k edges), so its
-    reading tracks the host's per-job latency, not this code. Measured r12 across ten bench runs plus one bracketed 8-rep
-    session: on ordinary minutes (job probe 105-160 ms) the warm row
-    reads 4.6-5.3 s (8-rep spread 4.076-4.823, median 4.569 at
-    124-186 ms); on the three genuinely quiet minutes the session's
-    quiet-hunt gate found (job probe 83-95 ms) it read 4.031, 4.233
-    and 4.106 s — the <=4.3 band of the r11 3.816 s record. Read this row
-    against the same-record ``job_latency_ms_*`` probes (in the
-    payload as of r12) before calling any movement a regression.
+    The distributed branch is job-dispatch-latency-bound on small
+    inputs: it ran 49 jobs per execution over sf0.1's 12.9k edges
+    (counted via statusTracker), so its wall time there tracks the
+    host's per-job latency, not the edge work.
     """
     if dedup_every < 1:
         # 0 would divide-by-zero in the cadence check; negatives would

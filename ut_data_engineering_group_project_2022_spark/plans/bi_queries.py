@@ -15,18 +15,6 @@ Scale notes (100 TB):
   * The outer DENSE_RANK is global (single partition) *after* the DISTINCT
     collapse, so it ranks |group-keys| rows, not |fact| rows — same
     asymptotics as the reference (Postgres) version.
-
-bi_rank drift verdict (r9 ask #4, closed r11): BENCH_r09 showed all four
-benched bi_rank_* rows 1.2-1.5x slower than r8 with zero code change on
-this module; BENCH_r10 — again with zero code change — showed the same
-four rows back at 0.70-0.99x of r9 (bi_parts 0.70x, bi_suppliers 0.73x,
-bi_revenue 0.87x). A regression that fully reverts without a diff is
-host drift, not code: the bench host swings 1.5-3x minute-to-minute
-(documented in bench.py since r8), and the r9 record was taken under a
-sustained-loud probe (0.821 s vs the 0.645 s reference). Verdict: the
-r9 bi_rank "regression" was host noise; no action on these plans, and
-future bi_rank comparisons should be read against the same-record
-noise probes (noise_probe_start/end in the payload as of r11).
 """
 
 from __future__ import annotations

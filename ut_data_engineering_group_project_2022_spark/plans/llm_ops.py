@@ -2528,13 +2528,7 @@ def llm_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     "method's point: k grows with the corpus, so candidates stay "
     "~n^2/k instead of n^2, and the pair join is an equi-join on the "
     "cluster id that AQE can skew-split. Exact cosine verify on the "
-    "original float vectors, keeper attribution per dropped vector. "
-    "Bench-watch trail (zero code change on this path since r11): the "
-    "r13 4.188 s reading was host — across r14's twelve gated hunts "
-    "this row read 3.827-5.357 s tracking the record's own job probes, "
-    "including 3.943/3.827 (inside the 3.5-4.2 s quiet-era band) on "
-    "the two best minutes; no quiet-band minute existed to adjudicate "
-    "further (r14 verdict ask #4, closed in-band).",
+    "original float vectors, keeper attribution per dropped vector.",
     tags=("llm", "dedup", "similarity", "clustering"),
     bench=True,
 )
