@@ -458,6 +458,82 @@ def test_louvain_distributed_contracted_level_matches_local_kernel(
     assert dist == exact
 
 
+def test_louvain_contracted_level_kernel_matches_exact(spark, monkeypatch):
+    """A gate just under the input size sends level 1 through the
+    distributed rounds and the contracted level 2 through the one-level
+    local kernel; the result must equal the driver simulation. The
+    barbell is used because its level 2 must move a node (it absorbs
+    the bridge that level 1 strands, see the test above)."""
+    pairs = (
+        _clique(["x1", "x2", "x3", "x4", "x5"])
+        + _clique(["y1", "y2", "y3", "y4", "y5"])
+        + [("x1", "m"), ("m", "y1")]
+    )
+    monkeypatch.setattr(graph, "LOCAL_MOVE_EDGES", 2 * len(pairs) - 1)
+    levels_run = []
+    kernel = graph.louvain_local
+
+    def spy(df, feed, rounds=4, levels=2):
+        levels_run.append(levels)
+        return kernel(df, feed, rounds, levels)
+
+    monkeypatch.setattr(graph, "louvain_local", spy)
+    got = {
+        r["node_id"]: r["community"]
+        for r in graph.louvain(_edges(spark, pairs), rounds=4).collect()
+    }
+    assert levels_run == [1]
+    assert len(set(got.values())) == 2
+    exact = {
+        r["node_id"]: r["community"]
+        for r in graph.louvain_exact(_edges(spark, pairs), rounds=4).collect()
+    }
+    assert got == exact
+
+
+def test_louvain_overflow_fallback_matches_exact(spark, monkeypatch):
+    """Past ``_NP_TWO_M_MAX`` the kernel switches to the dict kernel;
+    forcing that switch, both feeds must still equal the driver
+    simulation (the patched value travels with the pickled kernel)."""
+    monkeypatch.setattr(graph, "_NP_TWO_M_MAX", -1)
+    pairs = _clique(["a1", "a2", "a3", "a4"]) + _clique(
+        ["b1", "b2", "b3", "b4"]
+    ) + [("a1", "b1")]
+    got = {
+        r["node_id"]: r["community"]
+        for r in graph.louvain(_edges(spark, pairs), rounds=4).collect()
+    }
+    exact = {
+        r["node_id"]: r["community"]
+        for r in graph.louvain_exact(_edges(spark, pairs), rounds=4).collect()
+    }
+    assert got == exact
+    # weighted pair feed: two heavy customer-supplier blocks, one light
+    # bridge; each triple is repeated `n` times as raw lineitem pairs
+    weighted = [
+        (c, s, 3) for c in (1, 2, 3) for s in (1, 2)
+    ] + [(c, s, 2) for c in (4, 5, 6) for s in (3, 4)] + [(3, 3, 1)]
+    raw = spark.createDataFrame(
+        [(c, s) for c, s, n in weighted for _ in range(n)],
+        "o_custkey bigint, l_suppkey bigint",
+    )
+    got = {
+        r["node_id"]: r["community"]
+        for r in graph.louvain_local(
+            raw, graph.pair_feed(weighted=True), rounds=4
+        ).collect()
+    }
+    exact = {
+        r["node_id"]: r["community"]
+        for r in graph.louvain_exact(
+            _wedges(spark, [(f"c{c}", f"s{s}", n) for c, s, n in weighted]),
+            rounds=4,
+            weighted=True,
+        ).collect()
+    }
+    assert got == exact
+
+
 def test_label_propagation_large_graph_branch_matches(spark, monkeypatch):
     pairs = [("a", "b"), ("b", "c"), ("x", "y")]
     small = {

@@ -1,9 +1,10 @@
-"""r19 size-gated single-task kernels: local path == distributed path.
+"""Size-gated single-task kernels: local path == distributed path.
 
-The optimization round routed whole small-graph executions of louvain,
-connected_components, pagerank and kcenter_greedy through single-task
-mapInPandas kernels (one Spark job instead of a per-round job chain,
-guide §1.2). These tests force the distributed branch (monkeypatching
+Small inputs run whole executions of louvain, connected_components and
+pagerank (``graph._local``: one mapInArrow task behind an edge or pair
+feed), kcenter_greedy (one mapInPandas task) and the other gated rows
+as single-task kernels: one Spark job instead of a per-round job chain
+(guide §1.2). These tests force the distributed branch (monkeypatching
 the gate to 0) and pin it bit-equal to the default local branch on the
 same input — the gate picks a physical strategy, never a different
 result — including on the registered sf0.001 configuration of each
@@ -192,7 +193,12 @@ def test_cc_pairs_local_thinning_matches_distributed(spark, monkeypatch):
         "o_custkey bigint, l_suppkey bigint",
     )
     fused = sorted(
-        map(tuple, graph.cc_pairs_local(pairs, rounds=5, min_weight=2).collect())
+        map(
+            tuple,
+            graph.cc_local(
+                pairs, graph.pair_feed(min_weight=2), rounds=5
+            ).collect(),
+        )
     )
     edges = (
         pairs.groupBy("o_custkey", "l_suppkey")
@@ -777,7 +783,17 @@ def test_supplier_revenue_rank_local_matches_distributed(spark, monkeypatch):
         "l_discount double",
     )
     got = sorted(
-        map(tuple, relational.supplier_revenue_rank_local(feed).collect()),
+        map(
+            tuple,
+            relational.grouped_measure_rank_local(
+                feed,
+                "s_suppkey",
+                "s_name",
+                "disc_revenue",
+                ("l_extendedprice", "l_discount"),
+                "revenue",
+            ).collect(),
+        ),
         key=lambda r: (r[0], r[1] or ""),
     )
     # exact revenues: 100*0.9 + 50 = 140.0 for both (1, alpha) and

@@ -749,3 +749,35 @@ def test_distributed_exchange_counts_match_committed(spark):
         n: (expected[n], got[n]) for n in got if got[n] != expected[n]
     }
     assert not mismatches, mismatches
+
+
+def test_plan_exchange_counts_buckets_reused_exchange():
+    """A ``ReusedExchange`` is neither a shuffle nor a broadcast, and the
+    exchange it reuses, named again on its own line, is not counted
+    twice."""
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
+    try:
+        import bench_distributed as bd
+    finally:
+        sys.path.pop(0)
+
+    plan = """AdaptiveSparkPlan isFinalPlan=false
++- Union
+   :- BroadcastHashJoin [k#1L], [k#20L], Inner, BuildRight, false
+   :  :- HashAggregate(keys=[k#1L], functions=[sum(v#2L)])
+   :  :  +- Exchange hashpartitioning(k#1L, 200), ENSURE_REQUIREMENTS, [plan_id=54]
+   :  :     +- Range (0, 100000, step=1, splits=2)
+   :  +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, bigint, false]),false), [plan_id=168]
+   :     +- Range (0, 10, step=1, splits=2)
+   +- BroadcastHashJoin [k#22L], [k#25L], Inner, BuildRight, false
+      :- HashAggregate(keys=[k#22L], functions=[sum(v#23L)])
+      :  +- ReusedExchange [k#22L, sum#14L], Exchange hashpartitioning(k#1L, 200), ENSURE_REQUIREMENTS, [plan_id=54]
+      +- ReusedExchange [k#25L], BroadcastExchange HashedRelationBroadcastMode(List(input[0, bigint, false]),false), [plan_id=168]
+"""
+    assert bd.plan_exchange_counts(plan) == {
+        "shuffle_exchanges": 1,
+        "broadcast_exchanges": 1,
+    }

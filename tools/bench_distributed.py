@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 from pathlib import Path
@@ -126,10 +127,22 @@ def exchange_counts(df) -> dict:
     """Shuffle/broadcast exchange counts from the INITIAL physical plan
     (no execution; AQE re-planning is not captured — the guard pins the
     planned shape, which is what the code determines)."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    broadcast = plan.count("BroadcastExchange")
-    shuffle = plan.count("Exchange") - broadcast
-    return {"shuffle_exchanges": shuffle, "broadcast_exchanges": broadcast}
+    return plan_exchange_counts(df._jdf.queryExecution().executedPlan().toString())
+
+
+def plan_exchange_counts(plan: str) -> dict:
+    """Count exchange nodes in a plan tree string by the node name that
+    heads each line. A ``ReusedExchange`` reads another exchange's
+    output, so it is neither a shuffle nor a broadcast of its own; its
+    line also names the exchange it reuses, which is why only the line
+    head counts."""
+    names = re.findall(
+        r"^[\s:+\-]*(BroadcastExchange|ReusedExchange|Exchange)\b", plan, re.M
+    )
+    return {
+        "shuffle_exchanges": names.count("Exchange"),
+        "broadcast_exchanges": names.count("BroadcastExchange"),
+    }
 
 
 def main() -> None:

@@ -67,10 +67,11 @@ def customer_supplier_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAW ``(o_custkey, l_suppkey)`` int pairs — one row per lineitem
     fact, i.e. :func:`customer_supplier_edges` BEFORE its aggregate.
 
-    Feed for the fused single-task graph kernels (r20, guide §1.2/§2.4):
-    below the size gates the projection's groupBy exchange, the
-    string-id concat, and the localCheckpoint are pure overhead — the
-    kernel dedups/counts the int pairs in numpy (~tens of ms) and
+    Input of the single-task graph kernels through :func:`pair_feed`
+    (guide §1.2/§2.4): below the size gates the projection's groupBy
+    exchange, the string-id concat, and the localCheckpoint are pure
+    overhead — the feed dedups/counts the int pairs in numpy (~tens of
+    ms) and
     builds the namespaced node ids from the ~|V| DISTINCT keys instead
     of factorizing 2|E| strings through Arrow. Orders' two-column key
     projection is broadcast explicitly: callers only use this feed when
@@ -143,6 +144,110 @@ def _pair_codes(uc, us):
     s = rank[np.searchsorted(cu, uc)]
     d = rank[len(cu) + np.searchsorted(su, us)]
     return s, d, names[order]
+
+
+def _factorize_sorted_arrow(arrays):
+    """Arrow-native factorization of one-or-more string arrays into a
+    shared lexicographic code space (guide §4.2: keep bulk strings in
+    Arrow buffers; only the ~|V| distinct names become Python objects).
+    Returns (codes ndarray int64 over the concatenation, names object
+    ndarray sorted ascending). Arrow's sort and Spark's UTF8String
+    ordering are both binary byte order, and the node-id alphabet here
+    is ASCII, so code order == the engine's string order — the
+    min-tiebreak invariant."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    flat = pa.concat_arrays(
+        [a.combine_chunks() if isinstance(a, pa.ChunkedArray) else a for a in arrays]
+    )
+    enc = pc.dictionary_encode(flat)
+    order = pc.sort_indices(enc.dictionary).to_numpy()
+    rank = np.empty(len(order), dtype=np.int64)
+    rank[order] = np.arange(len(order))
+    codes = rank[enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)]
+    return codes, enc.dictionary.to_numpy(zero_copy_only=False)[order]
+
+
+def edge_feed(mirror: bool = False):
+    """Kernel feed (see :func:`_local`) for string-id edge rows, read by
+    POSITION: the two endpoints, then an optional integer weight
+    (default 1). ``mirror=True`` means the rows are the DIRECTED list
+    of an undirected graph: both orientations are added in memory (half
+    the Arrow transfer) in ``[fwd, rev]`` order — the row order
+    :func:`undirect`'s union produces through ``coalesce(1)``, so the
+    ``np.add.at`` order that fixes PageRank's float bits is the same
+    either way."""
+
+    def feed(t):
+        import numpy as np
+
+        n = t.num_rows
+        if not n:
+            return None
+        codes, names = _factorize_sorted_arrow([t.column(0), t.column(1)])
+        s, d = codes[:n], codes[n:]
+        if t.num_columns > 2:
+            w = t.column(2).to_numpy(zero_copy_only=False).astype(np.int64)
+        else:
+            w = np.ones(n, np.int64)
+        if mirror:
+            s, d, w = np.r_[s, d], np.r_[d, s], np.r_[w, w]
+        return s, d, w, names
+
+    return feed
+
+
+def pair_feed(weighted: bool = False, min_weight: int = 1):
+    """Kernel feed (see :func:`_local`) for the RAW ``(o_custkey,
+    l_suppkey)`` rows of :func:`customer_supplier_pairs`: the
+    projection's groupBy runs in numpy (:func:`_pairs_dedup`), pairs
+    seen fewer than ``min_weight`` times are dropped (the ``weight >=
+    k`` thinning; nodes it isolates are absent, like the distributed
+    base), and the namespaced ids are coded from the ~|V| surviving
+    keys (:func:`_pair_codes`). ``weighted=True`` weights each pair by
+    its multiplicity (the projection's lineitem count), else 1. The
+    pairs form a simple undirected graph, so the feed always mirrors,
+    in :func:`edge_feed`'s ``[fwd, rev]`` order."""
+
+    def feed(t):
+        import numpy as np
+
+        uc, us, cnt = _pairs_dedup(t)
+        keep = cnt >= min_weight
+        if not keep.any():
+            return None
+        s, d, names = _pair_codes(uc[keep], us[keep])
+        w = cnt[keep] if weighted else np.ones(len(s), np.int64)
+        return np.r_[s, d], np.r_[d, s], np.r_[w, w], names
+
+    return feed
+
+
+def _local(df: DataFrame, feed, body, schema: str) -> DataFrame:
+    """The single-task runner behind every graph kernel: ``coalesce(1)``
+    funnels ``df`` into ONE ``mapInArrow`` task, ``feed`` turns its
+    rows into code arrays ``(s, d, w, names)`` over a lexicographic
+    code space (None for an empty graph), and ``body(s, d, w, names)``
+    returns the output columns in ``schema`` order. One Spark job then
+    replaces a distributed plan's per-round job chain, whose cost at
+    this size is job-dispatch latency (guide §1.2). Callers must have
+    proven the graph small (``LOCAL_MOVE_EDGES``); above that gate the
+    distributed plans run unchanged (the 100 TB path)."""
+    cols = [c.split()[0] for c in schema.split(",")]
+
+    def kernel(batches):
+        import pyarrow as pa
+
+        tabs = [pa.Table.from_batches([b]) for b in batches]
+        g = feed(pa.concat_tables(tabs)) if tabs else None
+        if g is not None:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c) for c in body(*g)], names=cols
+            )
+
+    return df.coalesce(1).mapInArrow(kernel, schema)
 
 
 def undirect(edges: DataFrame) -> DataFrame:
@@ -271,59 +376,10 @@ def pagerank(
     return out
 
 
-def _pagerank_local(
-    edges: DataFrame, iterations: int, damping: float, mirror: bool = False
-) -> DataFrame:
-    """Single-task PageRank for an edge list known to fit one executor
-    (``<= LOCAL_MOVE_EDGES`` rows — gated by :func:`pagerank_sized`,
-    r19). One ``mapInPandas`` job runs all iterations in memory,
-    replacing the per-iteration checkpoint jobs whose cost at this size
-    is job-dispatch latency (guide §1.2). The arithmetic mirrors
-    :func:`pagerank` term-for-term — same ``(1-d)/n`` base computed in
-    Python, same ``pr/d`` share, same per-edge contribution terms; the
-    only divergence is double-summation order inside each node's
-    contribution sum, which the distributed aggregate does not pin
-    either (partial-aggregate order varies run to run) — and the final
-    ROUND(pr, 6) stays a Spark-side expression so rounding semantics
-    are byte-identical to the distributed form. Equality with the
-    distributed loop and the unrolled SQL oracle is pinned by
-    tests/test_graph.py. Above the gate :func:`pagerank` runs
-    unchanged (the 100 TB path)."""
-
-    def kernel(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        tabs = [pa.Table.from_batches([b]) for b in batches]
-        if tabs:
-            t = pa.concat_tables(tabs)
-            codes, names = _factorize_sorted_arrow(
-                [t.column("src"), t.column("dst")]
-            )
-            s, d = codes[: t.num_rows], codes[t.num_rows:]
-            if mirror:
-                # in-memory undirect (the louvain kernel's mirror=True):
-                # the caller passed the DIRECTED list — half the Arrow
-                # transfer. Concat order [fwd srcs, fwd dsts] is exactly
-                # the row order undirect()'s union produces through
-                # coalesce(1), so the np.add.at contribution order — the
-                # one documented divergence surface — is unchanged.
-                s, d = np.concatenate([s, d]), np.concatenate([d, s])
-            pr = _pagerank_np(s, d, len(names), iterations, damping)
-            yield pa.RecordBatch.from_arrays(
-                [names, pa.array(pr, pa.float64())],
-                names=["node_id", "pr"],
-            )
-
-    out = edges.coalesce(1).mapInArrow(kernel, "node_id string, pr double")
-    return out.select("node_id", F.round("pr", 6).alias("pagerank"))
-
-
 def _pagerank_np(s, d, n, iterations, damping):
-    """The shared numpy PageRank loop (factored r20 so the string-fed
-    and fused pair-fed kernels run literally the same arithmetic):
-    same per-edge contribution terms and ``(1-d)/n`` base as the
-    distributed :func:`pagerank`."""
+    """The numpy PageRank loop of :func:`pagerank_local`: same per-edge
+    contribution terms and ``(1-d)/n`` base as the distributed
+    :func:`pagerank`."""
     import numpy as np
 
     deg = np.bincount(s, minlength=n)
@@ -337,58 +393,40 @@ def _pagerank_np(s, d, n, iterations, damping):
     return pr
 
 
-def pagerank_pairs_local(
-    pairs: DataFrame, iterations: int = 3, damping: float = 0.85
+def pagerank_local(
+    df: DataFrame, feed, iterations: int = 3, damping: float = 0.85
 ) -> DataFrame:
-    """Fused single-task PageRank over the RAW customer-supplier pairs
-    (r20, guide §1.2/§2.4): ONE mapInArrow job replaces the projection
-    aggregate + exchange + checkpoint + kernel job — the kernel dedups
-    the int pairs, builds codes from the ~|V| distinct keys, mirrors in
-    memory, and runs the identical :func:`_pagerank_np` loop. The final
-    ROUND(pr, 6) stays a Spark expression (byte-identical rounding to
-    the distributed form). Callers must have PROVEN the graph small
-    (footer bound <= LOCAL_MOVE_EDGES); above the gate the projection +
-    distributed plan runs byte-unchanged. Parity vs the distributed
-    loop is pinned by tests/test_local_kernels.py at the bench SFs."""
+    """Single-task PageRank (:func:`_local`) for a graph proven small.
+    The arithmetic mirrors :func:`pagerank` term for term: the same
+    ``(1-d)/n`` base, the same ``pr/d`` share and the same per-edge
+    contribution terms. The only freedom is the double-summation order
+    inside a node's contribution sum, which the distributed aggregate
+    does not pin either; the feeds fix it to the ``[fwd, rev]`` input
+    order. The final ROUND(pr, 6) stays a Spark expression, so rounding
+    is byte-identical to the distributed form."""
 
-    def kernel(batches):
-        import numpy as np
-        import pyarrow as pa
+    def body(s, d, w, names):
+        return names, _pagerank_np(s, d, len(names), iterations, damping)
 
-        tabs = [pa.Table.from_batches([b]) for b in batches]
-        if tabs:
-            t = pa.concat_tables(tabs)
-            uc, us, _ = _pairs_dedup(t)
-            if not len(uc):
-                return
-            s, d, names = _pair_codes(uc, us)
-            s2, d2 = np.concatenate([s, d]), np.concatenate([d, s])
-            pr = _pagerank_np(s2, d2, len(names), iterations, damping)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(names.tolist(), pa.string()),
-                 pa.array(pr, pa.float64())],
-                names=["node_id", "pr"],
-            )
-
-    out = pairs.coalesce(1).mapInArrow(kernel, "node_id string, pr double")
+    out = _local(df, feed, body, "node_id string, pr double")
     return out.select("node_id", F.round("pr", 6).alias("pagerank"))
 
 
 def pagerank_sized(
     edges: DataFrame,
-    n_edge_rows: int,
+    n_rows: int,
     iterations: int = 3,
     damping: float = 0.85,
     mirror: bool = False,
 ) -> DataFrame:
-    """Size-dispatched PageRank (r19): callers that already know the
-    edge-row count (e.g. from a materialized projection) route small
-    graphs to the single-task kernel and everything else to the
+    """Size-dispatched PageRank: callers that already know the edge-row
+    count ``n_rows`` (e.g. from a materialized projection) route small
+    graphs to :func:`pagerank_local` and everything else to the
     distributed loop. ``mirror=True`` means ``edges`` is the DIRECTED
     list of a simple undirected graph: the kernel mirrors it in memory
     (half the Arrow transfer) and the distributed path unions it."""
-    if n_edge_rows <= LOCAL_MOVE_EDGES:
-        return _pagerank_local(edges, iterations, damping, mirror=mirror)
+    if n_rows <= LOCAL_MOVE_EDGES:
+        return pagerank_local(edges, edge_feed(mirror), iterations, damping)
     und = undirect(edges) if mirror else edges
     return pagerank(und, iterations=iterations, damping=damping)
 
@@ -454,14 +492,14 @@ def label_propagation(edges: DataFrame, max_iter: int = 5) -> DataFrame:
 
 _EVEN_HEX = ("0", "2", "4", "6", "8", "a", "c", "e")
 
-#: Edge-row ceiling under which a (contracted) graph's local-moving
-#: rounds run as ONE single-task executor kernel instead of the
-#: distributed round loop. After Louvain's first contraction the graph
-#: is community-sized — orders of magnitude smaller than the input — so
-#: processing it in memory on one executor is the classic hierarchical-
-#: Louvain design (GDS and GraphX coarsening do the same); 2M weighted
-#: edge rows is a few hundred MB of Python dicts, comfortably inside an
-#: executor. Level 1 (the full graph) never takes this path.
+#: Edge-row ceiling under which a graph algorithm runs as ONE
+#: single-task kernel (:func:`pagerank_local`, :func:`louvain_local`,
+#: :func:`cc_local`) instead of its distributed round loop — for the
+#: whole program when the input proves small, and for Louvain's
+#: contracted levels, which are community-sized, when only those do
+#: (the classic hierarchical-Louvain design; GDS and GraphX coarsening
+#: do the same). 2M edge rows of int64 code arrays sit comfortably
+#: inside one executor.
 LOCAL_MOVE_EDGES = 2_000_000
 
 
@@ -471,10 +509,9 @@ def _moves_py(
     """Pure-Python Louvain local-moving kernel over an in-memory
     weighted directed-row map (both orientations present; self-loop
     rows carry 2x internal weight — the :func:`_louvain_moves`
-    representation). Shared verbatim by :func:`louvain_exact` (the
-    driver-side test oracle) and :func:`_louvain_moves_local` (the
-    single-task executor kernel for contracted levels), so the two are
-    equal by construction — same singleton seed, integer gain score,
+    representation). The local-moving step of :func:`louvain_exact`
+    (the driver-side test oracle) and of :func:`louvain_local`'s
+    overflow fallback — same singleton seed, integer gain score,
     min-label tiebreak, and md5-parity half-sweeps as the distributed
     round loop."""
     import hashlib
@@ -520,9 +557,9 @@ def _hierarchy_py(
     """Pure-Python Louvain LEVEL loop over an in-memory weighted
     directed-row map: local moves (:func:`_moves_py`), contract, move
     again — the full hierarchical program. Shared verbatim by
-    :func:`louvain_exact` (driver-side test oracle) and
-    :func:`_louvain_local` (the size-gated single-task executor kernel,
-    r19), so the two are equal by construction."""
+    :func:`louvain_exact` (driver-side test oracle) and the
+    arbitrary-precision fallback of :func:`louvain_local`, so the two
+    are equal by construction."""
     label = _moves_py(wmap, rounds)
     for _ in range(levels - 1):
         sup: dict[tuple[str, str], int] = {}
@@ -672,226 +709,32 @@ def _hierarchy_np(s, d, w, names, rounds, levels):
     return total, names
 
 
-def _factorize_sorted(values):
-    """Codes + SORTED unique names for a string array — code order ==
-    lexicographic order, the invariant every numpy kernel's integer min
-    tiebreak relies on."""
-    import numpy as np
-    import pandas as pd
-
-    codes_raw, uniques = pd.factorize(values)
-    uniques = np.asarray(uniques, dtype=object)
-    order = np.argsort(uniques)
-    rank = np.empty(len(order), dtype=np.int64)
-    rank[order] = np.arange(len(order))
-    return rank[codes_raw], uniques[order]
-
-
-def _factorize_sorted_arrow(arrays):
-    """Arrow-native factorization of one-or-more string arrays into a
-    shared lexicographic code space (guide §4.2: keep bulk strings in
-    Arrow buffers, never materialize per-row Python objects). Returns
-    (codes ndarray int64 over the concatenation, names Arrow array
-    sorted ascending). Arrow's sort and Spark's UTF8String ordering are
-    both binary byte order, and the node-id alphabet here is ASCII, so
-    code order == the engine's string order — the min-tiebreak
-    invariant."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    flat = pa.concat_arrays(
-        [a.combine_chunks() if isinstance(a, pa.ChunkedArray) else a for a in arrays]
-    )
-    enc = pc.dictionary_encode(flat)
-    dictionary = enc.dictionary
-    order = pc.sort_indices(dictionary).to_numpy()
-    rank = np.empty(len(order), dtype=np.int64)
-    rank[order] = np.arange(len(order))
-    codes = rank[enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)]
-    return codes, dictionary.take(pa.array(order))
-
-
-def _louvain_local(
-    edges_w: DataFrame, rounds: int, levels: int, mirror: bool
+def louvain_local(
+    df: DataFrame, feed, rounds: int = 4, levels: int = 2
 ) -> DataFrame:
-    """Single-task execution of the ENTIRE hierarchical Louvain program
-    for a graph known to fit one executor (``<= LOCAL_MOVE_EDGES``
-    undirected rows — gated by :func:`louvain` / :func:`louvain_weighted`
-    on the materialized projection's row count, r19). One Spark job
-    runs every level's local-moving rounds AND the contractions in
-    memory (vectorized int64 kernel; dict kernel above the overflow
-    bound), replacing ``levels`` x (``rounds`` checkpoint jobs +
-    contraction jobs) of sub-second stages whose cost at this size is
-    pure job-dispatch latency (guide §1.2: fix the distributed
-    algorithm's pass count first). ``mirror=True`` takes the DIRECTED
-    row list and adds both orientations in memory — half the Arrow
-    transfer, same accumulate-both semantics as ``louvain_exact``.
-    Above the gate the distributed `_louvain_hierarchy` runs unchanged
-    — the 100 TB path is untouched. Equality with the distributed loop
-    is pinned by tests/test_graph.py and tests/test_local_kernels.py
-    (both against ``louvain_exact``). Returns (node_id, community)."""
+    """Single-task hierarchical Louvain (:func:`_local`) for a graph
+    proven small: every level's local-moving rounds AND contractions
+    run in memory, one Spark job instead of ``levels`` x (``rounds``
+    checkpoint jobs + contraction jobs). The feed's rows are summed per
+    (src, dst), exactly like ``louvain_exact``'s loader. The int64
+    kernel :func:`_hierarchy_np` runs unless ``2m`` exceeds
+    ``_NP_TWO_M_MAX``, where its gain scores could overflow; then the
+    arbitrary-precision dict kernel :func:`_hierarchy_py` (the oracle's
+    own) takes over. Returns (node_id, community)."""
 
-    def kernel(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        tabs = [pa.Table.from_batches([b]) for b in batches]
-        schema = pa.schema(
-            [pa.field("node_id", pa.string()), pa.field("community", pa.string())]
-        )
-        if not tabs:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([], pa.string()), pa.array([], pa.string())],
-                schema=schema,
-            )
-            return
-        t = pa.concat_tables(tabs)
-        codes, names = _factorize_sorted_arrow(
-            [t.column("src"), t.column("dst")]
-        )
-        n_rows = t.num_rows
-        s, d = codes[:n_rows], codes[n_rows:]
-        w = t.column("w").to_numpy(zero_copy_only=False).astype(np.int64)
-        if mirror:
-            s, d = np.concatenate([s, d]), np.concatenate([d, s])
-            w = np.concatenate([w, w])
+    def body(s, d, w, names):
         if int(w.sum()) > _NP_TWO_M_MAX:
-            # arbitrary-precision fallback: gain scores would overflow
-            # int64 — accumulate into the shared dict kernel instead
-            names_py = names.to_pylist()
-            wmap: dict[tuple[str, str], int] = {}
-            for u, v, ww in zip(s, d, w):
-                key = (names_py[u], names_py[v])
-                wmap[key] = wmap.get(key, 0) + int(ww)
-            label = _hierarchy_py(wmap, rounds, levels)
-            items = list(label.items())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([x[0] for x in items], pa.string()),
-                    pa.array([x[1] for x in items], pa.string()),
-                ],
-                schema=schema,
-            )
-            return
-        total, cnames = _hierarchy_np(
-            s, d, w, names.to_numpy(zero_copy_only=False), rounds, levels
-        )
-        yield pa.RecordBatch.from_arrays(
-            [names, pa.array(cnames[total], pa.string())], schema=schema
-        )
-
-    return edges_w.coalesce(1).mapInArrow(
-        kernel, "node_id string, community string"
-    )
-
-
-def louvain_pairs_local(
-    pairs: DataFrame,
-    rounds: int = 4,
-    levels: int = 2,
-    weighted: bool = False,
-) -> DataFrame:
-    """Fused single-task hierarchical Louvain over the RAW
-    customer-supplier pairs (r20, guide §1.2/§2.4): ONE mapInArrow job
-    replaces the projection aggregate + exchange + checkpoint + the
-    string-fed kernel job. The kernel dedups/counts the int pairs
-    (numpy; the groupBy twin), builds codes from the ~|V| distinct
-    keys, mirrors in memory, and runs the identical
-    :func:`_hierarchy_np` (``weighted=True``: multiplicity counts enter
-    every sum — the louvain_weighted semantics; else w=1 per distinct
-    pair). The arbitrary-precision dict fallback takes over above
-    ``_NP_TWO_M_MAX`` exactly like :func:`_louvain_local`. Callers must
-    have PROVEN the graph small (footer bound); above the gate the
-    projection + distributed plan runs byte-unchanged. Parity pinned by
-    tests/test_local_kernels.py at the bench SFs."""
-
-    def kernel(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        schema = pa.schema(
-            [pa.field("node_id", pa.string()), pa.field("community", pa.string())]
-        )
-        tabs = [pa.Table.from_batches([b]) for b in batches]
-        if not tabs:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([], pa.string()), pa.array([], pa.string())],
-                schema=schema,
-            )
-            return
-        t = pa.concat_tables(tabs)
-        uc, us, cnt = _pairs_dedup(t)
-        if not len(uc):
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([], pa.string()), pa.array([], pa.string())],
-                schema=schema,
-            )
-            return
-        s, d, names = _pair_codes(uc, us)
-        w = cnt if weighted else np.ones(len(s), np.int64)
-        if 2 * int(w.sum()) > _NP_TWO_M_MAX:
-            # arbitrary-precision fallback (cf. _louvain_local): mirror
-            # into the shared dict kernel — namespaces are disjoint so
-            # (v, u) never collides with another pair's (u, v)
             names_py = names.tolist()
             wmap: dict[tuple[str, str], int] = {}
-            for u, v, ww in zip(s, d, w):
-                a, b = names_py[u], names_py[v]
-                wmap[(a, b)] = wmap.get((a, b), 0) + int(ww)
-                wmap[(b, a)] = wmap.get((b, a), 0) + int(ww)
+            for u, v, ww in zip(s.tolist(), d.tolist(), w.tolist()):
+                key = (names_py[u], names_py[v])
+                wmap[key] = wmap.get(key, 0) + ww
             label = _hierarchy_py(wmap, rounds, levels)
-            items = list(label.items())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([x[0] for x in items], pa.string()),
-                    pa.array([x[1] for x in items], pa.string()),
-                ],
-                schema=schema,
-            )
-            return
-        s2, d2 = np.concatenate([s, d]), np.concatenate([d, s])
-        w2 = np.concatenate([w, w])
-        total, cnames = _hierarchy_np(s2, d2, w2, names, rounds, levels)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(names.tolist(), pa.string()),
-                pa.array(cnames[total].tolist(), pa.string()),
-            ],
-            schema=schema,
-        )
+            return list(label), list(label.values())
+        total, cnames = _hierarchy_np(s, d, w, names, rounds, levels)
+        return names, cnames[total]
 
-    return pairs.coalesce(1).mapInArrow(
-        kernel, "node_id string, community string"
-    )
-
-
-def _louvain_moves_local(und_w: DataFrame, rounds: int) -> DataFrame:
-    """Single-task execution of the local-moving rounds for a graph
-    known to fit one executor (``<= LOCAL_MOVE_EDGES`` rows — the
-    contracted levels of :func:`louvain`). ``coalesce(1)`` funnels the
-    community-sized edge list into one ``mapInPandas`` task that runs
-    :func:`_moves_py` in memory: one Spark job for the whole level
-    instead of ``rounds`` checkpoint jobs of sub-second stages. Returns
-    (id, label) like :func:`_louvain_moves`; equality with the
-    distributed loop is pinned by tests/test_graph.py (both against
-    ``louvain_exact``, which shares the same kernel)."""
-
-    def kernel(batches):
-        import pandas as pd
-
-        wmap: dict[tuple[str, str], int] = {}
-        for pdf in batches:
-            for u, v, ww in zip(pdf["src"], pdf["dst"], pdf["w"]):
-                # accumulate (not assign): duplicate (src, dst) rows sum,
-                # mirroring the distributed SUM(w) semantics
-                wmap[(u, v)] = wmap.get((u, v), 0) + int(ww)
-        label = _moves_py(wmap, rounds)
-        yield pd.DataFrame(
-            {"id": list(label.keys()), "label": list(label.values())}
-        )
-
-    return und_w.coalesce(1).mapInPandas(kernel, "id string, label string")
+    return _local(df, feed, body, "node_id string, community string")
 
 
 def _louvain_moves(und_w: DataFrame, rounds: int) -> DataFrame:
@@ -1109,7 +952,6 @@ def louvain(
     rounds: int = 4,
     levels: int = 2,
     assume_simple: bool = False,
-    n_edge_rows: int | None = None,
 ) -> DataFrame:
     """Hierarchical Louvain: local moves, coarsen, move again (SURVEY G6).
 
@@ -1136,42 +978,35 @@ def louvain(
     with namespaced node ids, where fwd/rev orientations cannot
     collide); the distinct is then a pure no-op shuffle of the edge
     list.
+
+    Graphs of at most ``LOCAL_MOVE_EDGES`` undirected rows run the whole
+    program as one task (:func:`louvain_local`).
     """
-    # Size-gated whole-program local path (r19): ``n_edge_rows`` is an
-    # optional caller-supplied UPPER BOUND on the directed rows (e.g. a
-    # parquet footer fact count — edges <= fact rows): it can only
-    # PROVE smallness — skipping the count job — never force the
-    # distributed path. The checkpoint stays either way: it runs the
-    # projection's final aggregate 32-way parallel, where the kernel's
-    # coalesce(1) would serialize it (measured r19: eliding it made
-    # louvain SLOWER).
+    # The checkpoint stays on both branches: it runs the projection's
+    # final aggregate in parallel, where the kernel's coalesce(1) would
+    # serialize it (eliding it measured slower).
     ed = materialized(edges)
-    small = (
-        n_edge_rows is not None and 2 * n_edge_rows <= LOCAL_MOVE_EDGES
-    ) or 2 * ed.count() <= LOCAL_MOVE_EDGES
+    small = 2 * ed.count() <= LOCAL_MOVE_EDGES
     if small and assume_simple:
         # unique directed pairs, no reverse duplicates: the kernel's
         # in-memory mirroring IS the undirect — half the Arrow transfer
-        return _louvain_local(
-            ed.select("src", "dst", F.lit(1).cast("long").alias("w")),
-            rounds,
-            levels,
-            mirror=True,
+        return louvain_local(
+            ed.select("src", "dst"), edge_feed(mirror=True), rounds, levels
         )
     und = undirect(ed)
     if not assume_simple:
         und = und.distinct()
-    und = und.withColumn("w", F.lit(1).cast("long"))
     if small:
-        return _louvain_local(und, rounds, levels, mirror=False)
-    return _louvain_hierarchy(und, rounds, levels)
+        return louvain_local(und, edge_feed(), rounds, levels)
+    return _louvain_hierarchy(
+        und.withColumn("w", F.lit(1).cast("long")), rounds, levels
+    )
 
 
 def louvain_weighted(
     edges: DataFrame,
     rounds: int = 4,
     levels: int = 2,
-    n_edge_rows: int | None = None,
 ) -> DataFrame:
     """Weight-aware hierarchical Louvain: the edge ``weight`` column
     (projection multiplicity — lineitem count per customer-supplier
@@ -1181,17 +1016,13 @@ def louvain_weighted(
     variant ignores). Weights are integer counts, so the gain scores
     stay integer-exact; everything else (seed, parity sweeps,
     contraction, levels) is identical to :func:`louvain`."""
-    # Same size-gated local path as louvain() (r19): the footer bound
-    # proves smallness without the count job; the checkpoint stays (it
-    # keeps the projection's final aggregate parallel — see louvain()).
-    # mirror=True accumulates both orientations in memory — exactly
-    # louvain_exact's weighted loader.
+    # Same size gate and checkpoint as louvain(). mirror=True
+    # accumulates both orientations in memory — exactly louvain_exact's
+    # weighted loader.
     edges = materialized(edges)
     fwd = edges.select("src", "dst", F.col("weight").cast("long").alias("w"))
-    if (
-        n_edge_rows is not None and 2 * n_edge_rows <= LOCAL_MOVE_EDGES
-    ) or 2 * edges.count() <= LOCAL_MOVE_EDGES:
-        return _louvain_local(fwd, rounds, levels, mirror=True)
+    if 2 * edges.count() <= LOCAL_MOVE_EDGES:
+        return louvain_local(fwd, edge_feed(mirror=True), rounds, levels)
     rev = edges.select(
         F.col("dst").alias("src"),
         F.col("src").alias("dst"),
@@ -1206,10 +1037,9 @@ def _louvain_hierarchy(und: DataFrame, rounds: int, levels: int) -> DataFrame:
     frame per level (feeding both the move rounds and the contraction —
     see the :func:`_louvain_moves` caller contract), then local-move,
     contract, and recurse. Contracted levels are community-sized; below
-    ``LOCAL_MOVE_EDGES`` their rounds run as a single executor task
-    (:func:`_louvain_moves_local`) instead of the distributed loop —
-    the r6 plan spent 2+ s of pure job-scheduling latency moving a
-    326-community graph through 4 checkpointed rounds."""
+    ``LOCAL_MOVE_EDGES`` rows their rounds run as one single-level
+    :func:`louvain_local` task instead of the distributed loop, whose
+    checkpointed rounds cost job-scheduling latency at that size."""
     parts = und.repartition("src").persist()
     labels = _louvain_moves(parts, rounds)
     for _ in range(levels - 1):
@@ -1217,7 +1047,9 @@ def _louvain_hierarchy(und: DataFrame, rounds: int, levels: int) -> DataFrame:
         parts.unpersist()
         parts = sup
         if sup.count() <= LOCAL_MOVE_EDGES:
-            upper = _louvain_moves_local(sup, rounds)
+            upper = louvain_local(sup, edge_feed(), rounds, levels=1).toDF(
+                "id", "label"
+            )
         else:
             parts = sup.repartition("src").persist()
             upper = _louvain_moves(parts, rounds)
@@ -1596,105 +1428,24 @@ def _cc_star_np(s, d, m, rounds):
     return np.where(roots < m, roots, own)
 
 
-def _cc_local(base: DataFrame, rounds: int) -> DataFrame:
-    """Single-task execution of the star rounds for an edge list known
-    to fit one executor (``<= LOCAL_MOVE_EDGES`` normalized rows —
-    gated by :func:`connected_components` on the already-checkpointed
-    ``base``, r19). ``coalesce(1)`` funnels the edge list into one
-    ``mapInPandas`` task running :func:`_cc_star_np`: one Spark job for
-    all ``rounds`` star pairs + the root aggregate, instead of ~10
-    lazily-checkpointed jobs of sub-second stages (the bench row's 49
-    jobs at sf0.1 are job-dispatch latency, not compute — guide §1.2).
-    Above the gate the distributed round loop runs unchanged (the
-    100 TB path). Equality is pinned by tests/test_graph.py."""
+def cc_local(df: DataFrame, feed, rounds: int) -> DataFrame:
+    """Single-task connected components (:func:`_local`) for a graph
+    proven small: :func:`_cc_star_np` replays all ``rounds`` star pairs
+    and the root aggregate in one Spark job. A mirrored feed only
+    repeats edges, which no MIN aggregate sees, and every pair feed row
+    is (c-node, s-node) with 'c' < 's', so the feeds need no
+    least/greatest normalization. Returns (node_id, component)."""
 
-    def kernel(batches):
-        import pyarrow as pa
+    def body(s, d, w, names):
+        return names, names[_cc_star_np(s, d, len(names), rounds)]
 
-        tabs = [pa.Table.from_batches([b]) for b in batches]
-        if not tabs:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([], pa.string()), pa.array([], pa.string())],
-                names=["node_id", "component"],
-            )
-            return
-        t = pa.concat_tables(tabs)
-        codes, names = _factorize_sorted_arrow(
-            [t.column("a"), t.column("b")]
-        )
-        comp = _cc_star_np(
-            codes[: t.num_rows], codes[t.num_rows:], len(names), rounds
-        )
-        yield pa.RecordBatch.from_arrays(
-            [names, names.take(pa.array(comp))],
-            names=["node_id", "component"],
-        )
-
-    return base.coalesce(1).mapInArrow(
-        kernel, "node_id string, component string"
-    )
-
-
-def cc_pairs_local(
-    pairs: DataFrame, rounds: int, min_weight: int = 1
-) -> DataFrame:
-    """Fused single-task connected components over the RAW
-    customer-supplier pairs (r20, guide §1.2/§2.4): ONE mapInArrow job
-    replaces the projection aggregate + thinning filter + normalize/
-    distinct checkpoint + the string-fed kernel job. The kernel
-    dedups/counts the int pairs, drops pairs under ``min_weight`` (the
-    weight >= k thinning), builds codes from the SURVIVING pairs' keys
-    only (nodes isolated by thinning are absent, exactly like the
-    distributed base), and replays :func:`_cc_star_np`. Normalization
-    is implicit: every pair is (c-node, s-node) and 'c' < 's' in byte
-    order, so least/greatest == (src, dst) and a == b is impossible.
-    Callers must have PROVEN the graph small (footer bound); above the
-    gate the projection + distributed star rounds run byte-unchanged.
-    Parity pinned by tests/test_local_kernels.py at the bench SFs."""
-
-    def kernel(batches):
-        import pyarrow as pa
-
-        schema = pa.schema(
-            [pa.field("node_id", pa.string()), pa.field("component", pa.string())]
-        )
-        tabs = [pa.Table.from_batches([b]) for b in batches]
-        if not tabs:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([], pa.string()), pa.array([], pa.string())],
-                schema=schema,
-            )
-            return
-        t = pa.concat_tables(tabs)
-        uc, us, cnt = _pairs_dedup(t)
-        keep = cnt >= min_weight
-        uc, us = uc[keep], us[keep]
-        if not len(uc):
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([], pa.string()), pa.array([], pa.string())],
-                schema=schema,
-            )
-            return
-        s, d, names = _pair_codes(uc, us)
-        comp = _cc_star_np(s, d, len(names), rounds)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(names.tolist(), pa.string()),
-                pa.array(names[comp].tolist(), pa.string()),
-            ],
-            schema=schema,
-        )
-
-    return pairs.coalesce(1).mapInArrow(
-        kernel, "node_id string, component string"
-    )
+    return _local(df, feed, body, "node_id string, component string")
 
 
 def connected_components(
     edges: DataFrame,
     rounds: int = 3,
     dedup_every: int = 2,
-    n_edge_rows: int | None = None,
 ) -> DataFrame:
     """Connected components via alternating large-star / small-star
     (Kiveris et al. 2014, "Connected Components in MapReduce and
@@ -1730,39 +1481,17 @@ def connected_components(
     round emits at most 4x the incoming rows, so a ``distinct`` every
     ``dedup_every`` rounds caps the working set at 4^dedup_every * |E|
     worst case (real graphs shrink — large-star rewires to minima).
-    ``dedup_every=1`` restores the pre-r8 every-round distinct. r9
-    same-minute interleaved A/B at sf0.1 (5 round pairs, 12.9k edges, 4
-    alternated runs per arm, noise probe 0.29-0.31 s — a quiet minute):
-    trim ON min/med 3.898/4.032 s vs trim OFF 4.106/4.214 s — a real
-    but modest ~4-5% win, NOT the "~15%" the r8 comment claimed (that
-    number came from an unrecorded intermediate on a noisy host), and
-    the r8 bench "regression" (4.598 -> 4.890 s) was host drift, not
-    this change. Phase split on the same minute: ~1.5 s of the bench
-    row is the customer-supplier edge projection evaluated inside
-    ``base``'s checkpoint; the 5 star round-pairs themselves run
-    ~2.4-2.6 s (per-round scheduling latency on 12.9k edges, amortized
-    on a real cluster). The trim stays: the asymptotic argument holds
-    (one fewer edge-sized shuffle per skipped round) and output
-    invariance is test-pinned across round parities.
+    ``dedup_every=1`` dedups every round. Output does not depend on the
+    cadence (test-pinned across round parities). The cadence is fixed,
+    not adaptive: a size check per round would cost one count job per
+    round.
 
-    ADAPTIVE cadence (dedup only when the un-deduped frame exceeds ~2x
-    the last deduped size) is a documented NO-GO at bench scale (r10
-    verdict's optional ask, closed r11 by arithmetic from recorded
-    measurements): the whole fixed-cadence win is ~0.17-0.2 s at sf0.1
-    (4-5% of the ~4 s row, r9 A/B above), while the size detector needs
-    one count job per round — an eager driver sync costing 0.1-0.7 s
-    each (r9 job-fixed-cost finding) — so >=5 rounds of detection cost
-    2.5x+ the entire prize they could at best preserve. On a real
-    cluster the trade inverts (a count on a materialized frame is
-    seconds; an avoidable edge-sized shuffle is minutes) — but there
-    ``rounds`` is also no longer fixed-for-the-oracle, so the adaptive
-    variant belongs in a convergence-driven deployment mode, not this
-    oracle-replayable operator.
-
-    The distributed branch is job-dispatch-latency-bound on small
-    inputs: it ran 49 jobs per execution over sf0.1's 12.9k edges
-    (counted via statusTracker), so its wall time there tracks the
-    host's per-job latency, not the edge work.
+    Graphs of at most ``LOCAL_MOVE_EDGES`` normalized rows run as one
+    task (:func:`cc_local`). The distributed branch is
+    job-dispatch-latency-bound on small inputs: it ran 49 jobs per
+    execution over sf0.1's 12.9k edges (counted via statusTracker), so
+    its wall time there tracks the host's per-job latency, not the edge
+    work.
     """
     if dedup_every < 1:
         # 0 would divide-by-zero in the cadence check; negatives would
@@ -1775,17 +1504,12 @@ def connected_components(
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    # Size-gated single-task path (r19). ``n_edge_rows`` (optional
-    # caller bound, e.g. a parquet footer fact count; base rows <=
-    # input edge rows) can only PROVE smallness — skipping the count
-    # job — never force the distributed path. The checkpoint stays
-    # either way: it keeps the normalize+distinct reduce side parallel,
-    # where the kernel's coalesce(1) would serialize it.
+    # The checkpoint stays on both branches: it keeps the
+    # normalize+distinct reduce side parallel, where the kernel's
+    # coalesce(1) would serialize it.
     base = base.localCheckpoint(eager=True)
-    if (
-        n_edge_rows is not None and n_edge_rows <= LOCAL_MOVE_EDGES
-    ) or base.count() <= LOCAL_MOVE_EDGES:
-        return _cc_local(base, rounds)
+    if base.count() <= LOCAL_MOVE_EDGES:
+        return cc_local(base, edge_feed(), rounds)
     e = base
     for r in range(rounds):
         # large-star over both edge directions

@@ -467,17 +467,3 @@ def grouped_measure_rank_local(
         kernel,
         f"{key_col} bigint, {name_col} string, {out_col} {out_type}, rnk int",
     )
-
-
-def supplier_revenue_rank_local(feed: DataFrame) -> DataFrame:
-    """bi_rank_suppliers tail: see :func:`grouped_measure_rank_local`
-    (disc_revenue measure — the q1-recipe scaled-integer product with
-    the magnitude guard)."""
-    return grouped_measure_rank_local(
-        feed,
-        "s_suppkey",
-        "s_name",
-        "disc_revenue",
-        ("l_extendedprice", "l_discount"),
-        "revenue",
-    )

@@ -278,10 +278,15 @@ def bi_rank_suppliers_by_region_revenue(spark: SparkSession, sf_dir: str) -> Dat
             sf_dir, ("l_extendedprice", "l_discount")
         )
     ):
-        return relational.supplier_revenue_rank_local(
+        return relational.grouped_measure_rank_local(
             joined.select(
                 "s_suppkey", "s_name", "l_extendedprice", "l_discount"
-            )
+            ),
+            "s_suppkey",
+            "s_name",
+            "disc_revenue",
+            ("l_extendedprice", "l_discount"),
+            "revenue",
         )
     # Windowed-SUM + DISTINCT == one row per supplier: groupBy form (see
     # bi_rank_customers_by_order_count). ROUND applies to the exact

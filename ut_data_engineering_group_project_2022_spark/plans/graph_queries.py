@@ -107,8 +107,9 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the gate the r19 projection + distributed plan is byte-unchanged.
     n_li = catalog_row_count(sf_dir, "lineitem")
     if n_li is not None and 2 * n_li <= graph.LOCAL_MOVE_EDGES:
-        return graph.pagerank_pairs_local(
+        return graph.pagerank_local(
             graph.customer_supplier_pairs(spark, sf_dir),
+            graph.pair_feed(),
             iterations=3,
             damping=0.85,
         )
@@ -359,14 +360,16 @@ def graph_louvain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distributed hierarchy is byte-unchanged.
     n_li = catalog_row_count(sf_dir, "lineitem")
     if n_li is not None and 2 * n_li <= graph.LOCAL_MOVE_EDGES:
-        return graph.louvain_pairs_local(
-            graph.customer_supplier_pairs(spark, sf_dir), rounds=4
+        return graph.louvain_local(
+            graph.customer_supplier_pairs(spark, sf_dir),
+            graph.pair_feed(),
+            rounds=4,
         )
     edges = graph.customer_supplier_edges(spark, sf_dir)
     # The projection groupBy emits unique (c*, s*) pairs in disjoint node
     # namespaces, so the undirected union is duplicate-free by
     # construction — skip the no-op distinct shuffle.
-    return graph.louvain(edges, rounds=4, assume_simple=True, n_edge_rows=n_li)
+    return graph.louvain(edges, rounds=4, assume_simple=True)
 
 
 @register(
@@ -384,13 +387,13 @@ def graph_louvain_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # counts ARE the projection's lineitem-count weights.
     n_li = catalog_row_count(sf_dir, "lineitem")
     if n_li is not None and 2 * n_li <= graph.LOCAL_MOVE_EDGES:
-        return graph.louvain_pairs_local(
+        return graph.louvain_local(
             graph.customer_supplier_pairs(spark, sf_dir),
+            graph.pair_feed(weighted=True),
             rounds=4,
-            weighted=True,
         )
     edges = graph.customer_supplier_edges(spark, sf_dir)
-    return graph.louvain_weighted(edges, rounds=4, n_edge_rows=n_li)
+    return graph.louvain_weighted(edges, rounds=4)
 
 
 def _betweenness_oracle(max_depth: int = 8) -> str:
@@ -979,12 +982,12 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # thinning are absent exactly like the distributed base.
     n_li = catalog_row_count(sf_dir, "lineitem")
     if n_li is not None and n_li <= graph.LOCAL_MOVE_EDGES:
-        return graph.cc_pairs_local(
+        return graph.cc_local(
             graph.customer_supplier_pairs(spark, sf_dir),
+            graph.pair_feed(min_weight=2),
             rounds=5,
-            min_weight=2,
         )
     edges = graph.customer_supplier_edges(spark, sf_dir).filter(
         F.col("weight") >= 2
     )
-    return graph.connected_components(edges, rounds=5, n_edge_rows=n_li)
+    return graph.connected_components(edges, rounds=5)
