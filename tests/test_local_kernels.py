@@ -4,23 +4,33 @@ Small inputs run whole executions of louvain, connected_components and
 pagerank (``graph._local``: one mapInArrow task behind an edge or pair
 feed), kcenter_greedy (one mapInPandas task) and the other gated rows
 as single-task kernels: one Spark job instead of a per-round job chain
-(guide §1.2). These tests force the distributed branch (monkeypatching
-the gate to 0) and pin it bit-equal to the default local branch on the
-same input — the gate picks a physical strategy, never a different
-result — including on the registered sf0.001 configuration of each
-bench row.
+(guide §1.2). Every kernel sits behind ``operators.fits``. These tests
+force the distributed branch (a gate's ceiling set to -1, so no input
+fits) and pin it bit-equal to the default local branch on the same
+input — the gate picks a physical strategy, never a different result.
+``test_gated_row_branches_agree`` does this for every gated registry row
+at sf0.001; the other tests cover synthetic and operator-level inputs.
 """
 
 from __future__ import annotations
 
+import sys
+
+import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import REPO, SF_DIR
 from ut_data_engineering_group_project_2022_spark.operators import (
     dedup,
     graph,
     similarity,
 )
+
+sys.path.insert(0, str(REPO / "tools"))
+try:
+    import bench_distributed as bd
+finally:
+    sys.path.pop(0)
 
 
 def _edges(spark, pairs):
@@ -103,34 +113,6 @@ def test_louvain_local_kernel_matches_distributed_bench_config(
         for r in graph.louvain(edges, rounds=4, assume_simple=True).collect()
     }
     assert local == dist
-
-
-def test_fused_pair_feeds_match_distributed_bench_config(spark, monkeypatch):
-    """r20: the fused raw-pair kernels (projection-dedup + whole
-    algorithm in ONE mapInArrow job) must be bit-equal to the
-    distributed plans for all four gated graph rows. The plan builders
-    dispatch on the lineitem footer bound, so monkeypatching the gate
-    to 0 forces the distributed branch of the SAME builder."""
-    from ut_data_engineering_group_project_2022_spark.plans import (
-        graph_queries as gq,
-    )
-
-    for name in (
-        "graph_louvain",
-        "graph_louvain_weighted",
-        "graph_pagerank",
-        "graph_connected_components",
-    ):
-        build = getattr(gq, name)
-        fused_df = build(spark, SF_DIR)
-        assert "MapInArrow" in (
-            fused_df._jdf.queryExecution().executedPlan().toString()
-        ), name
-        fused = sorted(map(tuple, fused_df.collect()))
-        monkeypatch.setattr(graph, "LOCAL_MOVE_EDGES", 0)
-        dist = sorted(map(tuple, build(spark, SF_DIR).collect()))
-        monkeypatch.undo()
-        assert fused == dist, name
 
 
 def test_pairs_dedup_and_codes_edge_cases(monkeypatch):
@@ -574,17 +556,43 @@ def test_knn_local_kernels_match_distributed_bench_config(spark, monkeypatch):
 def test_global_dense_rank_gate_matches_two_phase_bench_config(
     spark, monkeypatch
 ):
-    """The r19 size-gated single-window rank == the two-phase form on a
+    """The size-gated single-window rank == the two-phase form on a
     registered bench configuration (bi_rank_customers_by_order_count at
-    sf0.001)."""
-    from ut_data_engineering_group_project_2022_spark.operators import star
-    from ut_data_engineering_group_project_2022_spark.plans import get_query
+    sf0.001). The grouped-rank kernel is forced off on both sides so
+    the row reaches ``global_dense_rank``; only the rank gate toggles."""
+    from ut_data_engineering_group_project_2022_spark.operators import (
+        relational,
+        star,
+    )
+    from ut_data_engineering_group_project_2022_spark.plans import (
+        bi_queries as bq,
+    )
 
-    build = get_query("bi_rank_customers_by_order_count").spark
-    local = sorted(map(tuple, build(spark, SF_DIR).collect()))
+    monkeypatch.setattr(relational, "LOCAL_TPCH_ROWS", -1)
+    ranked = []
+
+    def rank_spy(*args, **kwargs):
+        ranked.append(True)
+        return real_rank(*args, **kwargs)
+
+    real_rank = bq.global_dense_rank
+    monkeypatch.setattr(bq, "global_dense_rank", rank_spy)
+    gates = []
+
+    def fits_spy(*args, **kwargs):
+        gates.append(real_fits(*args, **kwargs))
+        return gates[-1]
+
+    real_fits = star.fits
+    monkeypatch.setattr(star, "fits", fits_spy)
+
+    build = bq.bi_rank_customers_by_order_count
+    single = sorted(map(tuple, build(spark, SF_DIR).collect()))
+    assert ranked == [True] and gates == [True]  # single-window branch
     monkeypatch.setattr(star, "LOCAL_RANK_ROWS", -1)
-    dist = sorted(map(tuple, build(spark, SF_DIR).collect()))
-    assert local == dist
+    two_phase = sorted(map(tuple, build(spark, SF_DIR).collect()))
+    assert ranked == [True, True] and gates == [True, False]
+    assert single == two_phase
 
 
 def test_curation_local_kernel_matches_distributed(spark, monkeypatch):
@@ -634,29 +642,6 @@ def _q1_rows(df):
         return v
 
     return sorted(tuple(tok(v) for v in r) for r in df.collect())
-
-
-def test_tpch_q1_local_kernel_matches_distributed_bench_config(
-    spark, monkeypatch
-):
-    from ut_data_engineering_group_project_2022_spark.operators import (
-        relational,
-    )
-    from ut_data_engineering_group_project_2022_spark.plans.tpch_queries import (
-        tpch_q1_pricing_summary as build,
-    )
-
-    local_df = build(spark, SF_DIR)
-    local = _q1_rows(local_df)
-    monkeypatch.setattr(relational, "LOCAL_TPCH_ROWS", 0)
-    dist_df = build(spark, SF_DIR)
-    dist = _q1_rows(dist_df)
-    assert local == dist
-    # names+types must match (nullability differs: mapInArrow output is
-    # all-nullable, like the knn/star kernels — invisible to the driver)
-    assert [(f.name, f.dataType) for f in local_df.schema] == [
-        (f.name, f.dataType) for f in dist_df.schema
-    ]
 
 
 def test_tpch_q1_local_kernel_decimal_fallback_path(spark, monkeypatch, tmp_path):
@@ -731,41 +716,16 @@ def test_mmr_rerank_local_matches_distributed(spark, monkeypatch):
     assert local == dist and len(local) == 3
 
 
-def test_supplier_revenue_rank_local_matches_distributed(spark, monkeypatch):
-    """r20 (VERDICT item 4): the fused bi_rank_suppliers kernel
-    (scaled-integer revenue sum + in-kernel dense rank, one mapInArrow
-    job) must be bit-equal to the distributed groupBy + two-phase rank
-    at the bench config, and must reproduce the groupBy/rank corner
-    semantics on synthetics."""
+def test_supplier_revenue_rank_local_matches_distributed(spark):
+    """The fused grouped-rank kernel (scaled-integer revenue sum +
+    in-kernel dense rank, one mapInArrow job) must reproduce the
+    groupBy/rank corner semantics on synthetics. Its registry rows are
+    pinned against the distributed branch by
+    test_gated_row_branches_agree."""
     from ut_data_engineering_group_project_2022_spark.operators import (
         relational,
     )
-    from ut_data_engineering_group_project_2022_spark.plans import (
-        bi_queries as bq,
-    )
 
-    # all four gated bi rows (r20: the generalized grouped-measure
-    # kernel covers disc_revenue, dec4_sum and count_nonnull)
-    for name in (
-        "bi_rank_suppliers_by_region_revenue",
-        "bi_rank_customers_by_revenue",
-        "bi_rank_customers_by_order_count",
-        "bi_rank_parts_by_shipped_qty",
-    ):
-        build = getattr(bq, name)
-        fused_df = build(spark, SF_DIR)
-        assert "MapInArrow" in (
-            fused_df._jdf.queryExecution().executedPlan().toString()
-        ), name
-        fused = sorted(map(tuple, fused_df.collect()))
-        monkeypatch.setattr(relational, "LOCAL_TPCH_ROWS", 0)
-        dist_df = build(spark, SF_DIR)
-        dist = sorted(map(tuple, dist_df.collect()))
-        monkeypatch.undo()
-        assert fused == dist, name
-        assert [(f.name, f.dataType) for f in fused_df.schema] == [
-            (f.name, f.dataType) for f in dist_df.schema
-        ], name
     # synthetics through the kernel directly: duplicate suppkey with two
     # names (two groups, same revenue, tied rank), NULL name (one
     # group), all-NULL revenue group (NULLS LAST under F.desc), ties
@@ -854,6 +814,8 @@ def test_tpch_q1_magnitude_gate_falls_back_to_distributed(spark, tmp_path):
 
 
 def _rows_hex(df):
+    """The row multiset of ``df`` as sorted tokens, floats by their
+    IEEE-754 bytes (sorted by repr: a column may mix NULLs and values)."""
     import struct
 
     def tok(v):
@@ -861,35 +823,7 @@ def _rows_hex(df):
             return struct.pack(">d", v).hex()
         return v
 
-    return sorted(tuple(tok(v) for v in r) for r in df.collect())
-
-
-def test_ccnet_buckets_local_kernel_matches_distributed_bench_config(
-    spark, monkeypatch
-):
-    from ut_data_engineering_group_project_2022_spark.operators import textml
-    from ut_data_engineering_group_project_2022_spark.plans.llm_ops import (
-        llm_ccnet_buckets as build,
-    )
-
-    local = _rows_hex(build(spark, SF_DIR))
-    monkeypatch.setattr(textml, "LOCAL_TEXT_DOCS", -1)
-    dist = _rows_hex(build(spark, SF_DIR))
-    assert local == dist and len(local) > 0
-
-
-def test_span_dedup_local_kernel_matches_distributed_bench_config(
-    spark, monkeypatch
-):
-    from ut_data_engineering_group_project_2022_spark.operators import textml
-    from ut_data_engineering_group_project_2022_spark.plans.llm_ops import (
-        llm_span_dedup_rebuild as build,
-    )
-
-    local = _rows_hex(build(spark, SF_DIR))
-    monkeypatch.setattr(textml, "LOCAL_TEXT_DOCS", -1)
-    dist = _rows_hex(build(spark, SF_DIR))
-    assert local == dist and len(local) > 0
+    return sorted((tuple(tok(v) for v in r) for r in df.collect()), key=repr)
 
 
 def test_text_kernels_whitespace_and_null_edges(spark, monkeypatch, tmp_path):
@@ -934,15 +868,79 @@ def test_text_kernels_whitespace_and_null_edges(spark, monkeypatch, tmp_path):
     assert span[2][2] == 0 and span[2][3] == ""
 
 
-def test_covariance_local_kernel_matches_distributed_bench_config(
-    spark, monkeypatch
-):
-    from ut_data_engineering_group_project_2022_spark.operators import stats
-    from ut_data_engineering_group_project_2022_spark.plans.llm_ops import (
-        llm_embedding_covariance as build,
+def test_fits_proves_from_rows_or_one_bounded_count(spark):
+    from ut_data_engineering_group_project_2022_spark.operators import fits
+
+    class NoJobs:
+        def limit(self, n):
+            raise AssertionError("a proven bound must not run a count job")
+
+    # a bound at or under the ceiling proves the input small, no job
+    assert fits(10, 10, NoJobs()) and fits(10, 0, NoJobs())
+    # a bound over the ceiling falls through to one bounded count
+    assert fits(10, 11, spark.range(10))
+    assert not fits(10, 11, spark.range(11))
+    # nothing proven: distributed
+    assert not fits(10) and not fits(10, 11)
+    # -1 is "off": no input fits, not even an empty one
+    assert not fits(-1, df=spark.range(0)) and not fits(-1, 0)
+
+
+def _spy_fits(monkeypatch) -> list:
+    """Replace every module attribute ``fits`` that is ``operators.fits``
+    with a spy; returns the list of results it records. The operator
+    modules are imported first: some builders import theirs lazily."""
+    import importlib
+    import pkgutil
+
+    from ut_data_engineering_group_project_2022_spark import operators
+
+    for info in pkgutil.iter_modules(operators.__path__):
+        importlib.import_module(f"{operators.__name__}.{info.name}")
+    real = operators.fits
+    results = []
+
+    def spy(*args, **kwargs):
+        results.append(real(*args, **kwargs))
+        return results[-1]
+
+    for name, mod in list(sys.modules.items()):
+        if name.startswith(operators.__name__.split(".")[0]) and (
+            vars(mod).get("fits") is real
+        ):
+            monkeypatch.setattr(mod, "fits", spy)
+    return results
+
+
+@pytest.mark.parametrize("name", bd.GATED_ROWS)
+def test_gated_row_branches_agree(spark, monkeypatch, name):
+    """Every gated registry row at sf0.001, built and collected with the
+    gates on and again under ``disable_kernels()``: the row multisets
+    are bit-exact, the schemas equal and the output non-empty. The spy
+    shows the gates-on build took a kernel and the gates-off build
+    never did (test_oracle_parity pins the gates-on rows to DuckDB)."""
+    from ut_data_engineering_group_project_2022_spark.plans import (
+        get_query,
+        star_queries,
     )
 
-    local = _rows_hex(build(spark, SF_DIR))
-    monkeypatch.setattr(stats, "LOCAL_MOMENT_ROWS", -1)
-    dist = _rows_hex(build(spark, SF_DIR))
-    assert local == dist and len(local) == 2080
+    build = get_query(name).spark
+    # a star row loads its warehouse only on a cold state cache
+    monkeypatch.setattr(star_queries, "_STATE_CACHE", {})
+    proven = _spy_fits(monkeypatch)
+    on_df = build(spark, SF_DIR)
+    on = _rows_hex(on_df)
+    assert any(proven), "gates on: no kernel gate proved its input small"
+    proven.clear()
+    saved = bd.disable_kernels()
+    try:
+        off_df = build(spark, SF_DIR)
+        off = _rows_hex(off_df)
+    finally:
+        bd.restore_kernels(saved)
+    assert proven and not any(proven), "gates off: a kernel gate passed"
+    assert on == off
+    assert [(f.name, f.dataType) for f in on_df.schema] == [
+        (f.name, f.dataType) for f in off_df.schema
+    ]
+    assert len(on) > 0

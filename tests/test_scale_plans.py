@@ -706,11 +706,11 @@ def test_tagged_upsert_has_no_batch_sized_window(spark):
 
 
 def test_distributed_exchange_counts_match_committed(spark):
-    """r20 (VERDICT r19 item 2): the ~20 size-gated rows' DISTRIBUTED
-    (above-gate, 100 TB) plans are no longer timed by the bench at test
-    SFs, so their shape is pinned here: with every kernel gate forced
-    to 0, each row's initial-plan shuffle/broadcast exchange counts at
-    sf0.001 must match the committed record produced by
+    """The size-gated rows' DISTRIBUTED (above-gate, 100 TB) plans are
+    not timed by the bench at test SFs, so their shape is pinned here:
+    with every kernel gate forced to -1 (no input fits), each row's
+    initial-plan shuffle/broadcast exchange counts at sf0.001 must
+    match the committed record produced by
     tools/bench_distributed.py --counts-only (counts at other SFs can
     differ legitimately via size-based join planning). A mismatch means
     the scale path's plan changed — rerun the tool, review the diff,

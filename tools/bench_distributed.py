@@ -1,14 +1,15 @@
 #!/usr/bin/env python
-"""Forced-distributed bench sidecar (r20, VERDICT r19 item 2).
+"""Forced-distributed bench sidecar.
 
-The r19 optimization round size-gated ~20 bench rows behind single-task
-kernels, so at the bench scale factors the DISTRIBUTED (100 TB) plans
-are test-asserted but never *timed* — a plan regression on the scale
-path would be invisible to BENCH/PERF until a larger-SF run. This tool
-re-times exactly those rows with EVERY kernel gate forced to 0 (the
-distributed branch of the same registered builder), and records each
-row's initial-plan exchange counts so plan-shape regressions are
-diffable against the committed record.
+Below their size gates (``operators.fits``) the gated registry rows run
+single-task kernels, so at the bench scale factors the DISTRIBUTED
+(100 TB) plans are test-asserted but never *timed* — a plan regression
+on the scale path would be invisible to the bench until a larger-SF
+run. This tool re-times exactly those rows with EVERY kernel gate
+forced to -1, so no input fits, not even an empty one (the distributed
+branch of the same registered builder), and records each row's
+initial-plan exchange counts so plan-shape regressions are diffable
+against the committed record.
 
 This is a tools-level sidecar, deliberately OUTSIDE bench.py: the
 driver's one-line JSON contract and its timed regions are untouched.
@@ -29,8 +30,10 @@ legitimately via size-based join planning, so the guard pins sf0.001).
 
 from __future__ import annotations
 
+import importlib
 import json
 import os
+import pkgutil
 import re
 import sys
 import time
@@ -40,8 +43,8 @@ _REPO = str(Path(__file__).resolve().parents[1])
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
-#: The size-gated bench/registry rows whose distributed plans the r19/r20
-#: kernels replaced below their gates (kernel inventory as of r20).
+#: Every registry row whose build reaches a kernel size gate at sf0.001
+#: (found by spying on ``operators.fits`` over all registry rows).
 GATED_ROWS = (
     "tpch_q1_pricing_summary",
     "bi_rank_customers_by_order_count",
@@ -66,55 +69,39 @@ GATED_ROWS = (
     "llm_ccnet_buckets",
     "llm_span_dedup_rebuild",
     "llm_embedding_covariance",
-)
-
-#: Every size-gate constant (module attr) the kernels dispatch on.
-GATE_CONSTANTS = (
-    ("dedup", "LOCAL_DEDUP_DOCS"),
-    ("graph", "LOCAL_MOVE_EDGES"),
-    ("relational", "LOCAL_TPCH_ROWS"),
-    ("similarity", "LOCAL_SEMDEDUP_ROWS"),
-    ("similarity", "LOCAL_KNN_QUERIES"),
-    ("similarity", "LOCAL_KNN_ROWS"),
-    ("similarity", "LOCAL_KCENTER_ROWS"),
-    ("star", "LOCAL_RANK_ROWS"),
-    ("star", "LOCAL_STAR_ROWS"),
-    ("stats", "LOCAL_MOMENT_ROWS"),
-    ("textml", "LOCAL_TEXT_DOCS"),
+    "llm_neardup_clusters",
+    "llm_soft_dedup",
+    "star_q01_authors_by_papers_in_domain",
 )
 
 
-def _modules():
-    from ut_data_engineering_group_project_2022_spark.operators import (
-        dedup,
-        graph,
-        relational,
-        similarity,
-        star,
-        stats,
-        textml,
-    )
+def gate_constants() -> list[tuple[object, str]]:
+    """``(module, name)`` of every ``LOCAL_*`` int ceiling in the
+    operator modules — the values the kernel gates pass to ``fits``."""
+    from ut_data_engineering_group_project_2022_spark import operators
 
-    return {
-        "dedup": dedup,
-        "graph": graph,
-        "relational": relational,
-        "similarity": similarity,
-        "star": star,
-        "stats": stats,
-        "textml": textml,
-    }
+    found = []
+    for info in pkgutil.iter_modules(operators.__path__):
+        mod = importlib.import_module(f"{operators.__name__}.{info.name}")
+        for attr, val in vars(mod).items():
+            if attr.startswith("LOCAL_") and type(val) is int:
+                found.append((mod, attr))
+    return found
 
 
 def disable_kernels():
-    """Force every size gate to 0 so each builder takes its distributed
-    branch; returns the original values for restoration."""
-    mods = _modules()
-    saved = []
-    for mod_name, attr in GATE_CONSTANTS:
-        mod = mods[mod_name]
+    """Force every size gate to -1 so each builder takes its distributed
+    branch; returns the original values for restoration. The star
+    queries' loaded-state cache is swapped for an empty one too, so a
+    star row loads its warehouse through the distributed loader instead
+    of reusing a kernel-built state."""
+    from ut_data_engineering_group_project_2022_spark.plans import star_queries
+
+    saved = [(star_queries, "_STATE_CACHE", star_queries._STATE_CACHE)]
+    star_queries._STATE_CACHE = {}
+    for mod, attr in gate_constants():
         saved.append((mod, attr, getattr(mod, attr)))
-        setattr(mod, attr, 0)
+        setattr(mod, attr, -1)
     return saved
 
 
@@ -186,7 +173,7 @@ def main() -> None:
         }
         if not counts_only:
             # the star loader's distributed first batch, timed like the
-            # bench's star_load region (gates are already 0)
+            # bench's star_load region (gates are already -1)
             from ut_data_engineering_group_project_2022_spark.operators import (
                 star,
             )

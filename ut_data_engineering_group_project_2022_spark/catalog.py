@@ -96,8 +96,9 @@ def parquet_row_count(sf_dir: str, name: str) -> int | None:
     the whole table a second time (~0.35 s for lineitem). The footer
     already stores num_rows per row group; Spark's own cost-based
     statistics read the same metadata. Returns None when the layout is
-    unexpected (caller falls back to the bounded limit-count gate), and
-    is stat-keyed like the schema cache so rewrites re-read."""
+    unexpected — nothing is then proven and ``operators.fits`` sends the
+    caller to its distributed branch — and is stat-keyed like the schema
+    cache so rewrites re-read."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = f"{sf_dir}/{name}.parquet"
@@ -113,8 +114,8 @@ def parquet_row_count(sf_dir: str, name: str) -> int | None:
                 # top-level *.parquet file used to return 0 — which
                 # falsely "proves" an arbitrarily large dataset small
                 # and routes it through a single-task kernel. Honor the
-                # "unexpected layout -> None" contract instead so the
-                # gates fall back to the bounded limit-count.
+                # "unexpected layout -> None" contract instead: nothing
+                # is proven small.
                 n = 0
                 found = False
                 for f in sorted(os.listdir(path)):
@@ -130,7 +131,7 @@ def parquet_row_count(sf_dir: str, name: str) -> int | None:
                 n = pq.ParquetFile(path).metadata.num_rows
             _SCHEMA_CACHE[key] = n
         return n
-    except Exception:  # noqa: BLE001 — gates fall back to limit-count
+    except Exception:  # noqa: BLE001 — unreadable footer: nothing proven
         return None
 
 

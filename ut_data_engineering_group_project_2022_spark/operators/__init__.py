@@ -4,34 +4,16 @@ search, star-schema loading, graph algorithms, multimodal plumbing."""
 from __future__ import annotations
 
 
-def bounded_small(df, ceiling: int, known_rows: int | None = None) -> bool:
-    """Shared size-gate check for the r19 single-task kernels.
+def fits(ceiling: int, rows: int | None = None, df=None) -> bool:
+    """The one size gate in front of every single-task kernel: True only
+    when the input is proven to hold at most ``ceiling`` rows.
 
-    ``known_rows`` is an optional caller-supplied UPPER BOUND on
-    ``df``'s rows (typically a parquet footer count of the base table,
-    read driver-side with zero Spark jobs — catalog.parquet_row_count).
-    A bound at or under the ceiling PROVES smallness without any job;
-    anything else falls back to the bounded ``limit(N+1).count()``
-    partial scan, so an over-estimate can never force the distributed
-    path, only cost the count the unhinted gate always paid."""
-    if known_rows is not None and known_rows <= ceiling:
+    ``rows`` is a proof that costs no job: an exact parquet footer count
+    (catalog.parquet_row_count), an upper bound on it, or a bound known
+    by construction. At or under the ceiling it proves the input small.
+    Otherwise, when ``df`` is given, one bounded ``limit(ceiling + 1)``
+    count decides; with nothing proven the input takes the distributed
+    branch. A ceiling of -1 rejects every input, even an empty one."""
+    if rows is not None and rows <= ceiling:
         return True
-    return df.limit(ceiling + 1).count() <= ceiling
-
-
-def table_is_small(sf_dir: str, name: str, df, ceiling: int) -> bool:
-    """Footer-EXACT size gate for catalog tables (r20, r19 ADVICE: this
-    logic lived in three subtly-different copies). Unlike
-    :func:`bounded_small`'s ``known_rows`` (an upper bound that must
-    fall back to the limit-count when it exceeds the ceiling), the
-    parquet footer row count is the EXACT table size, so exceeding the
-    ceiling is definitive — no retry job. A missing/unreadable footer
-    falls back to the bounded ``limit(N+1).count()`` partial scan."""
-    from ut_data_engineering_group_project_2022_spark.catalog import (
-        parquet_row_count,
-    )
-
-    n = parquet_row_count(sf_dir, name)
-    if n is not None:
-        return n <= ceiling
-    return df.limit(ceiling + 1).count() <= ceiling
+    return df is not None and df.limit(ceiling + 1).count() <= ceiling

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ut_data_engineering_group_project_2022_spark.operators import bounded_small
+from ut_data_engineering_group_project_2022_spark.operators import fits
 from ut_data_engineering_group_project_2022_spark.functions.text import (
     HASH_P,
     md5_int60,
@@ -506,11 +506,11 @@ def minhash_lsh_dedup(
     between stages (signatures are |docs| x 33 ints, tiny next to the
     exploded shingle stream).
 
-    Size-dispatched (r19): below LOCAL_DEDUP_DOCS (``known_docs``
-    footer bound or a bounded limit+count — operators.bounded_small)
-    the whole pass runs as one single-task kernel; the distributed
-    plan below is unchanged."""
-    if bounded_small(docs, LOCAL_DEDUP_DOCS, known_docs):
+    Size-dispatched: when ``operators.fits`` proves the input within
+    LOCAL_DEDUP_DOCS (``known_docs`` footer bound, else one bounded
+    count) the whole pass runs as one single-task kernel; otherwise the
+    distributed plan below runs."""
+    if fits(LOCAL_DEDUP_DOCS, known_docs, docs):
         return _minhash_lsh_local(docs, k)
     shingled = shingle_docs(docs, k).cache()
     shingled.count()  # force: lazy cache would be raced by the join branches
@@ -757,8 +757,8 @@ def incremental_neardup(
         corpus.select("doc_id", "text", F.lit(False).alias("__is_batch"))
     )
     # known_docs: caller-known upper bound on batch+corpus rows (footer
-    # counts) — proves smallness with zero jobs (operators.bounded_small)
-    if bounded_small(tagged, LOCAL_DEDUP_DOCS, known_docs):
+    # counts) — proves smallness with zero jobs, else one bounded count
+    if fits(LOCAL_DEDUP_DOCS, known_docs, tagged):
         return _incremental_neardup_local(tagged, k, min_jaccard)
     sh_b = shingle_docs(batch, k).cache()
     sh_b.count()

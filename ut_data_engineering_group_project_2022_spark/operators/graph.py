@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ut_data_engineering_group_project_2022_spark.catalog import table
+from ut_data_engineering_group_project_2022_spark.operators import fits
 
 
 def customer_supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -425,7 +426,7 @@ def pagerank_sized(
     distributed loop. ``mirror=True`` means ``edges`` is the DIRECTED
     list of a simple undirected graph: the kernel mirrors it in memory
     (half the Arrow transfer) and the distributed path unions it."""
-    if n_rows <= LOCAL_MOVE_EDGES:
+    if fits(LOCAL_MOVE_EDGES, n_rows):
         return pagerank_local(edges, edge_feed(mirror), iterations, damping)
     und = undirect(edges) if mirror else edges
     return pagerank(und, iterations=iterations, damping=damping)
@@ -986,7 +987,8 @@ def louvain(
     # final aggregate in parallel, where the kernel's coalesce(1) would
     # serialize it (eliding it measured slower).
     ed = materialized(edges)
-    small = 2 * ed.count() <= LOCAL_MOVE_EDGES
+    # the undirected graph has 2 rows per directed edge
+    small = fits(LOCAL_MOVE_EDGES // 2, df=ed)
     if small and assume_simple:
         # unique directed pairs, no reverse duplicates: the kernel's
         # in-memory mirroring IS the undirect — half the Arrow transfer
@@ -1021,7 +1023,7 @@ def louvain_weighted(
     # weighted loader.
     edges = materialized(edges)
     fwd = edges.select("src", "dst", F.col("weight").cast("long").alias("w"))
-    if 2 * edges.count() <= LOCAL_MOVE_EDGES:
+    if fits(LOCAL_MOVE_EDGES // 2, df=edges):
         return louvain_local(fwd, edge_feed(mirror=True), rounds, levels)
     rev = edges.select(
         F.col("dst").alias("src"),
@@ -1046,7 +1048,7 @@ def _louvain_hierarchy(und: DataFrame, rounds: int, levels: int) -> DataFrame:
         sup = _contract(parts, labels).localCheckpoint(eager=True)
         parts.unpersist()
         parts = sup
-        if sup.count() <= LOCAL_MOVE_EDGES:
+        if fits(LOCAL_MOVE_EDGES, df=sup):
             upper = louvain_local(sup, edge_feed(), rounds, levels=1).toDF(
                 "id", "label"
             )
@@ -1508,7 +1510,7 @@ def connected_components(
     # normalize+distinct reduce side parallel, where the kernel's
     # coalesce(1) would serialize it.
     base = base.localCheckpoint(eager=True)
-    if base.count() <= LOCAL_MOVE_EDGES:
+    if fits(LOCAL_MOVE_EDGES, df=base):
         return cc_local(base, edge_feed(), rounds)
     e = base
     for r in range(rounds):

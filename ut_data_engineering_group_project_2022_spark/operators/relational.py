@@ -47,9 +47,8 @@ from pyspark.sql import functions as F
 
 #: Fact-row ceiling for the single-task TPC-H kernels. 5M rows bounds
 #: the Arrow transfer at ~200 MB and the kernel at well under a second
-#: of integer numpy; the gate is a bounded ``limit(N+1).count()``
-#: partial scan, so the 100 TB path pays a few split-reads and takes
-#: the unchanged distributed plan.
+#: of integer numpy; the gates read the parquet footer row count (zero
+#: jobs), so the 100 TB path takes the distributed plan for free.
 LOCAL_TPCH_ROWS = 5_000_000
 
 #: Proven-safe input magnitude bounds for :func:`tpch_q1_local` (r20,

@@ -16,7 +16,7 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ut_data_engineering_group_project_2022_spark.functions.text import md5_int60
-from ut_data_engineering_group_project_2022_spark.operators import bounded_small
+from ut_data_engineering_group_project_2022_spark.operators import fits
 
 
 def as_double(col: Column | str) -> Column:
@@ -51,10 +51,10 @@ def knn_bruteforce(
     corpus scan stays shuffle-free; the only shuffle is the per-query top-k
     window, partitioned by query id. ``query_rows``/``corpus_rows`` are
     optional caller-known upper bounds (footer counts) that skip the
-    gate-count jobs (operators.bounded_small).
+    gate-count jobs (operators.fits).
     """
-    if bounded_small(queries, LOCAL_KNN_QUERIES, query_rows) and bounded_small(
-        corpus, LOCAL_KNN_ROWS, corpus_rows
+    if fits(LOCAL_KNN_QUERIES, query_rows, queries) and fits(
+        LOCAL_KNN_ROWS, corpus_rows, corpus
     ):
         return _knn_bruteforce_local(queries, corpus, k, id_col, vec_col)
     q = queries.select(
@@ -566,12 +566,12 @@ def semdedup(
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): cluster with the deterministic
     fixed-point k-means, drop all but the smallest id among
-    within-cluster pairs with cosine >= ``threshold``. Size-dispatched
-    (r19): one single-task kernel below ``LOCAL_SEMDEDUP_ROWS``
-    (``corpus_rows`` footer bound or a bounded limit+count —
-    operators.bounded_small), the cluster-bounded distributed pair
-    join above it. Returns (vec_id, cluster, keep, dup_of)."""
-    if bounded_small(emb, LOCAL_SEMDEDUP_ROWS, corpus_rows):
+    within-cluster pairs with cosine >= ``threshold``. Size-dispatched:
+    one single-task kernel when ``operators.fits`` proves the input
+    within ``LOCAL_SEMDEDUP_ROWS`` (``corpus_rows`` footer bound, else
+    one bounded count), the cluster-bounded distributed pair join
+    otherwise. Returns (vec_id, cluster, keep, dup_of)."""
+    if fits(LOCAL_SEMDEDUP_ROWS, corpus_rows, emb):
         return _semdedup_local(
             emb, k, iterations, threshold, scale, offset, id_col, vec_col
         )
@@ -688,10 +688,9 @@ def knn_pq(
     """
     if dim % m != 0:
         raise ValueError(f"dim={dim} must divide into m={m} subspaces")
-    # Size-gated single-task kernel (r19): a footer bound or one
-    # bounded partial scan, then the whole encode/LUT/ADC/top-k chain
-    # as one job.
-    if bounded_small(emb, LOCAL_KNN_ROWS, corpus_rows):
+    # Size gate: within LOCAL_KNN_ROWS the whole encode/LUT/ADC/top-k
+    # chain runs as one job.
+    if fits(LOCAL_KNN_ROWS, corpus_rows, emb):
         return _knn_pq_local(
             emb, k, m, n_codes, n_queries, scale, dim, id_col, vec_col
         )
@@ -806,10 +805,10 @@ def knn_pq_rerank(
     neighbor_id, score, rn), ranked by unrounded cosine (the
     knn_bruteforce convention), rounded to 6 on output.
     """
-    # Size-gated single-task kernel (r19): the ADC shortlist AND the
-    # exact re-rank in one job (the distributed form below would pay
-    # the ~10-job PQ chain plus the rerank join/window).
-    if bounded_small(emb, LOCAL_KNN_ROWS, corpus_rows):
+    # Size gate: within LOCAL_KNN_ROWS the ADC shortlist AND the exact
+    # re-rank run as one job (the distributed form below pays the
+    # ~10-job PQ chain plus the rerank join/window).
+    if fits(LOCAL_KNN_ROWS, corpus_rows, emb):
         return _knn_pq_local(
             emb,
             shortlist,
@@ -1207,10 +1206,9 @@ def kcenter_greedy(
         lambda v: F.floor(v.cast("double") * scale).cast("bigint") + offset,
     )
     v = emb.select(F.col(id_col).cast("bigint").alias("vec_id"), x.alias("x"))
-    # Size-gated single-task path (r19): a footer bound skips the gate
-    # job; otherwise limit+count stops scanning as soon as the pool is
-    # provably larger than the gate (a bounded partial scan).
-    if bounded_small(v, LOCAL_KCENTER_ROWS, corpus_rows):
+    # Size gate: within LOCAL_KCENTER_ROWS the greedy rounds run as one
+    # task.
+    if fits(LOCAL_KCENTER_ROWS, corpus_rows, v):
         return _kcenter_local(v, k)
 
     def d2_to(center: list) -> Column:
@@ -1375,11 +1373,10 @@ def mmr_rerank(
     identical argmaxes (vec_id tiebreaks). The oracle chains the same
     rounds as CTEs with a cumulative exclusion per round.
     """
-    # Size-gated single-task path (r20): below LOCAL_KNN_ROWS the whole
-    # program — candidate knn, pool checkpoint, and the k driver-side
-    # top-1 round trips — runs as one mapInArrow task. ``corpus_rows``
-    # (e.g. a parquet footer count) proves smallness with zero jobs.
-    if bounded_small(emb, LOCAL_KNN_ROWS, corpus_rows):
+    # Size gate: within LOCAL_KNN_ROWS the whole program — candidate
+    # knn, pool checkpoint, and the k driver-side top-1 round trips —
+    # runs as one mapInArrow task.
+    if fits(LOCAL_KNN_ROWS, corpus_rows, emb):
         return _mmr_rerank_local(
             emb, query_vec_id, k, pool, lam, id_col, vec_col
         )

@@ -46,6 +46,7 @@ from ut_data_engineering_group_project_2022_spark.functions.metrics import (
     gindex_agg,
     hindex_agg,
 )
+from ut_data_engineering_group_project_2022_spark.operators import fits
 from ut_data_engineering_group_project_2022_spark.schemas import (
     BRIDGE_AFFILIATION_GROUP,
     BRIDGE_AUTHOR_GROUP,
@@ -356,16 +357,13 @@ def global_dense_rank(
     # partitioner's boundary-sampling pass and the exchange itself would
     # otherwise each evaluate the (typically aggregate-shaped) input plan.
     df = df.localCheckpoint(eager=True)
-    # Size-gated single-window rank (r19, guide §1.2): the rank input is
-    # group-grain (one row per key after the caller's collapse), and the
-    # count job reads the in-memory checkpoint just taken. At or below
-    # LOCAL_RANK_ROWS one single-partition window over the checkpoint is
-    # strictly cheaper than the two-phase form's second checkpoint +
-    # range-sampler job + offsets join (measured r19: the four benched
-    # bi_rank_* rows ran 13-17 Spark jobs, mostly this machinery, on
-    # 1k-20k-row rank inputs). Above the gate the two-phase form runs
-    # unchanged — the 100x/100 TB shape the rounds-3/4 audit mandated.
-    if df.count() <= LOCAL_RANK_ROWS:
+    # Size gate (guide §1.2): the rank input is group-grain (one row per
+    # key after the caller's collapse), and the bounded count reads the
+    # in-memory checkpoint just taken. Within LOCAL_RANK_ROWS one
+    # single-partition window over the checkpoint is strictly cheaper
+    # than the two-phase form's second checkpoint + range-sampler job +
+    # offsets join; above it the two-phase form runs (the 100 TB shape).
+    if fits(LOCAL_RANK_ROWS, df=df):
         return df.withColumn(colname, F.dense_rank().over(W.orderBy(key)))
     local = (
         df.repartitionByRange(n, key)
@@ -1080,24 +1078,19 @@ def load_batch(
     """
     # Size gate: when the state's batch-loaded rows plus the staging rows
     # fit LOCAL_STAR_ROWS, the whole batch runs as one single-task job
-    # (_star_local) on any state — bootstrap or incremental. The proof is
-    # one bounded count job (limit(N+1)) over state and staging rows.
+    # (_star_local) on any state — bootstrap or incremental.
     # ``n_staging_rows`` is an optional caller-supplied UPPER BOUND on
     # combined staging rows (e.g. a parquet footer count of the staging
-    # source times its max fan-out); on an empty state it can PROVE
-    # smallness and skip the count job, but it can never force the
-    # distributed path.
+    # source times its max fan-out); on an empty state it proves
+    # smallness with no job, otherwise one bounded count over state and
+    # staging rows decides.
     rows, loaded = _kernel_rows(state)
-    if loaded is None and n_staging_rows is not None and (
-        n_staging_rows <= LOCAL_STAR_ROWS
-    ):
-        return _star_local(rows, staging_main, staging_authors)
     ones = staging_main.select(F.lit(1).alias("one")).unionAll(
         staging_authors.select(F.lit(1).alias("one"))
     )
     if loaded is not None:
         ones = ones.unionAll(loaded.select(F.lit(1).alias("one")))
-    if ones.limit(LOCAL_STAR_ROWS + 1).count() <= LOCAL_STAR_ROWS:
+    if fits(LOCAL_STAR_ROWS, n_staging_rows if loaded is None else None, ones):
         return _star_local(rows, staging_main, staging_authors)
     # The two staging checkpoints are independent — run them as
     # concurrent jobs (r9: they were two serial driver syncs).

@@ -49,6 +49,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ut_data_engineering_group_project_2022_spark.operators import fits
+
 # Quantization scale: 4 decimal digits. Chosen so that at driver-compare
 # scale every finalization intermediate (n*Sxy, Sx_i*Sx_j, n^2*SCALE^2)
 # stays far below 2^53 and the decimal->double casts are EXACT in both
@@ -198,14 +200,13 @@ def embedding_moments(
     negative zero (DuckDB's ROUND can emit ``-0.0`` where Spark emits
     ``0.0`` — numerically equal but repr/hash-distinct).
 
-    ``corpus_rows`` (r19): optional caller-known row count (e.g. a
-    parquet footer read) — at or below ``LOCAL_MOMENT_ROWS`` the whole
+    ``corpus_rows``: optional caller-known row count (e.g. a parquet
+    footer read). When ``operators.fits`` proves the input within
+    ``LOCAL_MOMENT_ROWS`` (that count, else one bounded count) the whole
     computation runs as one single-task kernel (:func:`_moments_local`,
-    identical arithmetic); unknown sizes pay a bounded limit-count.
+    identical arithmetic).
     """
-    if corpus_rows is None:
-        corpus_rows = emb.limit(LOCAL_MOMENT_ROWS + 1).count()
-    if corpus_rows <= LOCAL_MOMENT_ROWS:
+    if fits(LOCAL_MOMENT_ROWS, corpus_rows, emb):
         return _moments_local(emb, vec_col, dim)
     summed = _summed_moments(emb, vec_col, dim)
     n = summed.filter((F.col("i") == -1) & (F.col("j") == -1)).select(

@@ -26,7 +26,7 @@ from ut_data_engineering_group_project_2022_spark.catalog import (
     parquet_row_count as catalog_row_count,
     table,
 )
-from ut_data_engineering_group_project_2022_spark.operators import relational
+from ut_data_engineering_group_project_2022_spark.operators import fits, relational
 from ut_data_engineering_group_project_2022_spark.operators.star import (
     global_dense_rank,
 )
@@ -66,16 +66,11 @@ def bi_rank_customers_by_order_count(spark: SparkSession, sf_dir: str) -> DataFr
     # values with map-side combine and a rank input of one row per group
     # (the r5 two-phase-rank regression fix: the first checkpoint inside
     # global_dense_rank now materializes |customers| rows, not a window).
-    # Size-dispatched (r20, the bi-suppliers recipe): below the gate the
-    # grouped COUNT and the dense rank run as ONE mapInArrow task over
-    # the broadcast-join output (count needs no magnitude proof). The
-    # distributed groupBy + two-phase rank above is byte-unchanged.
-    n_o = catalog_row_count(sf_dir, "orders")
-    if (
-        relational.LOCAL_TPCH_ROWS
-        and n_o is not None
-        and n_o <= relational.LOCAL_TPCH_ROWS
-    ):
+    # Size gate: when the orders footer fits LOCAL_TPCH_ROWS the grouped
+    # COUNT and the dense rank run as ONE mapInArrow task over the
+    # broadcast-join output (count needs no magnitude proof); otherwise
+    # the distributed groupBy + two-phase rank below runs.
+    if fits(relational.LOCAL_TPCH_ROWS, catalog_row_count(sf_dir, "orders")):
         return relational.grouped_measure_rank_local(
             joined.select("c_custkey", "c_name", "o_orderkey"),
             "c_custkey",
@@ -117,15 +112,10 @@ def bi_rank_customers_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Windowed-SUM + DISTINCT == one row per customer: groupBy form (see
     # bi_rank_customers_by_order_count). Decimal sum keeps cross-engine
     # exactness; the cast to double happens once per group row.
-    # Size-dispatched (r20, the bi-suppliers recipe): a single-column
+    # Size gate (as bi_rank_customers_by_order_count): a single-column
     # decimal(18,4) sum needs NO magnitude proof (no product — see
     # grouped_measure_rank_local), so the gate is the footer count only.
-    n_o = catalog_row_count(sf_dir, "orders")
-    if (
-        relational.LOCAL_TPCH_ROWS
-        and n_o is not None
-        and n_o <= relational.LOCAL_TPCH_ROWS
-    ):
+    if fits(relational.LOCAL_TPCH_ROWS, catalog_row_count(sf_dir, "orders")):
         return relational.grouped_measure_rank_local(
             joined.select("c_custkey", "c_name", "o_totalprice"),
             "c_custkey",
@@ -204,14 +194,9 @@ def bi_rank_parts_by_shipped_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
     # Windowed-SUM + DISTINCT == one row per part: groupBy form (see
     # bi_rank_customers_by_order_count).
-    # Size-dispatched (r20, the bi-suppliers recipe): single-column
+    # Size gate (as bi_rank_customers_by_order_count): single-column
     # decimal sum, footer-count gate only (no product, no proof needed).
-    n_li = catalog_row_count(sf_dir, "lineitem")
-    if (
-        relational.LOCAL_TPCH_ROWS
-        and n_li is not None
-        and n_li <= relational.LOCAL_TPCH_ROWS
-    ):
+    if fits(relational.LOCAL_TPCH_ROWS, catalog_row_count(sf_dir, "lineitem")):
         return relational.grouped_measure_rank_local(
             joined.select("p_partkey", "p_name", "l_quantity"),
             "p_partkey",
@@ -261,22 +246,16 @@ def bi_rank_suppliers_by_region_revenue(spark: SparkSession, sf_dir: str) -> Dat
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
     )
-    # Size-dispatched (r20, VERDICT item 4): at bench scale the row is
-    # one unsplittable scan task doing per-row BigDecimal revenue math
-    # (the q1 cost shape) plus the rank's exchange. Below the gate the
+    # Size gate: when the lineitem footer fits LOCAL_TPCH_ROWS, and its
+    # column stats prove safe magnitudes (the proof q1 uses), the
     # decimal aggregate AND the dense rank run as ONE scaled-integer
     # mapInArrow task over the broadcast-join output (exactness:
-    # operators/relational.py; the footer-stats magnitude proof is the
-    # same one q1 uses). Above it the groupBy + two-phase rank below is
-    # byte-unchanged (the 100 TB shape).
-    n_li = catalog_row_count(sf_dir, "lineitem")
-    if (
-        relational.LOCAL_TPCH_ROWS
-        and n_li is not None
-        and n_li <= relational.LOCAL_TPCH_ROWS
-        and relational.lineitem_magnitudes_safe(
-            sf_dir, ("l_extendedprice", "l_discount")
-        )
+    # operators/relational.py); otherwise the groupBy + two-phase rank
+    # below runs (the 100 TB shape).
+    if fits(
+        relational.LOCAL_TPCH_ROWS, catalog_row_count(sf_dir, "lineitem")
+    ) and relational.lineitem_magnitudes_safe(
+        sf_dir, ("l_extendedprice", "l_discount")
     ):
         return relational.grouped_measure_rank_local(
             joined.select(

@@ -18,7 +18,7 @@ from ut_data_engineering_group_project_2022_spark.catalog import (
     parquet_row_count as catalog_row_count,
     table,
 )
-from ut_data_engineering_group_project_2022_spark.operators import graph
+from ut_data_engineering_group_project_2022_spark.operators import fits, graph
 from ut_data_engineering_group_project_2022_spark.plans.registry import register
 
 _EDGES_SQL = """
@@ -97,16 +97,14 @@ def graph_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r20 fused feed: when the parquet footer PROVES the graph small
-    # (directed edges <= lineitem rows; zero jobs), the whole row runs
-    # as ONE mapInArrow task over the RAW int join pairs — the
-    # projection aggregate, its exchange, the checkpoint, and the
-    # string factorization all disappear (the r19 dead end fused only
-    # the projection and paid a 587k-string-row Arrow round trip; this
-    # fuses the ALGORITHM, so only ~16k label rows come back). Above
-    # the gate the r19 projection + distributed plan is byte-unchanged.
-    n_li = catalog_row_count(sf_dir, "lineitem")
-    if n_li is not None and 2 * n_li <= graph.LOCAL_MOVE_EDGES:
+    # Fused feed: when the lineitem footer proves the undirected graph
+    # within LOCAL_MOVE_EDGES (directed edges <= lineitem rows, two
+    # undirected rows each; zero jobs), the whole row runs as ONE
+    # mapInArrow task over the RAW int join pairs — the projection
+    # aggregate, its exchange, the checkpoint, and the string
+    # factorization all disappear, and only the ~|V| label rows come
+    # back. Otherwise the projection + distributed plan below runs.
+    if fits(graph.LOCAL_MOVE_EDGES // 2, catalog_row_count(sf_dir, "lineitem")):
         return graph.pagerank_local(
             graph.customer_supplier_pairs(spark, sf_dir),
             graph.pair_feed(),
@@ -354,12 +352,11 @@ def _louvain_oracle(
     bench=True,
 )
 def graph_louvain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r20 fused feed (see graph_pagerank): footer-proven-small graphs
-    # run projection-dedup + the whole hierarchy as ONE mapInArrow task
-    # over the raw int join pairs; above the gate the projection +
-    # distributed hierarchy is byte-unchanged.
-    n_li = catalog_row_count(sf_dir, "lineitem")
-    if n_li is not None and 2 * n_li <= graph.LOCAL_MOVE_EDGES:
+    # Fused feed (see graph_pagerank): footer-proven-small graphs run
+    # projection-dedup + the whole hierarchy as ONE mapInArrow task over
+    # the raw int join pairs; otherwise the projection + distributed
+    # hierarchy runs.
+    if fits(graph.LOCAL_MOVE_EDGES // 2, catalog_row_count(sf_dir, "lineitem")):
         return graph.louvain_local(
             graph.customer_supplier_pairs(spark, sf_dir),
             graph.pair_feed(),
@@ -383,10 +380,9 @@ def graph_louvain(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("graph", "community"),
 )
 def graph_louvain_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r20 fused feed (see graph_pagerank); the kernel's multiplicity
-    # counts ARE the projection's lineitem-count weights.
-    n_li = catalog_row_count(sf_dir, "lineitem")
-    if n_li is not None and 2 * n_li <= graph.LOCAL_MOVE_EDGES:
+    # Fused feed (see graph_pagerank); the kernel's multiplicity counts
+    # ARE the projection's lineitem-count weights.
+    if fits(graph.LOCAL_MOVE_EDGES // 2, catalog_row_count(sf_dir, "lineitem")):
         return graph.louvain_local(
             graph.customer_supplier_pairs(spark, sf_dir),
             graph.pair_feed(weighted=True),
@@ -977,11 +973,11 @@ def _cc_oracle(rounds: int = 3, min_weight: int = 4) -> str:
     bench=True,
 )
 def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r20 fused feed (see graph_pagerank): the kernel's multiplicity
-    # counts implement the weight >= 2 thinning, and nodes isolated by
-    # thinning are absent exactly like the distributed base.
-    n_li = catalog_row_count(sf_dir, "lineitem")
-    if n_li is not None and n_li <= graph.LOCAL_MOVE_EDGES:
+    # Fused feed (see graph_pagerank): the kernel's multiplicity counts
+    # implement the weight >= 2 thinning, and nodes isolated by thinning
+    # are absent exactly like the distributed base. CC's normalized edge
+    # rows are at most the lineitem rows.
+    if fits(graph.LOCAL_MOVE_EDGES, catalog_row_count(sf_dir, "lineitem")):
         return graph.cc_local(
             graph.customer_supplier_pairs(spark, sf_dir),
             graph.pair_feed(min_weight=2),

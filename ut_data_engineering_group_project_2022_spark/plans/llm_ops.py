@@ -27,18 +27,12 @@ from ut_data_engineering_group_project_2022_spark.catalog import (
 )
 from ut_data_engineering_group_project_2022_spark.operators import (
     dedup,
+    fits,
     multimodal,
     similarity,
-    table_is_small,
     textml,
 )
 from ut_data_engineering_group_project_2022_spark.plans.registry import register
-
-
-# r20 (r19 ADVICE): the footer-or-bounded-count gate is the shared
-# operators.table_is_small — the former local copy re-implemented it
-# with subtly different fallback semantics.
-_table_is_small = table_is_small
 
 # DuckDB shingle-set expression shared by the jaccard/minhash oracles.
 _SHINGLES_SQL = """
@@ -283,10 +277,9 @@ def llm_simhash_pairs_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
 def llm_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     n_emb = parquet_row_count(sf_dir, "embeddings")
-    # r20 (r19 ADVICE): the query-side filter (vec_id < 10 over unique
-    # ids) bounds the query side BY CONSTRUCTION at 10 rows, so the gate
-    # is zero-job; the table footer count could essentially never prove
-    # it under LOCAL_KNN_QUERIES and left a limit-count job behind.
+    # The query-side filter (vec_id < 10 over unique ids) bounds the
+    # query side BY CONSTRUCTION at 10 rows, so its gate needs no job
+    # (the table footer count would not prove the query side small).
     return similarity.knn_bruteforce(
         emb.filter(F.col("vec_id") < 10),
         emb.filter(F.col("vec_id") >= 10),
@@ -2399,11 +2392,11 @@ def llm_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def llm_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
-    # Size-gated single-task kernel (r19): the whole composition —
-    # exact groups, MinHash near-dup, quality, langid, verdicts — as
-    # one job (operators/dedup.py:curation_local); the distributed
-    # composition below is unchanged above the gate.
-    if _table_is_small(sf_dir, "documents", d, dedup.LOCAL_DEDUP_DOCS):
+    # Size gate: when the documents footer fits LOCAL_DEDUP_DOCS the
+    # whole composition — exact groups, MinHash near-dup, quality,
+    # langid, verdicts — runs as one job (operators/dedup.py:
+    # curation_local); otherwise the distributed composition below.
+    if fits(dedup.LOCAL_DEDUP_DOCS, parquet_row_count(sf_dir, "documents")):
         return dedup.curation_local(d)
     # (1) exact-dup drop list: every doc whose md5 group keeper isn't it.
     groups = dedup.exact_dup_groups(d)
@@ -2705,12 +2698,11 @@ def llm_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = table(spark, sf_dir, "documents")
-    # Size-gated single-task kernel (r19): the whole corpus-LM ->
-    # perplexity -> tercile program as one job (operators/textml.py:
-    # ccnet_buckets_local — exactness argument there, parity pinned at
-    # three SFs by tests/test_local_kernels.py); the class-level
-    # distributed plan below is unchanged above the gate.
-    if _table_is_small(sf_dir, "documents", d, textml.LOCAL_TEXT_DOCS):
+    # Size gate: when the documents footer fits LOCAL_TEXT_DOCS the whole
+    # corpus-LM -> perplexity -> tercile program runs as one job
+    # (operators/textml.py:ccnet_buckets_local — exactness argument
+    # there); otherwise the class-level distributed plan below.
+    if fits(textml.LOCAL_TEXT_DOCS, parquet_row_count(sf_dir, "documents")):
         return textml.ccnet_buckets_local(d)
     tok = d.select("doc_id", "lang", F.explode(tokens("text")).alias("t"))
     cf = tok.groupBy("t").agg(F.count(F.lit(1)).alias("c"))
@@ -2882,12 +2874,11 @@ def llm_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def llm_span_dedup_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
-    # Size-gated single-task kernel (r19): chunk -> global-first-keep
-    # -> rebuild as one job (operators/textml.py:
+    # Size gate: when the documents footer fits LOCAL_TEXT_DOCS, chunk ->
+    # global-first-keep -> rebuild runs as one job (operators/textml.py:
     # span_dedup_rebuild_local — all-integer/string, structurally
-    # exact); the span-keyed distributed plan below is unchanged
-    # above the gate.
-    if _table_is_small(sf_dir, "documents", d, textml.LOCAL_TEXT_DOCS):
+    # exact); otherwise the span-keyed distributed plan below.
+    if fits(textml.LOCAL_TEXT_DOCS, parquet_row_count(sf_dir, "documents")):
         return textml.span_dedup_rebuild_local(d)
     w = d.select("doc_id", tokens("text").alias("toks"))
     n_chunks = F.ceil(F.size("toks") / F.lit(16.0)).cast("bigint")

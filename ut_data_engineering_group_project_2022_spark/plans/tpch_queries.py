@@ -21,8 +21,8 @@ from ut_data_engineering_group_project_2022_spark.catalog import (
     table,
 )
 from ut_data_engineering_group_project_2022_spark.operators import (
+    fits,
     relational,
-    table_is_small,
 )
 from ut_data_engineering_group_project_2022_spark.plans.registry import register
 
@@ -93,24 +93,18 @@ def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp")
     )
-    # Size-dispatched (r19): at bench scale the whole row is ONE
-    # unsplittable scan task doing per-row BigDecimal math (~0.9 s of
-    # the 1.23 s warm time); below the gate the identical exact
+    # Size gate: when the lineitem footer fits LOCAL_TPCH_ROWS, and its
+    # column stats prove safe magnitudes (int64 headroom for the
+    # scaled-integer multiplies; see Q1_SAFE_ABS), the identical exact
     # aggregate runs as one scaled-integer mapInArrow task
-    # (operators/relational.py — exactness argument there, parity
-    # pinned by tests/test_local_kernels.py). Above it the two-stage
-    # decimal hash aggregate below is byte-unchanged (the 100 TB
-    # shape: map-side partials + tiny final shuffle). The gate reads
-    # the parquet footer row count — zero jobs; a limit-count job on
-    # this one-row-group file would re-scan the whole table.
-    # r20: the kernel additionally requires proven-safe magnitudes
-    # (footer column stats, zero jobs) — int64 headroom for the
-    # scaled-integer multiplies; see Q1_SAFE_ABS.
-    if (
-        relational.LOCAL_TPCH_ROWS
-        and table_is_small(sf_dir, "lineitem", li, relational.LOCAL_TPCH_ROWS)
-        and _q1_magnitudes_safe(sf_dir)
-    ):
+    # (operators/relational.py — exactness argument there). Both proofs
+    # read parquet footers, zero jobs; a count job on this
+    # one-row-group file would re-scan the whole table. Otherwise the
+    # two-stage decimal hash aggregate below runs (the 100 TB shape:
+    # map-side partials + tiny final shuffle).
+    if fits(
+        relational.LOCAL_TPCH_ROWS, catalog_row_count(sf_dir, "lineitem")
+    ) and _q1_magnitudes_safe(sf_dir):
         return relational.tpch_q1_local(li)
     cnt = F.count(F.lit(1))
     return (
