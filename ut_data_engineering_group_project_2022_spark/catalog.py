@@ -38,19 +38,23 @@ def _stat_key(path: str):
 _PKG_ZIP: str | None = None
 
 
-def _ensure_worker_importable(spark: SparkSession) -> None:
-    """Ship this package to executor Python workers via ``addPyFile``
-    (r19 correctness hardening, found while optimizing). The single-task
-    kernels are nested functions whose module-level helpers cloudpickle
-    serializes BY REFERENCE (module + qualname), so the executor worker
-    must be able to import this package. That holds when the driver's
-    working directory is the repo (local-mode workers inherit the CWD)
-    but NOT for a driver that only put the repo on its own ``sys.path``
-    — reproduced with tools/driver_sim.py run from /tmp: every gated
-    kernel dies with ModuleNotFoundError. ``addPyFile`` is Spark's
-    standard fix: the zip lands on every worker's ``sys.path`` for all
-    subsequently launched tasks. One zip per process, one addPyFile per
-    SparkContext, a no-op flag check afterwards."""
+def ensure_worker_imports(spark: SparkSession) -> None:
+    """Ship this package to executor Python workers via ``addPyFile``.
+
+    The single-task kernels are nested functions whose module-level
+    helpers cloudpickle serializes BY REFERENCE (module + qualname), so
+    the executor worker must be able to import this package. Workers of
+    a ``session.get_spark`` session fork from a daemon that has already
+    imported it; workers under Spark's default daemon see it only when
+    the driver's working directory is the repo (local-mode workers
+    inherit the CWD), NOT for a driver that only put the repo on its own
+    ``sys.path`` (the driver contract's vanilla session run from
+    another directory): every gated kernel would die with
+    ModuleNotFoundError. ``addPyFile`` is Spark's standard fix: the zip
+    lands on every worker's ``sys.path`` for all subsequently launched
+    tasks. One ``.py``-only zip per process (zipimport cannot use
+    ``__pycache__``), one addPyFile per SparkContext, a no-op flag check
+    afterwards."""
     sc = spark.sparkContext
     if getattr(sc, "_utdwh_pkg_shipped", False):
         return
@@ -217,7 +221,7 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    _ensure_worker_importable(spark)
+    ensure_worker_imports(spark)
     if name == "events":
         return _events(spark, sf_dir)
     return _read_parquet(spark, f"{sf_dir}/{name}.parquet")

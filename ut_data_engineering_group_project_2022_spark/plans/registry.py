@@ -17,37 +17,16 @@ Cross-engine determinism rules every query here follows:
 
 from __future__ import annotations
 
-import shutil
-import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass, field
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ut_data_engineering_group_project_2022_spark.catalog import ensure_worker_imports
 
 SparkBuilder = Callable[[SparkSession, str], DataFrame]
 
 _REGISTRY: dict[str, "QuerySpec"] = {}
-
-
-def ensure_worker_imports(spark: SparkSession) -> None:
-    """Ship this package to Spark's Python workers via addPyFile.
-
-    Queries that cross the Python boundary (mapInPandas, pandas UDFs)
-    serialize closures referencing this package by module name; workers
-    spawned by a driver whose cwd is outside the repo cannot import it
-    otherwise. Idempotent per SparkContext."""
-    sc = spark.sparkContext
-    if getattr(sc, "_utde_pkg_shipped", False):
-        return
-    pkg_dir = Path(__file__).resolve().parents[1]
-    staging = Path(tempfile.mkdtemp(prefix="utde_pkg_"))
-    zip_base = staging / "ut_data_engineering_group_project_2022_spark_pkg"
-    archive = shutil.make_archive(
-        str(zip_base), "zip", root_dir=pkg_dir.parent, base_dir=pkg_dir.name
-    )
-    sc.addPyFile(archive)
-    sc._utde_pkg_shipped = True
 
 
 @dataclass(frozen=True)

@@ -10,7 +10,15 @@ from __future__ import annotations
 
 import os
 
+import pyspark
 from pyspark.sql import SparkSession
+
+from ut_data_engineering_group_project_2022_spark import worker_daemon
+
+#: Directory that holds this package (the executor PYTHONPATH entry).
+_PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+#: Directory that holds the driver's pyspark (normally site-packages).
+_PYSPARK_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(pyspark.__file__)))
 
 
 def default_parallelism() -> int:
@@ -24,6 +32,18 @@ def get_spark(app_name: str = "ut-dwh-spark", cpus: int | None = None) -> SparkS
     default: at local scale 200 partitions of a 60 K-row shuffle is pure
     scheduling overhead, while on a production cluster this knob is
     expected to be overridden (or left to AQE coalescing, which is on).
+
+    Python workers fork from a warm daemon (``worker_daemon``), not from
+    Spark's default one. Spark starts its daemon with its source-only
+    ``pyspark.zip`` first on the path, so each session spends ~1 s
+    compiling pyspark before the first Python task, and every forked
+    worker imports the Arrow stack and this package again. The warm
+    daemon takes pyspark from the driver's byte-compiled installation
+    and imports the Arrow stack and every kernel module once per
+    session. It is local-only: its settings name the driver's own
+    directories, which only ``local[N]`` workers share. Sessions built
+    elsewhere keep Spark's default daemon and rely on the ``addPyFile``
+    shipper (``catalog.ensure_worker_imports``).
     """
     n = cpus or default_parallelism()
     builder = (
@@ -39,6 +59,9 @@ def get_spark(app_name: str = "ut-dwh-spark", cpus: int | None = None) -> SparkS
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.python.daemon.module", worker_daemon.__name__)
+        .config("spark.executorEnv.PYTHONPATH", _PKG_PARENT)
+        .config(f"spark.executorEnv.{worker_daemon.PYSPARK_DIR_ENV}", _PYSPARK_PARENT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
