@@ -3,6 +3,8 @@ data/mock_main.csv / mock_authors.csv analogs)."""
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 
 from ut_data_engineering_group_project_2022_spark.schemas import (
@@ -139,3 +141,40 @@ def staging_batch_chained(
         spark.createDataFrame(main, STAGING_MAIN),
         spark.createDataFrame(authors, STAGING_AUTHORS),
     )
+
+
+def enriched_record(i, title, authors, year=2007, subject="Mathematics", cites=3):
+    """One ENRICHED_RECORD row as a JSON-ready dict: paper ``i`` with
+    ``authors`` as (given, family, affiliation or None) triples."""
+    return {
+        "id": f"070{i}.000{i}",
+        "title": title,
+        "doi": f"10.1/{i}",
+        "latest_version": "v1",
+        "published-year": year,
+        "published-month": 1,
+        "type": "journal-article",
+        "publisher": "Elsevier",
+        "container-title": "J. Comb.",
+        "subject": subject,
+        "is-referenced-by-count": cites,
+        "reference": [],
+        "authors_merged": [
+            {
+                "family": fam,
+                "given": giv,
+                "gender": "unknown",
+                "full_name": f"{giv} {fam}",
+                "affiliation": [aff] if aff else [],
+            }
+            for giv, fam, aff in authors
+        ],
+    }
+
+
+def write_json_lines(directory, name, records):
+    """Write ``records`` as one JSON-lines file ``directory/name``."""
+    directory.mkdir(parents=True, exist_ok=True)
+    with open(directory / name, "w") as f:
+        for r in records:
+            f.write(json.dumps(r) + "\n")

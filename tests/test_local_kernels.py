@@ -399,31 +399,162 @@ def test_star_local_kernel_matches_distributed_bench_config(
     assert local == dist
 
 
+def _fits_spy(monkeypatch):
+    """Record, for every ``fits`` call the star loader makes, whether it
+    was handed a frame to count (True) or only a no-job proof (False)."""
+    from ut_data_engineering_group_project_2022_spark.operators import star
+
+    calls = []
+    real = star.fits
+
+    def spy(ceiling, rows=None, df=None):
+        calls.append(df is not None)
+        return real(ceiling, rows, df)
+
+    monkeypatch.setattr(star, "fits", spy)
+    return calls
+
+
 def test_star_load_footer_bound_proves_small_only(spark, monkeypatch):
-    """r20 (VERDICT item 6): n_staging_rows is an upper BOUND — a bound
-    under the gate takes the kernel with zero count jobs, a bound OVER
-    the gate must fall back to the bounded count (and still take the
-    kernel when the data is actually small), and a non-bootstrap state
-    ignores the bound entirely."""
-    from tests.fixtures import staging_batch_1
+    """n_staging_rows is an upper BOUND, summed with the state's recorded
+    row count. A sum under the gate takes the kernel straight from the
+    staging frames. A sum over the gate must not force the distributed
+    path: the batch is staged and the gate reads its observed row count,
+    with no count job, and still takes the kernel when the data is small.
+    This holds for the bootstrap state (recorded count 0) and for a
+    kernel-built state alike; a state with no recorded count ignores the
+    bound and runs the bounded count."""
+    import copy
+
+    from tests.fixtures import staging_batch_1, staging_batch_2
     from ut_data_engineering_group_project_2022_spark.operators import star
 
     m, a = staging_batch_1(spark)
-    base = _star_tables(star.load_batch(star.empty_star(spark), m, a))
-    # proven-small bound: same result
-    bounded = _star_tables(
-        star.load_batch(star.empty_star(spark), m, a, n_staging_rows=50)
+    m2, a2 = staging_batch_2(spark)
+    first = star.load_batch(star.empty_star(spark), m, a)
+    base = _star_tables(first)
+    base2 = _star_tables(star.load_batch(first, m2, a2))
+    calls = _fits_spy(monkeypatch)
+    for bound in (50, star.LOCAL_STAR_ROWS + 1):
+        calls.clear()
+        got = star.load_batch(star.empty_star(spark), m, a, n_staging_rows=bound)
+        assert _star_tables(got) == base, bound
+        got2 = star.load_batch(first, m2, a2, n_staging_rows=bound)
+        assert star._kernel_output(got2) is not None, bound
+        assert _star_tables(got2) == base2, bound
+        assert True not in calls, (bound, calls)  # no count job
+    unknown = copy.copy(first)
+    unknown.dim_year = first.dim_year.select("*")
+    calls.clear()
+    got = star.load_batch(unknown, m2, a2, n_staging_rows=50)
+    assert calls == [True]
+    assert _star_tables(got) == base2
+
+
+def _loaded_total(state):
+    """The actual row total of a state's eight non-year tables."""
+    from dataclasses import fields
+
+    return sum(
+        getattr(state, f.name).count()
+        for f in fields(state)
+        if f.name != "dim_year"
     )
-    assert bounded == base
-    # over-estimate: can never force the distributed path — the count
-    # fallback still proves the batch small and takes the kernel
-    over = _star_tables(
-        star.load_batch(
-            star.empty_star(spark), m, a,
-            n_staging_rows=star.LOCAL_STAR_ROWS + 1,
-        )
+
+
+def test_star_recorded_count_is_a_sound_proof(spark, monkeypatch):
+    """The row count a state records is a sound no-job proof for the
+    kernel gate. After each chained kernel batch and each distributed
+    (LOCAL_STAR_ROWS = -1) batch, a known count equals the actual row
+    total of the eight non-year tables. Once a table is replaced, the
+    count reads None, and load_batch runs the bounded count instead of
+    trusting it, with bit-equal tables."""
+    import copy
+
+    from tests.fixtures import staging_batch_chained
+    from ut_data_engineering_group_project_2022_spark.operators import star
+
+    calls = _fits_spy(monkeypatch)
+    ceiling = star.LOCAL_STAR_ROWS
+    kernel = dist = star.empty_star(spark)
+    assert star._held(kernel)[0] == 0
+    for b in range(3):
+        m, a = staging_batch_chained(spark, b)
+        swapped = copy.copy(kernel)
+        swapped.paper_fact = kernel.paper_fact.select("*")
+        assert star._held(swapped) == (None, None)
+        calls.clear()
+        via_count = star.load_batch(swapped, m, a)
+        assert calls[0] is True, calls
+        calls.clear()
+        kernel = star.load_batch(kernel, m, a)
+        assert True not in calls, calls
+        assert star._held(kernel)[0] == _loaded_total(kernel)
+        assert _star_tables(via_count) == _star_tables(kernel)
+        monkeypatch.setattr(star, "LOCAL_STAR_ROWS", -1)
+        dist = star.load_batch(dist, m, a)
+        monkeypatch.setattr(star, "LOCAL_STAR_ROWS", ceiling)
+        known = star._held(dist)[0]
+        assert known is None or known == _loaded_total(dist)
+
+
+def test_star_kernel_batch_job_counts(spark, tmp_path):
+    """Deterministic job counts on the kernel path, for JSON batches read
+    as the ETL reads them (read_json -> prepare_for_staging). With the
+    state's row count recorded, a batch whose staging bound proves the
+    gate runs one job (the kernel). Without a bound it runs two: one
+    checkpoint that stages the batch and observes its row count, then the
+    kernel over the staged rows. The same holds for every chained
+    incremental batch: no count job ever runs."""
+    from tests.fixtures import enriched_record, write_json_lines
+    from ut_data_engineering_group_project_2022_spark.operators import star
+    from ut_data_engineering_group_project_2022_spark.operators.transforms import (
+        prepare_for_staging,
     )
-    assert over == base
+    from ut_data_engineering_group_project_2022_spark.schemas import ENRICHED_RECORD
+    from ut_data_engineering_group_project_2022_spark.sources.connectors import (
+        read_json,
+    )
+
+    batches = [
+        [
+            enriched_record(1, "Graph Colouring",
+                            [("John", "Smith", "MIT"), ("Anna", "Doe", None)]),
+            enriched_record(2, "Quantum Things", [("Anna", "Doe", "ETH")],
+                            subject="Physics", cites=10),
+        ],
+        [
+            enriched_record(2, "Quantum Things", [("Anna", "Doe", "ETH")],
+                            subject="Physics", cites=10),
+            enriched_record(3, "Cells", [("Bob", "Jones", "KCL")], year=2008,
+                            subject="Biology"),
+        ],
+    ]
+    staged = []
+    for i, records in enumerate(batches):
+        write_json_lines(tmp_path / f"batch{i}", "part.json", records)
+        staged.append(prepare_for_staging(
+            read_json(spark, str(tmp_path / f"batch{i}"), ENRICHED_RECORD)
+        ))
+    sc = spark.sparkContext
+
+    def jobs(state, batch, **kw):
+        group = f"star-job-count-{len(seen)}"
+        sc.setJobGroup(group, "load_batch")
+        try:
+            out = star.load_batch(state, *batch, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        seen.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        assert star._kernel_output(out) is not None
+        return out
+
+    seen = []
+    jobs(star.empty_star(spark), staged[0], n_staging_rows=50)
+    state = jobs(star.empty_star(spark), staged[0])
+    for batch in (staged[1], staged[1], staged[0]):
+        state = jobs(state, batch)
+    assert seen == [1, 2, 2, 2, 2]
 
 
 def test_star_local_kernel_matches_distributed_chained_batches(

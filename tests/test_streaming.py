@@ -4,47 +4,12 @@ record-level idempotency on replay."""
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import functions as F
 
+from tests.fixtures import enriched_record, write_json_lines
 from ut_data_engineering_group_project_2022_spark.streaming.incremental import (
     IncrementalStarLoader,
 )
-
-
-def _rec(i, title, authors, year=2007, subject="Mathematics", cites=3):
-    return {
-        "id": f"070{i}.000{i}",
-        "title": title,
-        "doi": f"10.1/{i}",
-        "latest_version": "v1",
-        "published-year": year,
-        "published-month": 1,
-        "type": "journal-article",
-        "publisher": "Elsevier",
-        "container-title": "J. Comb.",
-        "subject": subject,
-        "is-referenced-by-count": cites,
-        "reference": [],
-        "authors_merged": [
-            {
-                "family": fam,
-                "given": giv,
-                "gender": "unknown",
-                "full_name": f"{giv} {fam}",
-                "affiliation": [aff] if aff else [],
-            }
-            for giv, fam, aff in authors
-        ],
-    }
-
-
-def _write_batch(directory, name, records):
-    directory.mkdir(parents=True, exist_ok=True)
-    with open(directory / name, "w") as f:
-        for r in records:
-            f.write(json.dumps(r) + "\n")
 
 
 def test_incremental_stream(spark, tmp_path):
@@ -52,12 +17,12 @@ def test_incremental_stream(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     dead = str(tmp_path / "dead")
 
-    _write_batch(
+    write_json_lines(
         inbox,
         "batch1.json",
         [
-            _rec(1, "Graph Colouring", [("John", "Smith", "MIT"), ("Anna", "Doe", None)]),
-            _rec(2, "Quantum Things", [("Anna", "Doe", "ETH")], subject="Physics", cites=10),
+            enriched_record(1, "Graph Colouring", [("John", "Smith", "MIT"), ("Anna", "Doe", None)]),
+            enriched_record(2, "Quantum Things", [("Anna", "Doe", "ETH")], subject="Physics", cites=10),
         ],
     )
     loader = IncrementalStarLoader(spark, dead_letter_dir=dead)
@@ -67,13 +32,13 @@ def test_incremental_stream(spark, tmp_path):
     assert state.dim_author.count() == 2  # John Smith, Anna Doe
 
     # batch 2: one replayed record (T6), one new paper, one overlong title (T5)
-    _write_batch(
+    write_json_lines(
         inbox,
         "batch2.json",
         [
-            _rec(2, "Quantum Things", [("Anna", "Doe", "ETH")], subject="Physics", cites=10),
-            _rec(3, "Cells", [("Bob", "Jones", "KCL")], year=2008, subject="Biology"),
-            _rec(4, "T" * 1001, [("Kim", "Lee", None)]),
+            enriched_record(2, "Quantum Things", [("Anna", "Doe", "ETH")], subject="Physics", cites=10),
+            enriched_record(3, "Cells", [("Bob", "Jones", "KCL")], year=2008, subject="Biology"),
+            enriched_record(4, "T" * 1001, [("Kim", "Lee", None)]),
         ],
     )
     state = loader.run_available(str(inbox), ckpt)
@@ -102,12 +67,12 @@ def test_stream_restart_resumes_from_checkpoint(spark, tmp_path):
     inbox = tmp_path / "inbox"
     ckpt = str(tmp_path / "ckpt")
 
-    _write_batch(inbox, "b1.json", [_rec(1, "One", [("A", "B", None)])])
+    write_json_lines(inbox, "b1.json", [enriched_record(1, "One", [("A", "B", None)])])
     first = IncrementalStarLoader(spark)
     state1 = first.run_available(str(inbox), ckpt)
     assert state1.paper_fact.count() == 1
 
-    _write_batch(inbox, "b2.json", [_rec(2, "Two", [("C", "D", None)])])
+    write_json_lines(inbox, "b2.json", [enriched_record(2, "Two", [("C", "D", None)])])
     resumed = IncrementalStarLoader(spark, initial_state=state1)
     state2 = resumed.run_available(str(inbox), ckpt)
     assert resumed.batches_processed == 1  # only b2.json

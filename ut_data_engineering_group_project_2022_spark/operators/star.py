@@ -39,7 +39,7 @@ from __future__ import annotations
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, fields
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ut_data_engineering_group_project_2022_spark.functions.metrics import (
@@ -118,19 +118,14 @@ class StarState:
         The nine tables are independent at this point (anything shared
         upstream — dims, fact_new — is already checkpointed by
         load_batch), so the eager checkpoints run as concurrent jobs on
-        the shared scheduler instead of nine serial driver syncs. At
-        sf0.1 this is a wash (the largest frame dominates either way,
-        measured r8); the win is cluster-shaped — concurrent jobs keep
-        otherwise-idle executors busy.
+        the shared scheduler instead of nine serial driver syncs.
 
         A table that is already a checkpoint result, bare or sliced by
         filters/projections (e.g. dim_year, or a dim the batch added no
-        row to), is passed through unchanged instead of burning a no-op
-        Spark job per table per batch (r9). Every other table is
-        coalesced to at most ``defaultParallelism`` partitions before
-        its checkpoint, so the ``old ∪ new`` unions of chained batches
-        keep a bounded layout instead of summing their inputs'
-        partitions batch after batch."""
+        row to), is passed through unchanged: no no-op job per table.
+        Every other table is coalesced to at most ``defaultParallelism``
+        partitions before its checkpoint, so the ``old ∪ new`` unions of
+        chained batches keep a bounded layout."""
         n = self.dim_year.sparkSession.sparkContext.defaultParallelism
         with ThreadPoolExecutor(max_workers=len(fields(self))) as pool:
             futs = {}
@@ -162,6 +157,32 @@ class StarState:
         )
 
 
+def _record(
+    state: StarState, loaded_rows: int, out: DataFrame | None = None
+) -> StarState:
+    """Attach what the builder of ``state`` knows of it: the exact row
+    total of its eight batch-loaded (non-year) tables and, for a kernel-
+    built state, the checkpointed output its tables are slices of. Both
+    hold only while every table is still the frame recorded here (a
+    plain attribute, not a dataclass field)."""
+    frames = {f.name: getattr(state, f.name) for f in fields(state)}
+    state._held = (loaded_rows, out, frames)
+    return state
+
+
+def _held(state: StarState) -> tuple[int | None, DataFrame | None]:
+    """``(loaded_rows, kernel output)`` recorded by :func:`_record`, or
+    ``(None, None)`` when nothing was recorded or a table has since been
+    replaced. An unknown count is None, never 0."""
+    held = getattr(state, "_held", None)
+    if held is None:
+        return None, None
+    loaded_rows, out, frames = held
+    if all(getattr(state, name) is df for name, df in frames.items()):
+        return loaded_rows, out
+    return None, None
+
+
 def empty_star(spark: SparkSession) -> StarState:
     """DDL bootstrap (SURVEY S10; ref tables.py:18-32): empty tables plus
     the pre-populated year dimension 1940-2030 + sentinel 0
@@ -170,40 +191,38 @@ def empty_star(spark: SparkSession) -> StarState:
         F.col("id").cast("int").alias("year_key"),
         F.col("id").cast("int").alias("publication_year"),
     )
-    # JVM-native 1-row sentinel, NOT createDataFrame([(0, 0)]): the
-    # local-list form parallelizes into defaultParallelism Python-pickled
-    # partitions, and every later evaluation of dim_year pays one Python
-    # worker roundtrip PER partition to deserialize them — measured r19
-    # at ~0.5 s per scan (and ~5 s under coalesce(1), where the 32
-    # roundtrips serialize into one task).
+    # JVM-native 1-row sentinel: a createDataFrame([(0, 0)]) list would
+    # parallelize into Python-pickled partitions, and every scan of
+    # dim_year would pay one Python worker roundtrip per partition.
     sentinel = spark.range(1).select(
         F.lit(0).cast("int").alias("year_key"),
         F.lit(0).cast("int").alias("publication_year"),
     )
 
-    # ONE shared 0-partition RDD for all eight empties (r20): emptyRDD()
-    # is a py4j round trip, and the eight empties are schema-only — the
-    # RDD is identical.
+    # One shared zero-partition RDD for the eight schema-only empties: a
+    # createDataFrame([], schema) list would carry defaultParallelism
+    # empty partitions, and every scan of a first-batch table would
+    # schedule that many no-op tasks.
     erdd = spark.sparkContext.emptyRDD()
 
     def empty(schema):
-        # NOT createDataFrame([], schema): that parallelizes the empty
-        # list into defaultParallelism EMPTY partitions, so every scan
-        # of a first-batch dim schedules 32 no-op tasks — measured r9 at
-        # ~2.8 s per anti-join against one (vs 0.37 s against a
-        # 0-partition empty). emptyRDD carries zero partitions.
         return spark.createDataFrame(erdd, schema)
 
-    return StarState(
-        dim_year=dim_year.unionByName(sentinel),
-        dim_domain=empty(DIM_DOMAIN),
-        dim_type=empty(DIM_TYPE),
-        dim_venue=empty(DIM_VENUE),
-        dim_author=empty(DIM_AUTHOR),
-        dim_affiliation=empty(DIM_AFFILIATION),
-        paper_fact=empty(PAPER_FACT),
-        bridge_author_group=empty(BRIDGE_AUTHOR_GROUP),
-        bridge_affiliation_group=empty(BRIDGE_AFFILIATION_GROUP),
+    # The eight batch-loaded tables are known to hold 0 rows, so the
+    # first load_batch gates on the staging rows alone.
+    return _record(
+        StarState(
+            dim_year=dim_year.unionByName(sentinel),
+            dim_domain=empty(DIM_DOMAIN),
+            dim_type=empty(DIM_TYPE),
+            dim_venue=empty(DIM_VENUE),
+            dim_author=empty(DIM_AUTHOR),
+            dim_affiliation=empty(DIM_AFFILIATION),
+            paper_fact=empty(PAPER_FACT),
+            bridge_author_group=empty(BRIDGE_AUTHOR_GROUP),
+            bridge_affiliation_group=empty(BRIDGE_AFFILIATION_GROUP),
+        ),
+        loaded_rows=0,
     )
 
 
@@ -934,125 +953,127 @@ def _star_kernel(batches):
     )
 
 
+#: Imputed staging column -> its slot in the kernel's tagged input. Main
+#: rows are tagged ``m`` and author rows ``a``; each list is in the order
+#: ``_star_kernel`` reads the slots, and the distributed loader reads
+#: the columns back from them.
+_STAGING_SLOTS = {
+    "m": [
+        ("i1", "published-year"),
+        ("i2", "is-referenced-by-count"),
+        ("s1", "id"),
+        ("s2", "subject"),
+        ("s3", "type"),
+        ("s4", "container-title"),
+        ("s5", "publisher"),
+        ("s6", "doi"),
+        ("s7", "title"),
+        ("s8", "versions"),
+    ],
+    "a": [("s1", "id"), ("s2", "full_name"), ("s3", "affiliation"), ("s4", "gender")],
+}
+
+
+def _pack(df: DataFrame, tag: str, slots) -> DataFrame:
+    """``df``'s rows in the kernel's tagged input superset: ``tbl`` =
+    ``tag``, each table column in its slot, every other slot NULL. One
+    ``selectExpr`` (one py4j call), not one Column per slot."""
+    filled = {slot: f"`{col}`" for slot, col in slots}
+    return df.selectExpr(
+        f"'{tag}' AS tbl",
+        *[
+            f"CAST({filled.get(c, 'NULL')} AS {'int' if c[0] == 'i' else 'string'})"
+            f" AS {c}"
+            for c in _STAR_ICOLS + _STAR_IN_SCOLS
+        ],
+    )
+
+
+def _unpack(packed: DataFrame, tag: str, slots) -> DataFrame:
+    """The rows of ``packed`` tagged ``tag``, under their table columns:
+    one filter and one projection over the packed frame."""
+    return packed.where(f"tbl = '{tag}'").selectExpr(
+        *[f"{slot} AS `{col}`" for slot, col in slots]
+    )
+
+
+def _checkpoint_counting(df: DataFrame, counted: Column) -> tuple[DataFrame, int]:
+    """``df`` eagerly checkpointed, and the number of its rows for which
+    the column ``counted`` is not NULL, observed by the checkpoint's own
+    job: exact, with no count job of its own."""
+    obs = Observation()
+    out = df.observe(obs, F.count(counted).alias("n")).localCheckpoint(eager=True)
+    return out, obs.get["n"]
+
+
 def _kernel_output(state: StarState) -> DataFrame | None:
     """The checkpointed kernel output a state's tables are slices of, or
     None when the state was not built by :func:`_star_local` (or a table
     has since been replaced)."""
-    held = getattr(state, "_kernel_out", None)
-    if held is None:
-        return None
-    out, frames = held
-    if all(getattr(state, name) is df for name, df in frames.items()):
-        return out
-    return None
+    return _held(state)[1]
 
 
-def _kernel_rows(state: StarState) -> tuple[DataFrame, DataFrame | None]:
-    """``(rows, loaded)``: the state's existing rows packed into the
-    kernel's input superset, and the frame of its batch-loaded rows that
-    the gate counts (None when every batch-loaded table is empty).
+def _kernel_rows(state: StarState, loaded_rows: int | None) -> DataFrame:
+    """The state's existing rows packed into the kernel's input superset.
 
     A state the kernel built is read as its ONE checkpointed output, not
     as nine tag-filters. Any other state is packed table by table, and a
-    table with zero partitions (``empty_star``'s ``emptyRDD`` empties)
-    is left out of the plan: such a frame carries Spark's default
-    size estimate (~8 EiB), which the kernel's output would otherwise
-    inherit and turn every later star read's broadcast join into a
-    sort-merge join. Left out this way, the output's size estimate grows
-    only by each batch's own input."""
-    extra = [F.lit(None).cast("string").alias(c) for c in _STAR_IN_SCOLS[3:]]
+    batch-loaded table that is known empty (``loaded_rows == 0``) or has
+    zero partitions (``empty_star``'s ``emptyRDD`` empties) is left out
+    of the plan: such a frame carries Spark's default size estimate
+    (~8 EiB), which the kernel's output would otherwise inherit and turn
+    every later star read's broadcast join into a sort-merge join. Left
+    out this way, the output's size estimate grows only by each batch's
+    own input."""
     out = _kernel_output(state)
     if out is not None:
-        rows = out.select("tbl", *_STAR_ICOLS, *_STAR_SCOLS, *extra)
-        return rows, out.filter(F.col("tbl") != "dim_year")
-    packed = []
-    loaded = None
+        extra = [f"CAST(NULL AS string) AS {c}" for c in _STAR_IN_SCOLS[3:]]
+        return out.selectExpr("tbl", *_STAR_ICOLS, *_STAR_SCOLS, *extra)
+    rows = None
     for name, slots in _STAR_SLICES.items():
         df = getattr(state, name)
-        if name != "dim_year" and df.rdd.getNumPartitions() == 0:
+        if name != "dim_year" and (
+            loaded_rows == 0 or df.rdd.getNumPartitions() == 0
+        ):
             continue
-        filled = dict(slots)
-        packed.append(
-            df.select(
-                F.lit(name).alias("tbl"),
-                *[
-                    (F.col(filled[c]) if c in filled else F.lit(None))
-                    .cast("int" if c[0] == "i" else "string")
-                    .alias(c)
-                    for c in _STAR_ICOLS + _STAR_IN_SCOLS
-                ],
-            )
-        )
-        if name != "dim_year":
-            one = df.select(F.lit(1).alias("one"))
-            loaded = one if loaded is None else loaded.unionAll(one)
-    rows = packed[0]
-    for p in packed[1:]:
-        rows = rows.unionAll(p)
-    return rows, loaded
+        packed = _pack(df, name, slots)
+        rows = packed if rows is None else rows.unionAll(packed)
+    return rows
 
 
-def _star_local(
-    rows: DataFrame, staging_main: DataFrame, staging_authors: DataFrame
-) -> StarState:
+def _tag_batch(staging_main: DataFrame, staging_authors: DataFrame) -> DataFrame:
+    """The imputed staging batch in the kernel's tagged input superset."""
+    return _pack(impute_sentinels(staging_main), "m", _STAGING_SLOTS["m"]).unionAll(
+        _pack(impute_author_sentinels(staging_authors), "a", _STAGING_SLOTS["a"])
+    )
+
+
+def _star_local(rows: DataFrame, batch: DataFrame) -> StarState:
     """Single-task execution of one whole micro-batch of the star load,
-    for a state plus staging batch known to fit one executor
-    (``<= LOCAL_STAR_ROWS`` combined rows — gated by :func:`load_batch`).
-    ``rows`` is the existing state packed by :func:`_kernel_rows`. One
-    Spark job computes the new dim keys, facts, bridges and the touched
-    authors' h/g in memory, replacing the distributed batch whose cost at
-    this size is pure job dispatch (~65 driver jobs per incremental
-    batch for under 1 s of real work). Above the gate the distributed
-    loader runs unchanged — the 100 TB path is untouched.
+    for a state plus staging batch proven to fit one executor (gated by
+    :func:`load_batch`). ``rows`` is the existing state packed by
+    :func:`_kernel_rows`; ``batch`` is the tagged staging batch
+    (:func:`_tag_batch`), lazy or already staged. One Spark job computes
+    the new dim keys, facts, bridges and the touched authors' h/g in
+    memory; above the gate the distributed loader runs instead.
 
     The returned tables are tag-filters over ONE eagerly checkpointed
     superset frame: depth-1 lineage, one partition per table,
     deterministic and trivially cheap to re-evaluate — the same contract
-    ``materialize()`` provides. The frame is kept on the state (a plain
-    attribute, not a dataclass field) so the next batch reads it once."""
-    e = F.lit(None).cast("string")
-    ni = F.lit(None).cast("int")
-    main = impute_sentinels(staging_main)
-    authors = impute_author_sentinels(staging_authors)
-    m = main.select(
-        F.lit("m").alias("tbl"),
-        F.col("published-year").cast("int").alias("i1"),
-        F.col("is-referenced-by-count").cast("int").alias("i2"),
-        *[ni.alias(c) for c in _STAR_ICOLS[2:]],
-        F.col("id").alias("s1"),
-        F.col("subject").alias("s2"),
-        F.col("type").alias("s3"),
-        F.col("container-title").alias("s4"),
-        F.col("publisher").alias("s5"),
-        F.col("doi").alias("s6"),
-        F.col("title").alias("s7"),
-        F.col("versions").alias("s8"),
-    )
-    a = authors.select(
-        F.lit("a").alias("tbl"),
-        *[ni.alias(c) for c in _STAR_ICOLS],
-        F.col("id").alias("s1"),
-        F.col("full_name").alias("s2"),
-        F.col("affiliation").alias("s3"),
-        F.col("gender").alias("s4"),
-        *[e.alias(c) for c in _STAR_IN_SCOLS[4:]],
-    )
-    out = (
-        rows.unionByName(m)
-        .unionByName(a)
+    ``materialize()`` provides. The same job observes the frame's
+    batch-loaded row count; both are recorded on the state
+    (:func:`_record`), so the next batch reads the frame once and gates
+    with no count job."""
+    out, loaded_rows = _checkpoint_counting(
+        rows.unionByName(batch)
         .coalesce(1)
-        .mapInArrow(_star_kernel, _STAR_OUT_SCHEMA)
-        .localCheckpoint(eager=True)
+        .mapInArrow(_star_kernel, _STAR_OUT_SCHEMA),
+        F.when(F.col("tbl") != "dim_year", 1),
     )
-    frames = {
-        name: out.filter(F.col("tbl") == name).select(
-            *[F.col(slot).alias(col) for slot, col in slots]
-        )
-        for name, slots in _STAR_SLICES.items()
-    }
-    state = StarState(**frames)
-    state._kernel_out = (out, frames)
-    return state
+    state = StarState(
+        **{name: _unpack(out, name, slots) for name, slots in _STAR_SLICES.items()}
+    )
+    return _record(state, loaded_rows, out)
 
 
 def load_batch(
@@ -1066,45 +1087,52 @@ def load_batch(
     Idempotent (T6): re-running the same batch is a no-op because every
     insert is anti-joined on its natural key first.
 
-    Scale check (r11, local[32], dense_ids key path): a 100x staging
-    batch (500k papers, ~786k distinct authors) bulk-loads in 19.7 s —
-    slightly FASTER than the r9 window-form's ~21 s, because at this
-    size the per-tag single-partition sort the window form paid
-    outweighs dense_ids' two fixed-cost checkpoints — vs ~8 s for the
-    sf0.1 batch (job-count fixed costs amortize into real work). A
-    10%-novel incremental batch of 100k papers on top takes 10.8 s, and
-    surrogate keys stay dense (max == count == countDistinct) at 819k
-    author-dim rows and 550k fact rows.
+    Size gate: when the state's batch-loaded rows plus the staging rows
+    fit ``LOCAL_STAR_ROWS``, the whole batch runs as one single-task job
+    (:func:`_star_local`), on any state. The state's count is known with
+    no job when its builder recorded it (:func:`empty_star`, the kernel);
+    ``n_staging_rows`` is an optional caller-supplied UPPER BOUND on the
+    combined staging rows (e.g. a parquet footer count of the staging
+    source times its max fan-out). The gate takes the first proof that
+    applies:
+
+      1. a known state count plus a bound whose sum fits: the kernel
+         reads the staging frames directly (one job);
+      2. a known state count otherwise: the imputed batch is staged once
+         in the kernel's input shape by a checkpoint whose job observes
+         its row count, and the gate sums the two exact counts; the
+         kernel reads the staged rows (two jobs);
+      3. an unknown state count (a state built by the distributed
+         loader or ``StarState.load``, or with a table replaced since):
+         one bounded count over state and staging rows decides.
+
+    An observed count can only over-count (a retried stage), which errs
+    toward the distributed branch. Above the gate the distributed loader
+    reads its imputed main and authors as slices of the staged batch.
     """
-    # Size gate: when the state's batch-loaded rows plus the staging rows
-    # fit LOCAL_STAR_ROWS, the whole batch runs as one single-task job
-    # (_star_local) on any state — bootstrap or incremental.
-    # ``n_staging_rows`` is an optional caller-supplied UPPER BOUND on
-    # combined staging rows (e.g. a parquet footer count of the staging
-    # source times its max fan-out); on an empty state it proves
-    # smallness with no job, otherwise one bounded count over state and
-    # staging rows decides.
-    rows, loaded = _kernel_rows(state)
-    ones = staging_main.select(F.lit(1).alias("one")).unionAll(
-        staging_authors.select(F.lit(1).alias("one"))
-    )
-    if loaded is not None:
-        ones = ones.unionAll(loaded.select(F.lit(1).alias("one")))
-    if fits(LOCAL_STAR_ROWS, n_staging_rows if loaded is None else None, ones):
-        return _star_local(rows, staging_main, staging_authors)
-    # The two staging checkpoints are independent — run them as
-    # concurrent jobs (r9: they were two serial driver syncs).
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_main = pool.submit(
-            lambda: impute_sentinels(staging_main).localCheckpoint(eager=True)
+    batch = _tag_batch(staging_main, staging_authors)
+    loaded_rows = _held(state)[0]
+    if loaded_rows is None:
+        one = F.lit(1).alias("one")
+        ones = batch.select(one)
+        for name in _STAR_SLICES:
+            if name != "dim_year":
+                ones = ones.unionAll(getattr(state, name).select(one))
+        small = fits(LOCAL_STAR_ROWS, df=ones)
+    else:
+        small = fits(
+            LOCAL_STAR_ROWS,
+            None if n_staging_rows is None else loaded_rows + n_staging_rows,
         )
-        f_auth = pool.submit(
-            lambda: impute_author_sentinels(staging_authors).localCheckpoint(
-                eager=True
-            )
+    if not small:
+        batch, batch_rows = _checkpoint_counting(batch, F.lit(1))
+        small = loaded_rows is not None and fits(
+            LOCAL_STAR_ROWS, loaded_rows + batch_rows
         )
-        main = f_main.result()
-        authors = f_auth.result()
+    if small:
+        return _star_local(_kernel_rows(state, loaded_rows), batch)
+    main = _unpack(batch, "m", _STAGING_SLOTS["m"])
+    authors = _unpack(batch, "a", _STAGING_SLOTS["a"])
 
     ckpt = lambda df: df.localCheckpoint(eager=True)  # noqa: E731
 
@@ -1180,12 +1208,10 @@ def load_batch(
 
     # -- bridges (J6 propagation + J3 lookup + J5; ref pop_DWH.py:235-261) -
     # One checkpointed (author x new-fact x both-dim-lookups) frame feeds
-    # BOTH bridges and the metric refresh: the r8 form computed the
-    # authors-x-fact join once per bridge AND re-ran the whole bridge
-    # plan inside materialize's dim_author job (the bridge union feeds
-    # refresh_metrics) — three evaluations of the batch's one fact-sized
-    # join. The lookups stay lossless inner joins: every full_name and
-    # affiliation was just upserted into its dim above.
+    # BOTH bridges and the metric refresh, so the batch's one fact-sized
+    # join is evaluated once, not once per consumer. The lookups stay
+    # lossless inner joins: every full_name and affiliation was just
+    # upserted into its dim above.
     author_rows = ckpt(
         authors.join(
             fact_new.select(

@@ -132,14 +132,14 @@ def _star_views(spark: SparkSession, sf_dir: str) -> None:
     state = _STATE_CACHE.get(key)
     if state is None:
         main, authors = synthetic_staging(spark, sf_dir)
-        # r20 (VERDICT item 6): the staging batch is synthesized from
-        # `documents` with a fan-out of exactly 1 main row + at most 3
-        # author rows per doc (explode over doc_id % 3 + 1), so
-        # 4 x the parquet footer row count BOUNDS the combined staging
-        # rows — the loader's gate count job disappears when the footer
-        # proves the batch small. A missing footer falls back to the
-        # bounded count inside load_batch (prove-small-only, never
-        # forces the distributed path).
+        # The staging batch is synthesized from `documents` with a
+        # fan-out of exactly 1 main row + at most 3 author rows per doc
+        # (explode over doc_id % 3 + 1), so 4 x the parquet footer row
+        # count BOUNDS the combined staging rows: when it proves the
+        # batch small, the load is one kernel job. A missing footer, or
+        # one over the gate, makes load_batch stage the batch and gate on
+        # its observed row count (prove-small-only, never forces the
+        # distributed path).
         n_docs = catalog_row_count(sf_dir, "documents")
         state = star.load_batch(
             star.empty_star(spark),
