@@ -1,9 +1,9 @@
 """Size-gated single-task kernels: local path == distributed path.
 
 Small inputs run whole executions of louvain, connected_components and
-pagerank (``graph._local``: one mapInArrow task behind an edge or pair
-feed), kcenter_greedy (one mapInPandas task) and the other gated rows
-as single-task kernels: one Spark job instead of a per-round job chain
+pagerank (behind an edge or pair feed), kcenter_greedy and the other
+gated rows as single-task kernels (``operators.single_task``: one
+mapInArrow task): one Spark job instead of a per-round job chain
 (guide §1.2). Every kernel sits behind ``operators.fits``. These tests
 force the distributed branch (a gate's ceiling set to -1, so no input
 fits) and pin it bit-equal to the default local branch on the same
@@ -684,6 +684,41 @@ def test_knn_local_kernels_match_distributed_bench_config(spark, monkeypatch):
     assert local == dist
 
 
+def test_knn_local_kernels_keep_an_int_id_type(spark, monkeypatch):
+    """An ``int`` id column: the knn kernels declare the caller's id
+    type for ``query_id``/``neighbor_id`` and emit it, so both branches
+    of knn_bruteforce, knn_pq and knn_pq_rerank return the same rows
+    under the same schema."""
+    from ut_data_engineering_group_project_2022_spark.catalog import table
+
+    emb = table(spark, SF_DIR, "embeddings").withColumn(
+        "vec_id", F.col("vec_id").cast("int")
+    )
+    q = emb.filter(F.col("vec_id") < 10)
+    c = emb.filter(F.col("vec_id") >= 10)
+
+    def run():
+        dfs = [
+            similarity.knn_bruteforce(q, c, k=5),
+            similarity.knn_pq(emb, k=5, m=16),
+            similarity.knn_pq_rerank(emb, k=5, shortlist=100, m=16),
+        ]
+        return [
+            (
+                [(f.name, f.dataType) for f in df.schema],
+                sorted(map(tuple, df.collect())),
+            )
+            for df in dfs
+        ]
+
+    local = run()
+    monkeypatch.setattr(similarity, "LOCAL_KNN_ROWS", -1)
+    dist = run()
+    assert local == dist
+    assert all(s[0][1].simpleString() == "int" for s, _ in local)
+    assert all(rows for _, rows in local)
+
+
 def test_global_dense_rank_gate_matches_two_phase_bench_config(
     spark, monkeypatch
 ):
@@ -1017,6 +1052,100 @@ def test_fits_proves_from_rows_or_one_bounded_count(spark):
     assert not fits(-1, df=spark.range(0)) and not fits(-1, 0)
 
 
+def test_single_task_runner_contract(spark):
+    """``operators.single_task``: an empty input skips the body and
+    yields zero rows under the declared schema; None is NULL in every
+    column type, NaN stays NaN, an int64 numpy column is cast to an
+    ``int`` field and a value it cannot hold fails the task; several
+    input batches reach the body as one single-chunk table, in order."""
+    import numpy as np
+
+    from ut_data_engineering_group_project_2022_spark.operators import single_task
+
+    def never(t):
+        raise AssertionError("body ran on an empty input")
+
+    empty = single_task(spark.range(0), never, "a bigint, b string")
+    assert empty.collect() == []
+    assert empty.schema.simpleString() == "struct<a:bigint,b:string>"
+
+    def typed(t):
+        return (
+            [7, None],
+            np.array([2**31 - 1, -(2**31)], np.int64),
+            [True, None],
+            ["x", None],
+            [None, 1.5],
+            np.array([np.nan, 0.25]),
+            [None, None],
+        )
+
+    out = single_task(
+        spark.range(1),
+        typed,
+        "a bigint, b int, c boolean, d string, e double, f double, g int",
+    ).collect()
+    assert [tuple(r)[:5] + tuple(r)[6:] for r in out] == [
+        (7, 2**31 - 1, True, "x", None, None),
+        (None, -(2**31), None, None, 1.5, None),
+    ]
+    assert np.isnan(out[0].f) and out[1].f == 0.25
+
+    def wide(t):
+        return (np.array([2**31], np.int64),)
+
+    with pytest.raises(Exception, match="not in range"):
+        single_task(spark.range(1), wide, "a int").collect()
+
+    def seen(t):
+        return t.column("id"), [t.column("id").num_chunks] * t.num_rows
+
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
+    try:
+        rows = single_task(
+            spark.range(0, 11, 1, 3), seen, "id bigint, chunks int"
+        ).collect()
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    assert [tuple(r) for r in rows] == [(i, 1) for i in range(11)]
+
+
+def test_single_task_is_the_only_coalesce_1():
+    """Source guard: the operator modules hold exactly one
+    ``.coalesce(1)`` and every ``mapInArrow`` call, all inside
+    ``operators.single_task``; the ``mapInPandas`` calls left are the
+    distributed stages of ``stats`` and ``multimodal``."""
+    import ast
+
+    from ut_data_engineering_group_project_2022_spark import operators
+
+    found = {"coalesce": [], "mapInArrow": [], "mapInPandas": []}
+    for path in sorted((REPO / operators.__name__.replace(".", "/")).glob("*.py")):
+        tree = ast.parse(path.read_text())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            for node in ast.walk(fn):
+                if not (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in found
+                ):
+                    continue
+                if node.func.attr == "coalesce" and not (
+                    len(node.args) == 1
+                    and isinstance(node.args[0], ast.Constant)
+                    and node.args[0].value == 1
+                ):
+                    continue
+                found[node.func.attr].append((path.stem, fn.name))
+    # nested defs are walked from each enclosing def too: dedupe
+    found = {k: sorted(set(v)) for k, v in found.items()}
+    assert found["coalesce"] == [("__init__", "single_task")]
+    assert found["mapInArrow"] == [("__init__", "single_task")]
+    assert {m for m, _ in found["mapInPandas"]} == {"stats", "multimodal"}
+
+
 def _spy_fits(monkeypatch) -> list:
     """Replace every module attribute ``fits`` that is ``operators.fits``
     with a spy; returns the list of results it records. The operator
@@ -1062,6 +1191,8 @@ def test_gated_row_branches_agree(spark, monkeypatch, name):
     on_df = build(spark, SF_DIR)
     on = _rows_hex(on_df)
     assert any(proven), "gates on: no kernel gate proved its input small"
+    plan = on_df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan, plan
     proven.clear()
     saved = bd.disable_kernels()
     try:

@@ -298,11 +298,11 @@ def test_covariance_partials_aggregate_before_shuffle(spark, monkeypatch):
     plan = _plan(get_query("llm_embedding_covariance").spark(spark, SF_DIR))
     assert "partial_sum" in plan, plan
     assert "SortMergeJoin" not in plan, plan
-    # and the DEFAULT (gated) plan is the kernel: single MapInPandas,
+    # and the DEFAULT (gated) plan is the kernel: single MapInArrow,
     # zero Exchange
     monkeypatch.undo()
     gated = _plan(get_query("llm_embedding_covariance").spark(spark, SF_DIR))
-    assert "MapInPandas" in gated and "Exchange" not in gated, gated
+    assert "MapInArrow" in gated and "Exchange" not in gated, gated
 
 
 # -- Registry-wide global-window audit ------------------------------------

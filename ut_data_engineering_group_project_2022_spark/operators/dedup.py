@@ -23,7 +23,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ut_data_engineering_group_project_2022_spark.operators import fits
+from ut_data_engineering_group_project_2022_spark.operators import (
+    column_list,
+    fits,
+    single_task,
+)
 from ut_data_engineering_group_project_2022_spark.functions.text import (
     HASH_P,
     md5_int60,
@@ -165,11 +169,12 @@ def lsh_candidate_pairs(
     )
 
 
-#: Row ceiling for the single-task text-dedup kernels (r19): below it a
+#: Row ceiling for the single-task text-dedup kernels: below it a
 #: corpus's whole shingle->minhash->band->verify pipeline is job-
 #: dispatch-bound (13-18 Spark jobs of tens-of-ms stages at sf0.1), so
-#: the full pass runs inside ONE mapInPandas task; above it the
-#: banded/bucketed distributed plans (the 100 TB shapes) are unchanged.
+#: the full pass runs inside ONE task (``operators.single_task``);
+#: above it the banded/bucketed distributed plans (the 100 TB shapes)
+#: are unchanged.
 #: 20k docs bounds the kernel at ~2M shingle hashes (~1-2 s one core).
 LOCAL_DEDUP_DOCS = 20_000
 
@@ -255,14 +260,9 @@ def _minhash_lsh_local(docs: DataFrame, k: int) -> DataFrame:
     sf0.001/0.01/0.1 by tests/test_local_kernels.py."""
     idt = docs.schema["doc_id"].dataType.simpleString()
 
-    def kernel(batches):
-        import pandas as pd
-
-        ids, sets = [], []
-        for pdf in batches:
-            for i, t in zip(pdf["doc_id"], pdf["text"]):
-                ids.append(int(i))
-                sets.append(_shingle_set_py(t, k))
+    def body(t):
+        ids = column_list(t, "doc_id")
+        sets = [_shingle_set_py(x, k) for x in column_list(t, "text")]
         keep_ids, M = _minhash_sigs_np(ids, sets, N_PERM)
         pairs = set()
         for members in _band_buckets(keep_ids, M, N_PERM, BAND_ROWS).values():
@@ -280,18 +280,12 @@ def _minhash_lsh_local(docs: DataFrame, k: int) -> DataFrame:
             da.append(a)
             db.append(b)
             jac.append(float(inter) / union)
-        yield pd.DataFrame(
-            {
-                "doc_a": pd.array(da, dtype="Int64"),
-                "doc_b": pd.array(db, dtype="Int64"),
-                "jaccard": pd.array(jac, dtype="float64"),
-            }
-        )
+        return da, db, jac
 
-    return (
-        docs.select("doc_id", "text")
-        .coalesce(1)
-        .mapInPandas(kernel, f"doc_a {idt}, doc_b {idt}, jaccard double")
+    return single_task(
+        docs.select("doc_id", "text"),
+        body,
+        f"doc_a {idt}, doc_b {idt}, jaccard double",
     )
 
 
@@ -305,18 +299,19 @@ def _incremental_neardup_local(
     docs included, as the distributed left join does)."""
     idt = tagged.schema["doc_id"].dataType.simpleString()
 
-    def kernel(batches):
-        import pandas as pd
-
+    def body(t):
         b_ids, b_sets, c_ids, c_sets = [], [], [], []
-        for pdf in batches:
-            for i, t, fb in zip(pdf["doc_id"], pdf["text"], pdf["__is_batch"]):
-                if fb:
-                    b_ids.append(int(i))
-                    b_sets.append(_shingle_set_py(t, k))
-                else:
-                    c_ids.append(int(i))
-                    c_sets.append(_shingle_set_py(t, k))
+        for i, x, fb in zip(
+            column_list(t, "doc_id"),
+            column_list(t, "text"),
+            column_list(t, "__is_batch"),
+        ):
+            if fb:
+                b_ids.append(i)
+                b_sets.append(_shingle_set_py(x, k))
+            else:
+                c_ids.append(i)
+                c_sets.append(_shingle_set_py(x, k))
         kb, Mb = _minhash_sigs_np(b_ids, b_sets, N_PERM)
         kc, Mc = _minhash_sigs_np(c_ids, c_sets, N_PERM)
         c_buckets = _band_buckets(kc, Mc, N_PERM, BAND_ROWS)
@@ -350,17 +345,11 @@ def _incremental_neardup_local(
             out_dup.append(hit is not None)
             out_n.append(hit[0] if hit else 0)
             out_m.append(hit[1] if hit else None)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.array(out_id, dtype="Int64"),
-                "is_dup": pd.array(out_dup, dtype="boolean"),
-                "n_matches": pd.array(out_n, dtype="Int64"),
-                "match_id": pd.array(out_m, dtype="Int64"),
-            }
-        )
+        return out_id, out_dup, out_n, out_m
 
-    return tagged.coalesce(1).mapInPandas(
-        kernel,
+    return single_task(
+        tagged,
+        body,
         f"doc_id {idt}, is_dup boolean, n_matches bigint, match_id {idt}",
     )
 
@@ -384,17 +373,12 @@ def curation_local(docs: DataFrame) -> DataFrame:
 
     idt = docs.schema["doc_id"].dataType.simpleString()
 
-    def kernel(batches):
+    def body(tab):
         import hashlib
         import re
 
-        import pandas as pd
-
-        ids, texts = [], []
-        for pdf in batches:
-            for i, t in zip(pdf["doc_id"], pdf["text"]):
-                ids.append(int(i))
-                texts.append(t)
+        ids = column_list(tab, "doc_id")
+        texts = column_list(tab, "text")
         # -- exact-dup groups: md5 keeper = min doc_id; NULL text joins
         # nothing (NULL hash never equi-matches) --------------------------
         md5s = [
@@ -475,22 +459,12 @@ def curation_local(docs: DataFrame) -> DataFrame:
             out_v.append(v)
             out_k.append(keep)
             out_q.append(q)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.array(out_id, dtype="Int64"),
-                "verdict": pd.array(out_v, dtype="string"),
-                "keep": pd.array(out_k, dtype="boolean"),
-                "quality_score": pd.array(out_q, dtype="float64"),
-            }
-        )
+        return out_id, out_v, out_k, out_q
 
-    return (
-        docs.select("doc_id", "text")
-        .coalesce(1)
-        .mapInPandas(
-            kernel,
-            f"doc_id {idt}, verdict string, keep boolean, quality_score double",
-        )
+    return single_task(
+        docs.select("doc_id", "text"),
+        body,
+        f"doc_id {idt}, verdict string, keep boolean, quality_score double",
     )
 
 

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ut_data_engineering_group_project_2022_spark.catalog import table
-from ut_data_engineering_group_project_2022_spark.operators import fits
+from ut_data_engineering_group_project_2022_spark.operators import fits, single_task
 
 
 def customer_supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -172,7 +172,11 @@ def _factorize_sorted_arrow(arrays):
 
 
 def edge_feed(mirror: bool = False):
-    """Kernel feed (see :func:`_local`) for string-id edge rows, read by
+    """Kernel feed for string-id edge rows: turns the input table of a
+    single-task kernel (:func:`operators.single_task`) into code arrays
+    ``(s, d, w, names)`` over a lexicographic code space, or None for an
+    empty graph, for the numpy body of :func:`pagerank_local`,
+    :func:`louvain_local` or :func:`cc_local`. Rows are read by
     POSITION: the two endpoints, then an optional integer weight
     (default 1). ``mirror=True`` means the rows are the DIRECTED list
     of an undirected graph: both orientations are added in memory (half
@@ -201,7 +205,7 @@ def edge_feed(mirror: bool = False):
 
 
 def pair_feed(weighted: bool = False, min_weight: int = 1):
-    """Kernel feed (see :func:`_local`) for the RAW ``(o_custkey,
+    """Kernel feed (see :func:`edge_feed`) for the RAW ``(o_custkey,
     l_suppkey)`` rows of :func:`customer_supplier_pairs`: the
     projection's groupBy runs in numpy (:func:`_pairs_dedup`), pairs
     seen fewer than ``min_weight`` times are dropped (the ``weight >=
@@ -224,31 +228,6 @@ def pair_feed(weighted: bool = False, min_weight: int = 1):
         return np.r_[s, d], np.r_[d, s], np.r_[w, w], names
 
     return feed
-
-
-def _local(df: DataFrame, feed, body, schema: str) -> DataFrame:
-    """The single-task runner behind every graph kernel: ``coalesce(1)``
-    funnels ``df`` into ONE ``mapInArrow`` task, ``feed`` turns its
-    rows into code arrays ``(s, d, w, names)`` over a lexicographic
-    code space (None for an empty graph), and ``body(s, d, w, names)``
-    returns the output columns in ``schema`` order. One Spark job then
-    replaces a distributed plan's per-round job chain, whose cost at
-    this size is job-dispatch latency (guide §1.2). Callers must have
-    proven the graph small (``LOCAL_MOVE_EDGES``); above that gate the
-    distributed plans run unchanged (the 100 TB path)."""
-    cols = [c.split()[0] for c in schema.split(",")]
-
-    def kernel(batches):
-        import pyarrow as pa
-
-        tabs = [pa.Table.from_batches([b]) for b in batches]
-        g = feed(pa.concat_tables(tabs)) if tabs else None
-        if g is not None:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c) for c in body(*g)], names=cols
-            )
-
-    return df.coalesce(1).mapInArrow(kernel, schema)
 
 
 def undirect(edges: DataFrame) -> DataFrame:
@@ -397,10 +376,9 @@ def _pagerank_np(s, d, n, iterations, damping):
 def pagerank_local(
     df: DataFrame, feed, iterations: int = 3, damping: float = 0.85
 ) -> DataFrame:
-    """Single-task PageRank (:func:`_local`) for a graph proven small.
-    The arithmetic mirrors :func:`pagerank` term for term: the same
-    ``(1-d)/n`` base, the same ``pr/d`` share and the same per-edge
-    contribution terms. The only freedom is the double-summation order
+    """Single-task PageRank for a graph proven small. The arithmetic
+    mirrors :func:`pagerank` term for term: the same ``(1-d)/n`` base,
+    the same ``pr/d`` share and the same per-edge contribution terms. The only freedom is the double-summation order
     inside a node's contribution sum, which the distributed aggregate
     does not pin either; the feeds fix it to the ``[fwd, rev]`` input
     order. The final ROUND(pr, 6) stays a Spark expression, so rounding
@@ -409,7 +387,9 @@ def pagerank_local(
     def body(s, d, w, names):
         return names, _pagerank_np(s, d, len(names), iterations, damping)
 
-    out = _local(df, feed, body, "node_id string, pr double")
+    out = single_task(
+        df, lambda t: (g := feed(t)) and body(*g), "node_id string, pr double"
+    )
     return out.select("node_id", F.round("pr", 6).alias("pagerank"))
 
 
@@ -713,10 +693,10 @@ def _hierarchy_np(s, d, w, names, rounds, levels):
 def louvain_local(
     df: DataFrame, feed, rounds: int = 4, levels: int = 2
 ) -> DataFrame:
-    """Single-task hierarchical Louvain (:func:`_local`) for a graph
-    proven small: every level's local-moving rounds AND contractions
-    run in memory, one Spark job instead of ``levels`` x (``rounds``
-    checkpoint jobs + contraction jobs). The feed's rows are summed per
+    """Single-task hierarchical Louvain for a graph proven small: every
+    level's local-moving rounds AND contractions run in memory, one
+    Spark job instead of ``levels`` x (``rounds`` checkpoint jobs +
+    contraction jobs). The feed's rows are summed per
     (src, dst), exactly like ``louvain_exact``'s loader. The int64
     kernel :func:`_hierarchy_np` runs unless ``2m`` exceeds
     ``_NP_TWO_M_MAX``, where its gain scores could overflow; then the
@@ -735,7 +715,11 @@ def louvain_local(
         total, cnames = _hierarchy_np(s, d, w, names, rounds, levels)
         return names, cnames[total]
 
-    return _local(df, feed, body, "node_id string, community string")
+    return single_task(
+        df,
+        lambda t: (g := feed(t)) and body(*g),
+        "node_id string, community string",
+    )
 
 
 def _louvain_moves(und_w: DataFrame, rounds: int) -> DataFrame:
@@ -1431,9 +1415,9 @@ def _cc_star_np(s, d, m, rounds):
 
 
 def cc_local(df: DataFrame, feed, rounds: int) -> DataFrame:
-    """Single-task connected components (:func:`_local`) for a graph
-    proven small: :func:`_cc_star_np` replays all ``rounds`` star pairs
-    and the root aggregate in one Spark job. A mirrored feed only
+    """Single-task connected components for a graph proven small:
+    :func:`_cc_star_np` replays all ``rounds`` star pairs and the root
+    aggregate in one Spark job. A mirrored feed only
     repeats edges, which no MIN aggregate sees, and every pair feed row
     is (c-node, s-node) with 'c' < 's', so the feeds need no
     least/greatest normalization. Returns (node_id, component)."""
@@ -1441,7 +1425,11 @@ def cc_local(df: DataFrame, feed, rounds: int) -> DataFrame:
     def body(s, d, w, names):
         return names, names[_cc_star_np(s, d, len(names), rounds)]
 
-    return _local(df, feed, body, "node_id string, component string")
+    return single_task(
+        df,
+        lambda t: (g := feed(t)) and body(*g),
+        "node_id string, component string",
+    )
 
 
 def connected_components(

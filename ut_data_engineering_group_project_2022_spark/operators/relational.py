@@ -1,5 +1,5 @@
 """Size-gated single-task kernels for the TPC-H-shaped bench rows
-(r19, guide §1.2/§4.2).
+(guide §1.2/§4.2).
 
 At bench scale every TPC-H row is dominated by a SINGLE-TASK parquet
 scan (the test files are one row group — unsplittable, like a gzip
@@ -7,9 +7,10 @@ input) followed by per-row java BigDecimal arithmetic: tpch_q1's
 exact-decimal aggregate measured 1.23 s warm while the identical scan
 with plain double sums took 0.30 s — ~0.9 s of the row is
 precision-38 multiply/add on one core. Below ``LOCAL_TPCH_ROWS`` the
-whole aggregate runs as ONE ``mapInArrow`` task doing the SAME math
-on integers (every decimal here is a scaled integer, and Python ints
-never overflow), which is both exact and ~10x faster than BigDecimal.
+whole aggregate runs as ONE task (``operators.single_task``) doing
+the SAME math on integers (every decimal here is a scaled integer,
+and Python ints never overflow), which is both exact and ~10x faster
+than BigDecimal.
 Above the gate the distributed plans are byte-unchanged — at 100 TB
 the scan splits normally and the decimal aggregate parallelizes, so
 the kernels never fire there.
@@ -21,7 +22,7 @@ Exactness argument, used by every helper below:
   through ``BigDecimal.valueOf`` = ``Double.toString``); python's
   ``repr`` produces the same shortest form, so
   ``Decimal(repr(x)).quantize(1e-4, HALF_UP)`` is bit-identical
-  (the same equivalence the r19 knn kernels pinned for ROUND).
+  (the same equivalence the knn kernels rely on for ROUND).
 * The vectorized fast path (:func:`_dec4_scaled`) avoids per-row
   Decimal objects when it can PROVE equality: if
   ``rint(x * 1e4) / 1e4 == x`` (both IEEE ops correctly rounded),
@@ -45,15 +46,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ut_data_engineering_group_project_2022_spark.operators import single_task
+
 #: Fact-row ceiling for the single-task TPC-H kernels. 5M rows bounds
 #: the Arrow transfer at ~200 MB and the kernel at well under a second
 #: of integer numpy; the gates read the parquet footer row count (zero
 #: jobs), so the 100 TB path takes the distributed plan for free.
 LOCAL_TPCH_ROWS = 5_000_000
 
-#: Proven-safe input magnitude bounds for :func:`tpch_q1_local` (r20,
-#: r19 ADVICE): the kernel's ``ext_i * (10^4 - dis_i)`` product is
-#: numpy int64 and decimal(18,4) in-type magnitudes (|x| up to ~1e14)
+#: Proven-safe input magnitude bounds for :func:`tpch_q1_local`: the
+#: kernel's ``ext_i * (10^4 - dis_i)`` product is numpy int64, and
+#: decimal(18,4) in-type magnitudes (|x| up to ~1e14)
 #: can silently wrap it, while the distributed decimal plan stays exact
 #: there. Within these bounds (checked against parquet footer column
 #: stats by the gate, and re-proven on the actual scaled ints inside
@@ -139,7 +142,7 @@ def _group_sums(order, bounds, scaled, null_mask):
 def tpch_q1_local(filtered_li: DataFrame) -> DataFrame:
     """Single-task TPC-H Q1 aggregate over the already-filtered
     lineitem scan (the shipdate predicate stays a Spark filter so it
-    keeps pushing down to parquet). One mapInArrow task replaces the
+    keeps pushing down to parquet). One task replaces the
     two-stage decimal hash aggregate; all money math is scaled-integer
     (exactness: module docstring); groups come back sorted by
     (l_returnflag, l_linestatus) — python str sort == Spark UTF8
@@ -147,17 +150,10 @@ def tpch_q1_local(filtered_li: DataFrame) -> DataFrame:
     gate guards (non-null group keys; at least one non-null measure
     per group), like the knn kernels assume the embedding contract."""
 
-    def kernel(batches):
+    def body(t):
         import pyarrow as pa
         import numpy as np
 
-        tabs = [pa.Table.from_batches([b]) for b in batches]
-        if not tabs:
-            return
-        t = pa.concat_tables(tabs).combine_chunks()
-        n = t.num_rows
-        if n == 0:
-            return
         # dictionary-encode the group keys Arrow-side: integer codes +
         # a handful of distinct strings, instead of materializing 2n
         # python string objects (the same factorization trick the
@@ -183,7 +179,7 @@ def tpch_q1_local(filtered_li: DataFrame) -> DataFrame:
         ext_i, ext_null = _dec_scaled(ext, ext_ok, 4)
         dis_i, dis_null = _dec_scaled(dis, dis_ok, 4)
         tax_i, tax_null = _dec_scaled(tax, tax_ok, 4)
-        # r20 guard (r19 ADVICE): the multiplies below are int64 and
+        # Magnitude guard: the multiplies below are int64 and
         # would silently wrap at in-type decimal(18,4) magnitudes (and
         # past the distributed plan's (9,4)/(28,8) cast headroom the
         # two paths diverge via overflow-to-NULL). The gate proves the
@@ -235,11 +231,6 @@ def tpch_q1_local(filtered_li: DataFrame) -> DataFrame:
         sums_ch_lo = _group_sums(order, bounds, ch_lo, ch_null)
         counts = np.diff(np.r_[bounds, len(order)])
 
-        names = [
-            "l_returnflag", "l_linestatus", "sum_qty", "sum_base_price",
-            "sum_disc_price", "sum_charge", "avg_qty", "avg_price",
-            "avg_disc", "count_order",
-        ]
         rows = []
         for gi, gc in enumerate(group_codes):
             key_rf = str(rf_u[gc // len(ls_u)])
@@ -260,34 +251,25 @@ def tpch_q1_local(filtered_li: DataFrame) -> DataFrame:
                 cnt,
             ))
         rows.sort(key=lambda r: (r[0], r[1]))
-        cols = list(zip(*rows))
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(cols[0], pa.string()), pa.array(cols[1], pa.string())]
-            + [pa.array(cols[i], pa.float64()) for i in range(2, 9)]
-            + [pa.array(cols[9], pa.int64())],
-            names,
-        )
+        return list(zip(*rows))
 
-    return (
+    return single_task(
         filtered_li.select(
             "l_returnflag", "l_linestatus", "l_quantity",
             "l_extendedprice", "l_discount", "l_tax",
-        )
-        .coalesce(1)
-        .mapInArrow(
-            kernel,
-            "l_returnflag string, l_linestatus string, sum_qty double, "
-            "sum_base_price double, sum_disc_price double, "
-            "sum_charge double, avg_qty double, avg_price double, "
-            "avg_disc double, count_order bigint",
-        )
+        ),
+        body,
+        "l_returnflag string, l_linestatus string, sum_qty double, "
+        "sum_base_price double, sum_disc_price double, "
+        "sum_charge double, avg_qty double, avg_price double, "
+        "avg_disc double, count_order bigint",
     )
 
 
 def lineitem_magnitudes_safe(sf_dir: str, cols=None) -> bool:
     """Prove the Q1_SAFE_ABS magnitude bounds for lineitem money columns
-    from parquet footer statistics — zero Spark jobs (r20, shared by the
-    q1 and bi-suppliers kernels). Missing stats, NaN/Inf bounds, or
+    from parquet footer statistics — zero Spark jobs (shared by the q1
+    and bi-suppliers kernels). Missing stats, NaN/Inf bounds, or
     out-of-range values fail the proof (callers take the exact
     distributed decimal plan)."""
     from ut_data_engineering_group_project_2022_spark.catalog import (
@@ -313,8 +295,8 @@ def grouped_measure_rank_local(
     value_cols: tuple,
     out_col: str,
 ) -> DataFrame:
-    """Single-task tail shared by the bi_rank_* rows (r20): one
-    mapInArrow task replaces the grouped decimal/count aggregate (and
+    """Single-task tail shared by the bi_rank_* rows: one task
+    replaces the grouped decimal/count aggregate (and
     its exchange) plus the gated global_dense_rank window. ``feed`` is
     the broadcast-join output projected to (key, name, *value_cols);
     the kernel groups by the (key, name) PAIR (never assumes dim-key
@@ -340,34 +322,11 @@ def grouped_measure_rank_local(
     tests/test_local_kernels.py at the bench SFs + synthetics."""
     out_type = "bigint" if measure == "count_nonnull" else "double"
 
-    def kernel(batches):
+    def body(t):
         import numpy as np
         import pyarrow as pa
 
-        pa_out = pa.int64() if measure == "count_nonnull" else pa.float64()
-        schema = pa.schema(
-            [
-                pa.field(key_col, pa.int64()),
-                pa.field(name_col, pa.string()),
-                pa.field(out_col, pa_out),
-                pa.field("rnk", pa.int32()),
-            ]
-        )
-
-        def empty():
-            return pa.RecordBatch.from_arrays(
-                [pa.array([], f.type) for f in schema], schema=schema
-            )
-
-        tabs = [pa.Table.from_batches([b]) for b in batches]
-        if not tabs:
-            yield empty()
-            return
-        t = pa.concat_tables(tabs).combine_chunks()
         n = t.num_rows
-        if n == 0:
-            yield empty()
-            return
 
         def col(name):
             c = t.column(name).chunk(0)
@@ -447,22 +406,13 @@ def grouped_measure_rank_local(
             else k + 1
             for v in values
         ]
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(g_sk.tolist(), pa.int64()),
-                nm_names.take(
-                    pa.array(
-                        [int(x) if x >= 0 else None for x in g_nm],
-                        pa.int64(),
-                    )
-                ),
-                pa.array(values, pa_out),
-                pa.array(rnk, pa.int32()),
-            ],
-            schema=schema,
+        names = nm_names.take(
+            pa.array([int(x) if x >= 0 else None for x in g_nm], pa.int64())
         )
+        return g_sk, names, values, rnk
 
-    return feed.coalesce(1).mapInArrow(
-        kernel,
+    return single_task(
+        feed,
+        body,
         f"{key_col} bigint, {name_col} string, {out_col} {out_type}, rnk int",
     )

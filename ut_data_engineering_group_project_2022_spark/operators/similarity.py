@@ -16,7 +16,7 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ut_data_engineering_group_project_2022_spark.functions.text import md5_int60
-from ut_data_engineering_group_project_2022_spark.operators import fits
+from ut_data_engineering_group_project_2022_spark.operators import fits, single_task
 
 
 def as_double(col: Column | str) -> Column:
@@ -442,7 +442,7 @@ def _semdedup_local(
     the fixed-point integer k-means (same md5 seeds, exact int64
     distances, argmin ties to the lower cluster id, sum-div-count
     centroid updates) plus the within-cluster cosine pair scan, all in
-    one ``mapInPandas`` job. Float parity with the distributed plan:
+    one single-task job. Float parity with the distributed plan:
     every dot product is the LEFT FOLD the Spark/DuckDB expression
     computes, reproduced exactly by ``np.cumsum`` over the elementwise
     products (verified 0 mismatches in 40k pairs — ``np.dot`` diverges
@@ -460,38 +460,20 @@ def _semdedup_local(
     )
     idt = emb.schema[id_col].dataType.simpleString()
 
-    def kernel(batches):
+    def body(t):
         import hashlib
 
         import numpy as np
-        import pandas as pd
 
-        ids_l: list = []
-        xs_l: list = []
-        es_l: list = []
-        for pdf in batches:
-            ids_l.extend(int(i) for i in pdf["vec_id"])
-            xs_l.extend(np.asarray(a, dtype=np.int64) for a in pdf["x"])
-            es_l.extend(np.asarray(a, dtype=np.float64) for a in pdf["e"])
-        if not ids_l:
-            yield pd.DataFrame(
-                {
-                    "vec_id": pd.array([], dtype="Int64"),
-                    "cluster": pd.array([], dtype="Int32"),
-                    "keep": pd.array([], dtype="boolean"),
-                    "dup_of": pd.array([], dtype="Int64"),
-                }
-            )
-            return
-        ids = np.asarray(ids_l, dtype=np.int64)
-        X = np.stack(xs_l)
-        E = np.stack(es_l)
+        ids = t.column("vec_id").to_numpy(zero_copy_only=False).astype(np.int64)
+        X = _vec_matrix(t.column("x"), dtype="int64")
+        E = _vec_matrix(t.column("e"))
         n = len(ids)
         # seeds: k smallest salted md5 hashes, cluster ids in hash order
         h = np.asarray(
             [
                 int(hashlib.md5(f"seed|{i}".encode()).hexdigest()[:15], 16)
-                for i in ids_l
+                for i in ids.tolist()
             ],
             dtype=np.int64,
         )
@@ -536,20 +518,10 @@ def _semdedup_local(
                 hit = cos >= threshold
                 np.minimum.at(dup_of, bsl[hit], ids[asl[hit]])
         has_dup = dup_of != np.iinfo(np.int64).max
-        yield pd.DataFrame(
-            {
-                "vec_id": pd.array(ids, dtype="Int64"),
-                "cluster": pd.array(assign, dtype="Int32"),
-                "keep": pd.array(~has_dup, dtype="boolean"),
-                "dup_of": pd.array(
-                    [int(d) if f else None for d, f in zip(dup_of, has_dup)],
-                    dtype="Int64",
-                ),
-            }
-        )
+        return ids, assign, ~has_dup, np.where(has_dup, dup_of, None)
 
-    return v.coalesce(1).mapInPandas(
-        kernel, f"vec_id {idt}, cluster int, keep boolean, dup_of {idt}"
+    return single_task(
+        v, body, f"vec_id {idt}, cluster int, keep boolean, dup_of {idt}"
     )
 
 
@@ -575,7 +547,7 @@ def semdedup(
         return _semdedup_local(
             emb, k, iterations, threshold, scale, offset, id_col, vec_col
         )
-    # Distributed path — verbatim the pre-r19 plan (see llm_semdedup's
+    # Distributed path: the cluster-bounded pair join (see llm_semdedup's
     # registry doc for the scale adjudication).
     assign = (
         kmeans_fixed_point(
@@ -849,7 +821,7 @@ def knn_pq_rerank(
     )
 
 
-#: Size gates for the single-task knn kernels (r19, guide §1.2/§4.2).
+#: Size gates for the single-task knn kernels (guide §1.2/§4.2).
 #: The query ceiling bounds the exact-fold score matrix (queries x
 #: corpus doubles: 128 x 100k = ~100 MB, ~1.6G flops worst case); above
 #: either gate the distributed plans run unchanged (the 100 TB path).
@@ -857,12 +829,13 @@ LOCAL_KNN_QUERIES = 128
 LOCAL_KNN_ROWS = 100_000
 
 
-def _vec_matrix(col, dim=None, gate_msg=None):
-    """Arrow list column -> (n x d) float64 matrix. With ``gate_msg``
-    a NULL entry or a length != ``dim`` hard-fails the task with the
-    distributed plan's dim-gate message (same contract, same trigger
-    point: execution)."""
-    import numpy as np
+def _vec_matrix(col, dim=None, gate_msg=None, dtype="float64"):
+    """Arrow list column -> (n x d) ``dtype`` matrix, read as one flat
+    buffer (no per-row arrays). A NULL entry or a row whose length
+    differs from the others fails the task; with ``gate_msg`` it fails
+    with the distributed plan's dim-gate message when an entry is NULL
+    or its length is not ``dim`` (same contract, same trigger point:
+    execution)."""
     import pyarrow.compute as pc
 
     col = col.combine_chunks()
@@ -877,7 +850,9 @@ def _vec_matrix(col, dim=None, gate_msg=None):
                 bad = str(off[0])
         if bad is not None:
             raise ValueError(gate_msg + bad)
-    flat = col.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+    elif col.null_count or len(set(lengths.tolist())) > 1:
+        raise ValueError("vector column holds a NULL or a ragged row")
+    flat = col.flatten().to_numpy(zero_copy_only=False).astype(dtype)
     d = int(lengths[0]) if len(lengths) else 0
     return flat.reshape(len(col), d)
 
@@ -937,52 +912,30 @@ def _knn_bruteforce_local(
         )
     )
 
-    def kernel(batches):
+    def body(t):
         import numpy as np
-        import pyarrow as pa
 
-        tabs = [pa.Table.from_batches([b]) for b in batches]
-        out_schema = pa.schema(
-            [
-                pa.field("query_id", pa.int64()),
-                pa.field("neighbor_id", pa.int64()),
-                pa.field("score", pa.float64()),
-                pa.field("rn", pa.int32()),
-            ]
-        )
         qids_o, nids_o, scores_o, rns_o = [], [], [], []
-        if tabs:
-            t = pa.concat_tables(tabs)
-            is_q = t.column("is_q").to_numpy(zero_copy_only=False)
-            vids = t.column("vid").to_numpy(zero_copy_only=False).astype(
-                np.int64
-            )
-            V = _vec_matrix(t.column("v"))
-            qm = np.flatnonzero(is_q)
-            cm = np.flatnonzero(~is_q)
-            if len(qm) and len(cm):
-                scores = _fold_scores(V[qm], V[cm])
-                cids = vids[cm]
-                for qi, qid in enumerate(vids[qm]):
-                    row = scores[qi]
-                    order = np.lexsort((cids, -row))[:k]
-                    for rn, j in enumerate(order, start=1):
-                        qids_o.append(int(qid))
-                        nids_o.append(int(cids[j]))
-                        scores_o.append(_round_half_up6(float(row[j])))
-                        rns_o.append(rn)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(qids_o, pa.int64()),
-                pa.array(nids_o, pa.int64()),
-                pa.array(scores_o, pa.float64()),
-                pa.array(rns_o, pa.int32()),
-            ],
-            schema=out_schema,
-        )
+        is_q = t.column("is_q").to_numpy(zero_copy_only=False)
+        vids = t.column("vid").to_numpy(zero_copy_only=False).astype(np.int64)
+        V = _vec_matrix(t.column("v"))
+        qm = np.flatnonzero(is_q)
+        cm = np.flatnonzero(~is_q)
+        if len(qm) and len(cm):
+            scores = _fold_scores(V[qm], V[cm])
+            cids = vids[cm]
+            for qi, qid in enumerate(vids[qm]):
+                row = scores[qi]
+                order = np.lexsort((cids, -row))[:k]
+                for rn, j in enumerate(order, start=1):
+                    qids_o.append(int(qid))
+                    nids_o.append(int(cids[j]))
+                    scores_o.append(_round_half_up6(float(row[j])))
+                    rns_o.append(rn)
+        return qids_o, nids_o, scores_o, rns_o
 
-    return tagged.coalesce(1).mapInArrow(
-        kernel, f"query_id {idt}, neighbor_id {idt}, score double, rn int"
+    return single_task(
+        tagged, body, f"query_id {idt}, neighbor_id {idt}, score double, rn int"
     )
 
 
@@ -1014,88 +967,58 @@ def _knn_pq_local(
     out_t = "double" if rerank_k is not None else "bigint"
     score_col = "score" if rerank_k is not None else "dist2"
 
-    def kernel(batches):
+    def body(t):
         import numpy as np
-        import pyarrow as pa
 
-        tabs = [pa.Table.from_batches([b]) for b in batches]
-        out_schema = pa.schema(
-            [
-                pa.field("query_id", pa.int64()),
-                pa.field("neighbor_id", pa.int64()),
-                pa.field(
-                    score_col,
-                    pa.float64() if rerank_k is not None else pa.int64(),
-                ),
-                pa.field("rn", pa.int32()),
-            ]
-        )
         qids_o, nids_o, sc_o, rns_o = [], [], [], []
-        if tabs:
-            t = pa.concat_tables(tabs)
-            vids = t.column("vid").to_numpy(zero_copy_only=False).astype(
-                np.int64
-            )
-            V = _vec_matrix(t.column("v"), dim=dim, gate_msg=gate_msg)
-            X = np.floor(V * float(scale)).astype(np.int64)
-            cb_m = np.flatnonzero(vids < n_codes)
-            cb_m = cb_m[np.argsort(vids[cb_m], kind="stable")]
-            q_m = np.flatnonzero(vids < n_queries)
-            c_m = np.flatnonzero(vids >= n_queries)
-            if len(cb_m) and len(q_m) and len(c_m):
-                CB = X[cb_m].reshape(len(cb_m), m, sub_d)
-                XC = X[c_m].reshape(len(c_m), m, sub_d)
-                XQ = X[q_m].reshape(len(q_m), m, sub_d)
-                # encode: per (corpus row, subspace) the argmin code;
-                # codebook rows sorted by code id so first-min == lowest
-                codes = np.empty((len(c_m), m), np.int64)
-                lut = np.empty((len(q_m), m, len(cb_m)), np.int64)
-                for s in range(m):
-                    dc = XC[:, s, None, :] - CB[None, :, s, :]
-                    codes[:, s] = np.argmin(
-                        np.einsum("ijk,ijk->ij", dc, dc), axis=1
-                    )
-                    dq = XQ[:, s, None, :] - CB[None, :, s, :]
-                    lut[:, s, :] = np.einsum("ijk,ijk->ij", dq, dq)
-                adc = np.zeros((len(q_m), len(c_m)), np.int64)
-                for s in range(m):
-                    adc += lut[:, s, :][:, codes[:, s]]
-                cids = vids[c_m]
-                for qi, qrow in enumerate(q_m):
-                    qid = int(vids[qrow])
-                    order = np.lexsort((cids, adc[qi]))[:k]
-                    if rerank_k is None:
-                        for rn, j in enumerate(order, start=1):
-                            qids_o.append(qid)
-                            nids_o.append(int(cids[j]))
-                            sc_o.append(int(adc[qi, j]))
-                            rns_o.append(rn)
-                    else:
-                        cand = c_m[order]
-                        scores = _fold_scores(
-                            V[qrow : qrow + 1], V[cand]
-                        )[0]
-                        top = np.lexsort((vids[cand], -scores))[:rerank_k]
-                        for rn, j in enumerate(top, start=1):
-                            qids_o.append(qid)
-                            nids_o.append(int(vids[cand[j]]))
-                            sc_o.append(_round_half_up6(float(scores[j])))
-                            rns_o.append(rn)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(qids_o, pa.int64()),
-                pa.array(nids_o, pa.int64()),
-                pa.array(
-                    sc_o, pa.float64() if rerank_k is not None else pa.int64()
-                ),
-                pa.array(rns_o, pa.int32()),
-            ],
-            schema=out_schema,
-        )
+        vids = t.column("vid").to_numpy(zero_copy_only=False).astype(np.int64)
+        V = _vec_matrix(t.column("v"), dim=dim, gate_msg=gate_msg)
+        X = np.floor(V * float(scale)).astype(np.int64)
+        cb_m = np.flatnonzero(vids < n_codes)
+        cb_m = cb_m[np.argsort(vids[cb_m], kind="stable")]
+        q_m = np.flatnonzero(vids < n_queries)
+        c_m = np.flatnonzero(vids >= n_queries)
+        if len(cb_m) and len(q_m) and len(c_m):
+            CB = X[cb_m].reshape(len(cb_m), m, sub_d)
+            XC = X[c_m].reshape(len(c_m), m, sub_d)
+            XQ = X[q_m].reshape(len(q_m), m, sub_d)
+            # encode: per (corpus row, subspace) the argmin code;
+            # codebook rows sorted by code id so first-min == lowest
+            codes = np.empty((len(c_m), m), np.int64)
+            lut = np.empty((len(q_m), m, len(cb_m)), np.int64)
+            for s in range(m):
+                dc = XC[:, s, None, :] - CB[None, :, s, :]
+                codes[:, s] = np.argmin(
+                    np.einsum("ijk,ijk->ij", dc, dc), axis=1
+                )
+                dq = XQ[:, s, None, :] - CB[None, :, s, :]
+                lut[:, s, :] = np.einsum("ijk,ijk->ij", dq, dq)
+            adc = np.zeros((len(q_m), len(c_m)), np.int64)
+            for s in range(m):
+                adc += lut[:, s, :][:, codes[:, s]]
+            cids = vids[c_m]
+            for qi, qrow in enumerate(q_m):
+                qid = int(vids[qrow])
+                order = np.lexsort((cids, adc[qi]))[:k]
+                if rerank_k is None:
+                    for rn, j in enumerate(order, start=1):
+                        qids_o.append(qid)
+                        nids_o.append(int(cids[j]))
+                        sc_o.append(int(adc[qi, j]))
+                        rns_o.append(rn)
+                else:
+                    cand = c_m[order]
+                    scores = _fold_scores(V[qrow : qrow + 1], V[cand])[0]
+                    top = np.lexsort((vids[cand], -scores))[:rerank_k]
+                    for rn, j in enumerate(top, start=1):
+                        qids_o.append(qid)
+                        nids_o.append(int(vids[cand[j]]))
+                        sc_o.append(_round_half_up6(float(scores[j])))
+                        rns_o.append(rn)
+        return qids_o, nids_o, sc_o, rns_o
 
-    return v.coalesce(1).mapInArrow(
-        kernel,
-        f"query_id {idt}, neighbor_id {idt}, {score_col} {out_t}, rn int",
+    return single_task(
+        v, body, f"query_id {idt}, neighbor_id {idt}, {score_col} {out_t}, rn int"
     )
 
 
@@ -1118,54 +1041,43 @@ def _kcenter_local(v: DataFrame, k: int) -> DataFrame:
     round-trips whose cost at this size is job-dispatch latency
     (guide §1.2)."""
 
-    def kernel(batches):
+    def body(t):
         import hashlib
 
         import numpy as np
-        import pandas as pd
 
-        ids_l: list = []
-        xs_l: list = []
-        for pdf in batches:
-            ids_l.extend(int(i) for i in pdf["vec_id"])
-            xs_l.extend(np.asarray(x, dtype=np.int64) for x in pdf["x"])
         out: list[tuple[int, int, int]] = []
-        if ids_l:
-            ids = np.asarray(ids_l, dtype=np.int64)
-            X = np.stack(xs_l)
-            h = np.asarray(
-                [
-                    int(hashlib.md5(f"kc|{i}".encode()).hexdigest()[:15], 16)
-                    for i in ids_l
-                ],
-                dtype=np.int64,
-            )
-            # seed: smallest (h, vec_id) — ORDER BY h, vec_id LIMIT 1
-            s = int(np.lexsort((ids, h))[0])
-            out.append((0, int(ids[s]), 0))
-            alive = np.ones(len(ids), dtype=bool)
-            alive[s] = False
-            diff = X - X[s]
-            mind = np.einsum("ij,ij->i", diff, diff)
-            for r in range(1, k):
-                if not alive.any():
-                    break
-                # argmax mind, ties to the smallest vec_id (DESC mind,
-                # ASC vec_id LIMIT 1 over the not-picked pool)
-                mx = mind[alive].max()
-                cand = alive & (mind == mx)
-                far = int(np.flatnonzero(cand)[np.argmin(ids[cand])])
-                out.append((r, int(ids[far]), int(mind[far])))
-                alive[far] = False
-                diff = X - X[far]
-                mind = np.minimum(mind, np.einsum("ij,ij->i", diff, diff))
-        yield pd.DataFrame(
-            out, columns=["sel_order", "vec_id", "radius2"]
-        ).astype({"sel_order": "int32", "vec_id": "int64", "radius2": "int64"})
+        ids = t.column("vec_id").to_numpy(zero_copy_only=False)
+        X = _vec_matrix(t.column("x"), dtype="int64")
+        h = np.asarray(
+            [
+                int(hashlib.md5(f"kc|{i}".encode()).hexdigest()[:15], 16)
+                for i in ids.tolist()
+            ],
+            dtype=np.int64,
+        )
+        # seed: smallest (h, vec_id) — ORDER BY h, vec_id LIMIT 1
+        s = int(np.lexsort((ids, h))[0])
+        out.append((0, int(ids[s]), 0))
+        alive = np.ones(len(ids), dtype=bool)
+        alive[s] = False
+        diff = X - X[s]
+        mind = np.einsum("ij,ij->i", diff, diff)
+        for r in range(1, k):
+            if not alive.any():
+                break
+            # argmax mind, ties to the smallest vec_id (DESC mind,
+            # ASC vec_id LIMIT 1 over the not-picked pool)
+            mx = mind[alive].max()
+            cand = alive & (mind == mx)
+            far = int(np.flatnonzero(cand)[np.argmin(ids[cand])])
+            out.append((r, int(ids[far]), int(mind[far])))
+            alive[far] = False
+            diff = X - X[far]
+            mind = np.minimum(mind, np.einsum("ij,ij->i", diff, diff))
+        return list(zip(*out))
 
-    return v.coalesce(1).mapInPandas(
-        kernel, "sel_order INT, vec_id BIGINT, radius2 BIGINT"
-    )
+    return single_task(v, body, "sel_order INT, vec_id BIGINT, radius2 BIGINT")
 
 
 def kcenter_greedy(
@@ -1258,11 +1170,10 @@ def _mmr_rerank_local(
     vec_col: str,
 ) -> DataFrame:
     """Single-task MMR re-rank for a corpus known to fit one executor
-    (``<= LOCAL_KNN_ROWS`` rows — gated by :func:`mmr_rerank`, r20
-    VERDICT item 5). One mapInArrow job replaces the knn stage, the
-    pool checkpoint, and the k-round driver loop of
-    ``orderBy().limit(1).collect()`` round trips (each a full pool scan
-    — the exact shape kcenter_greedy shed in r19). Arithmetic mirrors
+    (``<= LOCAL_KNN_ROWS`` rows — gated by :func:`mmr_rerank`). One
+    Spark job replaces the knn stage, the pool checkpoint, and the
+    k-round driver loop of ``orderBy().limit(1).collect()`` round trips
+    (each a full pool scan). Arithmetic mirrors
     the distributed form term-for-term: the identical left-fold cosine
     (:func:`_fold_scores`), HALF_UP 6dp rounding before every max-fold,
     ``lam*rel - (1-lam)*maxs`` on the rounded inputs, (desc, asc id)
@@ -1272,76 +1183,43 @@ def _mmr_rerank_local(
     Equality is pinned by tests/test_local_kernels.py and the chained
     CTE oracle."""
 
-    def kernel(batches):
+    def body(t):
         import numpy as np
-        import pyarrow as pa
 
-        schema = pa.schema(
-            [
-                pa.field("sel_order", pa.int32()),
-                pa.field("vec_id", pa.int64()),
-                pa.field("relevance", pa.float64()),
-                pa.field("mmr", pa.float64()),
-            ]
-        )
         rows = []
-        tabs = [pa.Table.from_batches([b]) for b in batches]
-        if tabs:
-            t = pa.concat_tables(tabs)
-            vids = t.column("vid").to_numpy(zero_copy_only=False).astype(
-                np.int64
-            )
-            V = _vec_matrix(t.column("v"))
-            qm = np.flatnonzero(vids == query_vec_id)
-            cm = np.flatnonzero(vids > query_vec_id)
-            if len(qm) and len(cm):
-                # candidate stage == knn_bruteforce: top-`pool` by the
-                # UNROUNDED fold score (desc, asc id), rel = rounded
-                scores = _fold_scores(V[qm][:1], V[cm])[0]
-                cids = vids[cm]
-                order = np.lexsort((cids, -scores))[:pool]
-                ids = cids[order]
-                rel = np.array(
-                    [_round_half_up6(float(s)) for s in scores[order]]
-                )
-                X = V[cm][order]
-                alive = np.ones(len(ids), bool)
-                maxs = None
-                for r in range(k):
-                    if not alive.any():
-                        break
-                    mmr = (
-                        rel
-                        if r == 0
-                        else lam * rel - (1.0 - lam) * maxs
-                    )
-                    ai = np.flatnonzero(alive)
-                    pick = ai[np.lexsort((ids[ai], -mmr[ai]))[0]]
-                    rows.append(
-                        (r, int(ids[pick]), float(rel[pick]), float(mmr[pick]))
-                    )
-                    alive[pick] = False
-                    sims = _fold_scores(X[pick][None, :], X)[0]
-                    srnd = np.array(
-                        [_round_half_up6(float(s)) for s in sims]
-                    )
-                    maxs = srnd if maxs is None else np.maximum(maxs, srnd)
-        cols = list(zip(*rows)) if rows else ([], [], [], [])
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(list(cols[0]), pa.int32()),
-                pa.array(list(cols[1]), pa.int64()),
-                pa.array(list(cols[2]), pa.float64()),
-                pa.array(list(cols[3]), pa.float64()),
-            ],
-            schema=schema,
-        )
+        vids = t.column("vid").to_numpy(zero_copy_only=False).astype(np.int64)
+        V = _vec_matrix(t.column("v"))
+        qm = np.flatnonzero(vids == query_vec_id)
+        cm = np.flatnonzero(vids > query_vec_id)
+        if len(qm) and len(cm):
+            # candidate stage == knn_bruteforce: top-`pool` by the
+            # UNROUNDED fold score (desc, asc id), rel = rounded
+            scores = _fold_scores(V[qm][:1], V[cm])[0]
+            cids = vids[cm]
+            order = np.lexsort((cids, -scores))[:pool]
+            ids = cids[order]
+            rel = np.array([_round_half_up6(float(s)) for s in scores[order]])
+            X = V[cm][order]
+            alive = np.ones(len(ids), bool)
+            maxs = None
+            for r in range(k):
+                if not alive.any():
+                    break
+                mmr = rel if r == 0 else lam * rel - (1.0 - lam) * maxs
+                ai = np.flatnonzero(alive)
+                pick = ai[np.lexsort((ids[ai], -mmr[ai]))[0]]
+                rows.append((r, int(ids[pick]), float(rel[pick]), float(mmr[pick])))
+                alive[pick] = False
+                sims = _fold_scores(X[pick][None, :], X)[0]
+                srnd = np.array([_round_half_up6(float(s)) for s in sims])
+                maxs = srnd if maxs is None else np.maximum(maxs, srnd)
+        return list(zip(*rows)) if rows else None
 
     feed = emb.select(
         F.col(id_col).alias("vid"), as_double(vec_col).alias("v")
     )
-    return feed.coalesce(1).mapInArrow(
-        kernel, "sel_order int, vec_id bigint, relevance double, mmr double"
+    return single_task(
+        feed, body, "sel_order int, vec_id bigint, relevance double, mmr double"
     )
 
 
@@ -1375,7 +1253,7 @@ def mmr_rerank(
     """
     # Size gate: within LOCAL_KNN_ROWS the whole program — candidate
     # knn, pool checkpoint, and the k driver-side top-1 round trips —
-    # runs as one mapInArrow task.
+    # runs as one task.
     if fits(LOCAL_KNN_ROWS, corpus_rows, emb):
         return _mmr_rerank_local(
             emb, query_vec_id, k, pool, lam, id_col, vec_col

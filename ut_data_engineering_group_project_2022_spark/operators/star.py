@@ -46,7 +46,7 @@ from ut_data_engineering_group_project_2022_spark.functions.metrics import (
     gindex_agg,
     hindex_agg,
 )
-from ut_data_engineering_group_project_2022_spark.operators import fits
+from ut_data_engineering_group_project_2022_spark.operators import fits, single_task
 from ut_data_engineering_group_project_2022_spark.schemas import (
     BRIDGE_AFFILIATION_GROUP,
     BRIDGE_AUTHOR_GROUP,
@@ -892,19 +892,15 @@ _STAR_SLICES = {
 }
 
 
-def _star_kernel(batches):
-    """mapInArrow kernel: consume the tagged union of the existing tables
+def _star_kernel(t):
+    """Single-task body: read the tagged union of the existing tables
     (tagged by table name) and the imputed staging rows (``m``/``a``),
-    run :func:`_star_local_tables`, and emit all nine tables in the
+    run :func:`_star_local_tables`, and return all nine tables in the
     tagged output superset — the existing rows passed through as Arrow
-    (minus the overwritten dim_author rows), then the new rows."""
+    chunks (minus the overwritten dim_author rows), then the new rows."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    batches = list(batches)
-    if not batches:  # pragma: no cover — the union always carries dim_year
-        return
-    t = pa.Table.from_batches(batches)
     tbl = t.column("tbl")
 
     def part(tag):
@@ -925,11 +921,6 @@ def _star_kernel(batches):
     )
 
     names = ["tbl", *_STAR_ICOLS, *_STAR_SCOLS]
-    schema = pa.schema(
-        [("tbl", pa.string())]
-        + [(c, pa.int32()) for c in _STAR_ICOLS]
-        + [(c, pa.string()) for c in _STAR_SCOLS]
-    )
     keep = pc.invert(pc.is_in(tbl, value_set=pa.array(["m", "a"])))
     if replaced:
         overwritten = pc.and_kleene(
@@ -939,7 +930,7 @@ def _star_kernel(batches):
             ),
         )
         keep = pc.and_kleene(keep, pc.invert(overwritten))
-    yield from t.filter(keep).select(names).cast(schema).to_batches()
+    kept = t.filter(keep)
 
     out: dict[str, list] = {c: [] for c in names}
     for name, slots in _STAR_SLICES.items():
@@ -948,9 +939,12 @@ def _star_kernel(batches):
             filled = {slot: row[i] for i, (slot, _) in enumerate(slots)}
             for c in names[1:]:
                 out[c].append(filled.get(c))
-    yield pa.RecordBatch.from_arrays(
-        [pa.array(out[c], schema.field(c).type) for c in names], schema=schema
-    )
+    return [
+        pa.chunked_array(
+            kept.column(c).chunks + [pa.array(out[c], kept.schema.field(c).type)]
+        )
+        for c in names
+    ]
 
 
 #: Imputed staging column -> its slot in the kernel's tagged input. Main
@@ -1065,9 +1059,7 @@ def _star_local(rows: DataFrame, batch: DataFrame) -> StarState:
     (:func:`_record`), so the next batch reads the frame once and gates
     with no count job."""
     out, loaded_rows = _checkpoint_counting(
-        rows.unionByName(batch)
-        .coalesce(1)
-        .mapInArrow(_star_kernel, _STAR_OUT_SCHEMA),
+        single_task(rows.unionByName(batch), _star_kernel, _STAR_OUT_SCHEMA),
         F.when(F.col("tbl") != "dim_year", 1),
     )
     state = StarState(

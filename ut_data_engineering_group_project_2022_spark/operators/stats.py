@@ -21,7 +21,7 @@ aggregation instead:
      O(batches x d^2/2) tiny rows, independent of the corpus size.
   3. Covariance finalizes JVM-side from the exact integer sums.
 
-Determinism contract (round-5 fix for the driver hash flake):
+Determinism contract:
 components are QUANTIZED before summation — ``q = floor(x * 1e4)`` as
 int64 — so every partial sum is integer-exact and the grand totals are
 accumulated as ``DECIMAL(38,0)``. Integer addition is associative, so
@@ -49,7 +49,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ut_data_engineering_group_project_2022_spark.operators import fits
+from ut_data_engineering_group_project_2022_spark.operators import fits, single_task
+from ut_data_engineering_group_project_2022_spark.operators.similarity import (
+    _vec_matrix,
+)
 
 # Quantization scale: 4 decimal digits. Chosen so that at driver-compare
 # scale every finalization intermediate (n*Sxy, Sx_i*Sx_j, n^2*SCALE^2)
@@ -119,8 +122,8 @@ LOCAL_MOMENT_ROWS = 100_000
 
 
 def _moments_local(emb: DataFrame, vec_col: str, dim: int) -> DataFrame:
-    """Single-task covariance for a corpus known to fit one executor
-    (r19): the distributed row ran 6 jobs / 14 Exchange mentions around
+    """Single-task covariance for a corpus known to fit one executor:
+    the distributed row ran 6 jobs / 14 Exchange mentions around
     ~10 ms of numpy at bench scale (2000 x 64). Identical arithmetic:
     the same floor(x*SCALE) int64 quantization and overflow-chunked
     X.T @ X (exact integer partials, summed as python ints so the
@@ -130,29 +133,23 @@ def _moments_local(emb: DataFrame, vec_col: str, dim: int) -> DataFrame:
     in both engines (the shortest-repr equivalence), so the output is
     bit-identical to the distributed form by construction."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def body(t):
         import decimal
 
         import numpy as np
 
         iu, ju = np.triu_indices(dim)
-        n = 0
         sx = np.zeros(dim, dtype=object)
         sxy = np.zeros(len(iu), dtype=object)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            x = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            q = np.floor(x * float(SCALE)).astype("int64")
-            maxq = int(np.abs(q).max()) or 1
-            step = max(1, (1 << 62) // (maxq * maxq))
-            for lo in range(0, q.shape[0], step):
-                c = q[lo : lo + step]
-                sxy += (c.T @ c)[iu, ju]
-                sx += c.sum(axis=0)
-                n += c.shape[0]
-        if n == 0:
-            return
+        x = _vec_matrix(t.column(vec_col))
+        q = np.floor(x * float(SCALE)).astype("int64")
+        maxq = int(np.abs(q).max()) or 1
+        step = max(1, (1 << 62) // (maxq * maxq))
+        for lo in range(0, q.shape[0], step):
+            c = q[lo : lo + step]
+            sxy += (c.T @ c)[iu, ju]
+            sx += c.sum(axis=0)
+        n = q.shape[0]
         q6 = decimal.Decimal("0.000001")
         den = float(n * n)
         cov = []
@@ -167,17 +164,9 @@ def _moments_local(emb: DataFrame, vec_col: str, dim: int) -> DataFrame:
                 )
                 + 0.0
             )
-        yield pd.DataFrame(
-            {
-                "i": pd.array(iu, dtype="int32"),
-                "j": pd.array(ju, dtype="int32"),
-                "cov": pd.array(cov, dtype="float64"),
-            }
-        )
+        return iu, ju, cov
 
-    return emb.select(vec_col).coalesce(1).mapInPandas(
-        kernel, schema="i int, j int, cov double"
-    )
+    return single_task(emb.select(vec_col), body, "i int, j int, cov double")
 
 
 def embedding_moments(

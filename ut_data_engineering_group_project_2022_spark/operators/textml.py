@@ -9,6 +9,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ut_data_engineering_group_project_2022_spark.operators import (
+    column_list,
+    single_task,
+)
+
 
 def langid_trigram(d: DataFrame) -> DataFrame:
     """Train per-language char-trigram profiles on ``d`` (doc_id, text,
@@ -86,12 +91,12 @@ def langid_trigram(d: DataFrame) -> DataFrame:
     )
 
 
-#: Document ceiling for the single-task text-quality kernels (r19): the
+#: Document ceiling for the single-task text-quality kernels: the
 #: same bound as dedup.LOCAL_DEDUP_DOCS — below it the whole token ->
 #: corpus-LM -> bucket program (llm_ccnet_buckets measured 11 Spark
 #: jobs / 42 Exchange mentions for ~0.2 s of single-core work at sf0.1)
-#: runs in ONE mapInPandas task; above it the class-level distributed
-#: plans (the 100 TB shapes) are unchanged.
+#: runs in ONE task (``operators.single_task``); above it the
+#: class-level distributed plans (the 100 TB shapes) are unchanged.
 LOCAL_TEXT_DOCS = 20_000
 
 
@@ -137,22 +142,21 @@ def ccnet_buckets_local(d: DataFrame) -> DataFrame:
     so such docs are absent from the output — as distributed."""
     idt = d.schema["doc_id"].dataType.simpleString()
 
-    def kernel(batches):
+    def body(t):
         import decimal
         import math
         from collections import Counter
 
-        import pandas as pd
-
         ids, langs, toks_all = [], [], []
-        for pdf in batches:
-            for i, lg, t in zip(pdf["doc_id"], pdf["lang"], pdf["text"]):
-                toks = _tokens_py(t)
-                if toks is None:
-                    continue  # explode(NULL) drops the doc
-                ids.append(int(i))
-                langs.append(None if lg is None else str(lg))
-                toks_all.append(toks)
+        for i, lg, x in zip(
+            column_list(t, "doc_id"), column_list(t, "lang"), column_list(t, "text")
+        ):
+            toks = _tokens_py(x)
+            if toks is None:
+                continue  # explode(NULL) drops the doc
+            ids.append(i)
+            langs.append(None if lg is None else str(lg))
+            toks_all.append(toks)
         cf = Counter()
         for toks in toks_all:
             cf.update(toks)
@@ -209,22 +213,12 @@ def ccnet_buckets_local(d: DataFrame) -> DataFrame:
                 bucket[(lg, ppl)] = b
                 c_before += cnt
         out_b = [bucket[(lg, p)] for lg, p in zip(out_lang, out_ppl)]
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.array(out_id, dtype="Int64"),
-                "lang": pd.array(out_lang, dtype="string"),
-                "ppl_milli": pd.array(out_ppl, dtype="Int64"),
-                "bucket": pd.array(out_b, dtype="string"),
-            }
-        )
+        return out_id, out_lang, out_ppl, out_b
 
-    return (
-        d.select("doc_id", "lang", "text")
-        .coalesce(1)
-        .mapInPandas(
-            kernel,
-            f"doc_id {idt}, lang string, ppl_milli bigint, bucket string",
-        )
+    return single_task(
+        d.select("doc_id", "lang", "text"),
+        body,
+        f"doc_id {idt}, lang string, ppl_milli bigint, bucket string",
     )
 
 
@@ -238,14 +232,9 @@ def span_dedup_rebuild_local(d: DataFrame) -> DataFrame:
     output row (the distributed LEFT join), with n_kept 0 and '' text."""
     idt = d.schema["doc_id"].dataType.simpleString()
 
-    def kernel(batches):
-        import pandas as pd
-
-        ids, toks_all = [], []
-        for pdf in batches:
-            for i, t in zip(pdf["doc_id"], pdf["text"]):
-                ids.append(int(i))
-                toks_all.append(_tokens_py(t))
+    def body(t):
+        ids = column_list(t, "doc_id")
+        toks_all = [_tokens_py(x) for x in column_list(t, "text")]
         # chunks + global first occurrence (min (doc_id, pos) per chunk)
         first: dict = {}
         chunks_per_doc: dict = {}
@@ -279,21 +268,10 @@ def span_dedup_rebuild_local(d: DataFrame) -> DataFrame:
             out_nc.append(len(lst))
             out_nk.append(len(kept))
             out_txt.append(" ".join(kept))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.array(out_id, dtype="Int64"),
-                "n_chunks": pd.array(out_nc, dtype="Int64"),
-                "n_kept": pd.array(out_nk, dtype="Int64"),
-                "text_dedup": pd.array(out_txt, dtype="string"),
-            }
-        )
+        return out_id, out_nc, out_nk, out_txt
 
-    return (
-        d.select("doc_id", "text")
-        .coalesce(1)
-        .mapInPandas(
-            kernel,
-            f"doc_id {idt}, n_chunks bigint, n_kept bigint, "
-            "text_dedup string",
-        )
+    return single_task(
+        d.select("doc_id", "text"),
+        body,
+        f"doc_id {idt}, n_chunks bigint, n_kept bigint, text_dedup string",
     )
