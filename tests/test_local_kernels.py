@@ -848,10 +848,9 @@ def test_tpch_q1_local_kernel_decimal_fallback_path(spark, monkeypatch, tmp_path
 
 
 def test_mmr_rerank_local_matches_distributed(spark, monkeypatch):
-    """r20 (VERDICT item 5): the single-task MMR kernel must be
-    bit-equal to the distributed knn + k-round driver loop — bench
-    config, a pool-exhaustion case (k > candidates), and a tie-heavy
-    synthetic."""
+    """The single-task MMR kernel must be bit-equal to the distributed
+    knn + checkpointed-pool greedy — bench config, a pool-exhaustion
+    case (k > candidates), and a tie-heavy synthetic."""
     from ut_data_engineering_group_project_2022_spark.catalog import table
 
     def rows(df):
@@ -880,6 +879,31 @@ def test_mmr_rerank_local_matches_distributed(spark, monkeypatch):
     dist = rows(similarity.mmr_rerank(tiny, query_vec_id=0, k=9, pool=3))
     monkeypatch.undo()
     assert local == dist and len(local) == 3
+
+
+def test_distributed_mmr_runs_no_job_per_pick(spark, monkeypatch):
+    """Forced distributed, mmr_rerank runs the same number of jobs for
+    k=1 and k=5: the knn candidate stage and the eager pool checkpoint,
+    then one single task over the pool for all k picks. The committed
+    exchange counts cannot see this: the row's result plan holds no
+    exchange whether the picks run in a driver loop or in one task."""
+    from ut_data_engineering_group_project_2022_spark.catalog import table
+
+    emb = table(spark, SF_DIR, "embeddings")
+    monkeypatch.setattr(similarity, "LOCAL_KNN_ROWS", -1)
+    sc = spark.sparkContext
+
+    def jobs(k):
+        group = f"mmr-job-count-k{k}"
+        sc.setJobGroup(group, "mmr_rerank")
+        try:
+            picked = similarity.mmr_rerank(emb, query_vec_id=0, k=k).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(picked) == k
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(1) == jobs(5)
 
 
 def test_supplier_revenue_rank_local_matches_distributed(spark):

@@ -249,13 +249,3 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
         # DuckDB's exact ns -> us truncation.
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every test table as a temp view (for the spark.sql path)."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

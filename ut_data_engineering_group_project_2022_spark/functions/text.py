@@ -1,5 +1,5 @@
 """Text analysis column expressions: normalization, tokenization,
-shingling, cross-engine hashing, quality features.
+shingling, cross-engine hashing.
 
 All pure `pyspark.sql.functions` compositions (JVM-side, codegen'd) —
 no Python UDFs. The md5-based 60-bit hash is the cross-engine hashing
@@ -48,32 +48,6 @@ def word_shingles(col: Column | str, k: int = 3) -> Column:
     return F.when(F.size(toks) >= k, F.array_distinct(build)).otherwise(
         F.array().cast("array<string>")
     )
-
-
-def stopword_hits(col: Column | str, word: str) -> Column:
-    """Count of whole-word occurrences of ``word`` (regex-escaped caller's duty)."""
-    return F.regexp_count(F.lower(col), F.lit(rf"\b{word}\b"))
-
-
-def quality_features(col: Column | str) -> dict[str, Column]:
-    """Deterministic quality-scoring features over raw text.
-
-    Integer counts + double ratios only — bit-identical across engines.
-    """
-    n_chars = F.length(col)
-    n_alpha = F.length(F.regexp_replace(col, "[^A-Za-z]", ""))
-    n_space = F.length(F.regexp_replace(col, r"[^\s]", ""))
-    n_punct = n_chars - n_alpha - F.length(
-        F.regexp_replace(col, "[^0-9]", "")
-    ) - n_space
-    n_tokens = F.size(tokens(col))
-    return {
-        "n_chars": n_chars.cast("int"),
-        "n_tokens": n_tokens.cast("int"),
-        "alpha_ratio": (n_alpha.cast("double") / n_chars),
-        "punct_ratio": (n_punct.cast("double") / n_chars),
-        "mean_token_len": (n_alpha.cast("double") / n_tokens),
-    }
 
 
 def bigrams(col: Column | str) -> Column:

@@ -239,17 +239,44 @@ def _minhash_sigs_np(id_list, set_list, n_perm: int):
     return keep_ids, M
 
 
-def _band_buckets(ids, M, n_perm: int, band_rows: int):
-    """(band, 4-int signature tuple) -> member doc ids. Tuple equality
-    == the JVM concat_ws('-') string equality (non-negative ints)."""
+def _band_keys(m):
+    """The (band, BAND_ROWS-int signature tuple) keys of one signature
+    row. Tuple equality == the JVM concat_ws('-') string equality
+    (non-negative ints)."""
+    return [
+        (b, tuple(int(x) for x in m[b * BAND_ROWS : (b + 1) * BAND_ROWS]))
+        for b in range(N_PERM // BAND_ROWS)
+    ]
+
+
+def _band_buckets(ids, M):
+    """Band key (:func:`_band_keys`) -> member doc ids."""
     buckets: dict = {}
-    n_bands = n_perm // band_rows
     for row, did in enumerate(ids):
-        m = M[row]
-        for b in range(n_bands):
-            key = (b, tuple(int(x) for x in m[b * band_rows : (b + 1) * band_rows]))
+        for key in _band_keys(M[row]):
             buckets.setdefault(key, []).append(did)
     return buckets
+
+
+def _banded_jaccard_pairs(ids, sets):
+    """[(doc_a, doc_b, jaccard)] for every pair (doc_a < doc_b) that
+    shares a band bucket, with the exact shingle Jaccard as the
+    distributed verify computes it (the same double division)."""
+    keep_ids, M = _minhash_sigs_np(ids, sets, N_PERM)
+    pairs = set()
+    for members in _band_buckets(keep_ids, M).values():
+        if len(members) > 1:
+            ms = sorted(members)
+            for i in range(len(ms)):
+                for j in range(i + 1, len(ms)):
+                    pairs.add((ms[i], ms[j]))
+    setmap = dict(zip(ids, sets))
+    out = []
+    for a, b in pairs:
+        sa, sb = setmap[a], setmap[b]
+        inter = len(sa & sb)
+        out.append((a, b, float(inter) / (len(sa) + len(sb) - inter)))
+    return out
 
 
 def _minhash_lsh_local(docs: DataFrame, k: int) -> DataFrame:
@@ -263,24 +290,8 @@ def _minhash_lsh_local(docs: DataFrame, k: int) -> DataFrame:
     def body(t):
         ids = column_list(t, "doc_id")
         sets = [_shingle_set_py(x, k) for x in column_list(t, "text")]
-        keep_ids, M = _minhash_sigs_np(ids, sets, N_PERM)
-        pairs = set()
-        for members in _band_buckets(keep_ids, M, N_PERM, BAND_ROWS).values():
-            if len(members) > 1:
-                ms = sorted(members)
-                for i in range(len(ms)):
-                    for j in range(i + 1, len(ms)):
-                        pairs.add((ms[i], ms[j]))
-        setmap = dict(zip(ids, sets))
-        da, db, jac = [], [], []
-        for a, b in pairs:
-            sa, sb = setmap[a], setmap[b]
-            inter = len(sa & sb)
-            union = len(sa) + len(sb) - inter
-            da.append(a)
-            db.append(b)
-            jac.append(float(inter) / union)
-        return da, db, jac
+        pairs = _banded_jaccard_pairs(ids, sets)
+        return list(zip(*pairs)) if pairs else None
 
     return single_task(
         docs.select("doc_id", "text"),
@@ -314,19 +325,13 @@ def _incremental_neardup_local(
                 c_sets.append(_shingle_set_py(x, k))
         kb, Mb = _minhash_sigs_np(b_ids, b_sets, N_PERM)
         kc, Mc = _minhash_sigs_np(c_ids, c_sets, N_PERM)
-        c_buckets = _band_buckets(kc, Mc, N_PERM, BAND_ROWS)
+        c_buckets = _band_buckets(kc, Mc)
         b_setmap = dict(zip(b_ids, b_sets))
         c_setmap = dict(zip(c_ids, c_sets))
-        n_bands = N_PERM // BAND_ROWS
         matches: dict = {}
         for row, bid in enumerate(kb):
-            m = Mb[row]
             cands = set()
-            for b in range(n_bands):
-                key = (
-                    b,
-                    tuple(int(x) for x in m[b * BAND_ROWS : (b + 1) * BAND_ROWS]),
-                )
+            for key in _band_keys(Mb[row]):
                 cands.update(c_buckets.get(key, ()))
             sa = b_setmap[bid]
             hits = []
@@ -394,22 +399,9 @@ def curation_local(docs: DataFrame) -> DataFrame:
         }
         # -- near-dup drop list: banded candidates, exact jaccard -------
         sets = [_shingle_set_py(t, 3) for t in texts]
-        keep_ids, M = _minhash_sigs_np(ids, sets, N_PERM)
-        pairs = set()
-        for members in _band_buckets(keep_ids, M, N_PERM, BAND_ROWS).values():
-            if len(members) > 1:
-                ms = sorted(members)
-                for i in range(len(ms)):
-                    for j in range(i + 1, len(ms)):
-                        pairs.add((ms[i], ms[j]))
-        setmap = dict(zip(ids, sets))
-        near_drop = set()
-        for a, b in pairs:
-            sa, sb = setmap[a], setmap[b]
-            inter = len(sa & sb)
-            union = len(sa) + len(sb) - inter
-            if float(inter) / union >= 0.8:
-                near_drop.add(b)
+        near_drop = {
+            b for _, b, j in _banded_jaccard_pairs(ids, sets) if j >= 0.8
+        }
         # -- quality + langid gates (same exprs as the standalone ops) --
         r_the = re.compile(r"\bthe\b")
         r_a = re.compile(r"\ba\b")

@@ -24,8 +24,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ut_data_engineering_group_project_2022_spark.functions.gender import infer_gender
-
 
 def enrich_lookup_join(
     cleaned: DataFrame, enrichment: DataFrame, key: str = "id"
@@ -109,33 +107,6 @@ def merge_authorlists(
     return df.withColumn(out_col, merged)
 
 
-def assign_genders(df: DataFrame, authors_col: str = "authors_merged") -> DataFrame:
-    """F14: explode -> gender UDF on given name -> reassemble (N3).
-
-    The UDF runs on the exploded stream (Arrow-batched) rather than
-    per-element inside a higher-order function — Spark cannot call
-    Python UDFs inside `transform` lambdas.
-    """
-    exploded = df.select("id", F.posexplode(authors_col).alias("pos", "a"))
-    gendered = exploded.select(
-        "id",
-        "pos",
-        F.struct(
-            F.col("a.family").alias("family"),
-            F.col("a.given").alias("given"),
-            infer_gender(F.col("a.given")).alias("gender"),
-            F.col("a.full_name").alias("full_name"),
-            F.col("a.affiliation").alias("affiliation"),
-        ).alias("a"),
-    )
-    reassembled = gendered.groupBy("id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "a"))), lambda x: x["a"]
-        ).alias(authors_col)
-    )
-    return df.drop(authors_col).join(reassembled, "id", "left")
-
-
 def collect_reference_dois(df: DataFrame, ref_col: str = "reference") -> DataFrame:
     """F20 (ref enrich.py:74-80): non-null DOIs from the reference list."""
     return df.withColumn(
@@ -145,8 +116,3 @@ def collect_reference_dois(df: DataFrame, ref_col: str = "reference") -> DataFra
             lambda r: r["doi"],
         ),
     )
-
-
-def first_given_token(col: Column | str) -> Column:
-    """F10 (ref enrich.py:51-52): first token of the given name."""
-    return F.split(F.col(col) if isinstance(col, str) else col, " ")[0]

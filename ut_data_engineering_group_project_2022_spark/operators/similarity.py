@@ -18,6 +18,50 @@ from pyspark.sql import functions as F
 from ut_data_engineering_group_project_2022_spark.functions.text import md5_int60
 from ut_data_engineering_group_project_2022_spark.operators import fits, single_task
 
+#: Every operator here reads ids from ``vec_id`` and vectors from
+#: ``embedding``. The exact-integer rows (k-means, SemDeDup, PQ,
+#: k-center) put each component on the fixed-point grid
+#: ``floor(v * GRID_SCALE)``; k-means, SemDeDup and k-center add
+#: ``GRID_OFFSET`` so every coordinate is positive and integer division
+#: is floor division in both engines (Spark `div` truncates, DuckDB `//`
+#: floors; they agree only on non-negatives).
+GRID_SCALE = 1_000_000
+GRID_OFFSET = 1_000_000
+
+
+def grid() -> Column:
+    """``embedding`` on the offset fixed-point grid, as array<bigint>."""
+    return F.transform(
+        F.col("embedding"),
+        lambda v: F.floor(v.cast("double") * GRID_SCALE).cast("bigint")
+        + GRID_OFFSET,
+    )
+
+
+def int_d2(a: Column | str, b: Column | str) -> Column:
+    """Exact squared distance of two bigint arrays (a BIGINT fold)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0).cast("bigint"),
+        lambda acc, e: acc + e,
+    )
+
+
+def _seed_hashes(salt: str, ids):
+    """``md5_int60(salt || '|' || id)`` for every id of an int64 array:
+    the Python twin of the Spark seed hash."""
+    import hashlib
+
+    import numpy as np
+
+    return np.asarray(
+        [
+            int(hashlib.md5(f"{salt}|{i}".encode()).hexdigest()[:15], 16)
+            for i in ids.tolist()
+        ],
+        dtype=np.int64,
+    )
+
 
 def as_double(col: Column | str) -> Column:
     return F.col(col).cast("array<double>") if isinstance(col, str) else col.cast("array<double>")
@@ -40,8 +84,6 @@ def knn_bruteforce(
     queries: DataFrame,
     corpus: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     query_rows: int | None = None,
     corpus_rows: int | None = None,
 ) -> DataFrame:
@@ -56,12 +98,12 @@ def knn_bruteforce(
     if fits(LOCAL_KNN_QUERIES, query_rows, queries) and fits(
         LOCAL_KNN_ROWS, corpus_rows, corpus
     ):
-        return _knn_bruteforce_local(queries, corpus, k, id_col, vec_col)
+        return _knn_bruteforce_local(queries, corpus, k)
     q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(vec_col).alias("qv")
+        F.col("vec_id").alias("query_id"), as_double("embedding").alias("qv")
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("cv")
+        F.col("vec_id").alias("neighbor_id"), as_double("embedding").alias("cv")
     )
     scored = c.join(F.broadcast(q)).select(
         "query_id",
@@ -114,8 +156,6 @@ def knn_lsh(
     dim: int,
     n_tables: int = 8,
     n_bits: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Multi-table sign-bit LSH ANN: the scale path for pairwise similarity.
 
@@ -133,7 +173,7 @@ def knn_lsh(
     rn) restricted to candidate pairs.
     """
     v = vectors.select(
-        F.col(id_col).alias("vid"), as_double(vec_col).alias("vec")
+        F.col("vec_id").alias("vid"), as_double("embedding").alias("vec")
     )
     tables = F.array(
         *[
@@ -190,8 +230,6 @@ def lsh_candidate_pairs(
     dim: int,
     n_tables: int = 8,
     n_bits: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Unordered candidate pairs (id_a < id_b) colliding in ANY LSH table.
 
@@ -199,7 +237,7 @@ def lsh_candidate_pairs(
     MinHash-LSH and banded SimHash: sub-quadratic pair generation, exact
     scoring only on survivors."""
     v = vectors.select(
-        F.col(id_col).alias("vid"), as_double(vec_col).alias("vec")
+        F.col("vec_id").alias("vid"), as_double("embedding").alias("vec")
     )
     tables = F.array(
         *[
@@ -234,8 +272,6 @@ def cosine_neardup_lsh(
     dim: int,
     n_tables: int = 8,
     n_bits: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Sub-quadratic embedding near-dup: LSH-bucketed candidates, exact
     cosine verify — the 100 TB path `cosine_neardup_pairs` documents.
@@ -243,8 +279,8 @@ def cosine_neardup_lsh(
     Same output schema as the all-pairs form restricted to candidate
     pairs; the registered oracle regenerates the hash tables in SQL, so
     the whole pipeline (not just the verify) is hash-checked."""
-    cand = lsh_candidate_pairs(emb, dim, n_tables, n_bits, id_col, vec_col)
-    v = emb.select(F.col(id_col).alias("vid"), as_double(vec_col).alias("vec"))
+    cand = lsh_candidate_pairs(emb, dim, n_tables, n_bits)
+    v = emb.select(F.col("vec_id").alias("vid"), as_double("embedding").alias("vec"))
     return (
         cand.join(v.select(F.col("vid").alias("id_a"), F.col("vec").alias("va")), "id_a")
         .join(v.select(F.col("vid").alias("id_b"), F.col("vec").alias("vb")), "id_b")
@@ -259,8 +295,6 @@ def cosine_neardup_lsh(
 def cosine_neardup_pairs(
     emb: DataFrame,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (a, b) with a < b and
     cosine >= threshold — the embedding-space analog of MinHash near-dup.
@@ -269,8 +303,8 @@ def cosine_neardup_pairs(
     reuses `lsh_bucket` to restrict pairs to same-bucket candidates
     (sub-quadratic), then verifies with this exact cosine — same
     candidates->verify shape as dedup.minhash_lsh_dedup."""
-    a = emb.select(F.col(id_col).alias("id_a"), as_double(vec_col).alias("va"))
-    b = emb.select(F.col(id_col).alias("id_b"), as_double(vec_col).alias("vb"))
+    a = emb.select(F.col("vec_id").alias("id_a"), as_double("embedding").alias("va"))
+    b = emb.select(F.col("vec_id").alias("id_b"), as_double("embedding").alias("vb"))
     pairs = a.join(b, F.col("id_a") < F.col("id_b"))
     score = cosine(F.col("va"), F.col("vb"))
     return (
@@ -283,8 +317,6 @@ def cosine_neardup_pairs(
 def ivf_assign(
     emb: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Assign every vector to its nearest centroid cell (max cosine,
     centroid-id tiebreak). Returns (vec_id, v, cell_id).
@@ -292,17 +324,17 @@ def ivf_assign(
     The centroid set is broadcast — at cluster scale cells partition the
     corpus so a query probes one partition instead of all of them."""
     c = centroids.select(
-        F.col(id_col).alias("cell_id"), as_double(vec_col).alias("cv")
+        F.col("vec_id").alias("cell_id"), as_double("embedding").alias("cv")
     )
-    x = emb.select(F.col(id_col).alias(id_col), as_double(vec_col).alias("v"))
+    x = emb.select("vec_id", as_double("embedding").alias("v"))
     scored = x.join(F.broadcast(c)).select(
-        id_col, "v", "cell_id", cosine(F.col("v"), F.col("cv")).alias("s")
+        "vec_id", "v", "cell_id", cosine(F.col("v"), F.col("cv")).alias("s")
     )
-    w = W.partitionBy(id_col).orderBy(F.desc("s"), F.asc("cell_id"))
+    w = W.partitionBy("vec_id").orderBy(F.desc("s"), F.asc("cell_id"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .select(id_col, "v", "cell_id")
+        .select("vec_id", "v", "cell_id")
     )
 
 
@@ -311,8 +343,6 @@ def knn_ivf(
     k: int,
     n_cells: int = 8,
     n_queries: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-style ANN: coarse-quantize into `n_cells` cells, search only the
     query's own cell (nprobe=1).
@@ -322,14 +352,12 @@ def knn_ivf(
     a Pandas-UDF k-means over a sample; the in-plan search below is
     unchanged). Queries follow the bruteforce convention (vec_id <
     n_queries), corpus is the rest."""
-    assigned = ivf_assign(
-        emb, emb.filter(F.col(id_col) < n_cells), id_col, vec_col
+    assigned = ivf_assign(emb, emb.filter(F.col("vec_id") < n_cells))
+    q = assigned.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), "cell_id"
     )
-    q = assigned.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id"), F.col("v").alias("qv"), "cell_id"
-    )
-    c = assigned.filter(F.col(id_col) >= n_queries).select(
-        F.col(id_col).alias("neighbor_id"), F.col("v").alias("cv"), "cell_id"
+    c = assigned.filter(F.col("vec_id") >= n_queries).select(
+        F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"), "cell_id"
     )
     scored = c.join(F.broadcast(q), "cell_id").select(
         "query_id", "neighbor_id", cosine(F.col("qv"), F.col("cv")).alias("score")
@@ -346,10 +374,6 @@ def kmeans_fixed_point(
     emb: DataFrame,
     k: int = 10,
     iterations: int = 2,
-    scale: int = 1_000_000,
-    offset: int = 1_000_000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Lloyd k-means in fixed-point integer arithmetic; returns
     (vec_id, cluster, dist2).
@@ -358,10 +382,8 @@ def kmeans_fixed_point(
     partition-order dependent) and oracle-hostile. This formulation stays
     in exact integers end-to-end:
 
-      * quantize: x_i = floor(v_i * scale) + offset  (offset makes every
-        coordinate positive so integer division below is floor division
-        in both engines — Spark `div` truncates, DuckDB `//` floors;
-        they agree only on non-negatives);
+      * quantize: :func:`grid` (the offset keeps the integer division
+        below a floor division in both engines);
       * seeds: the k vectors with the smallest salted md5 hash, fetched
         with orderBy+limit (TakeOrdered — never a corpus-wide window),
         cluster ids 0..k-1 in hash order;
@@ -375,22 +397,14 @@ def kmeans_fixed_point(
     Every iteration is one broadcast crossJoin (k centroid rows) + one
     aggregate; the oracle unrolls the same iterations as SQL CTEs.
     """
-    x = F.transform(
-        F.col(vec_col),
-        lambda v: F.floor(v.cast("double") * scale).cast("bigint") + offset,
-    )
-    v = emb.select(F.col(id_col).alias("vec_id"), x.alias("x"))
+    v = emb.select("vec_id", grid().alias("x"))
     h = md5_int60(F.concat(F.lit("seed|"), F.col("vec_id").cast("string")))
     seeds = v.withColumn("h", h).orderBy("h").limit(k)
     centroids = (
         seeds.withColumn("cluster", F.row_number().over(W.orderBy("h")) - 1)
         .select("cluster", F.col("x").alias("c"))
     )
-    d2 = F.aggregate(
-        F.zip_with("x", "c", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("bigint"),
-        lambda acc, e: acc + e,
-    )
+    d2 = int_d2("x", "c")
     assigned = None
     for _ in range(iterations):
         assigned = (
@@ -433,10 +447,6 @@ def _semdedup_local(
     k: int,
     iterations: int,
     threshold: float,
-    scale: int,
-    offset: int,
-    id_col: str,
-    vec_col: str,
 ) -> DataFrame:
     """Single-task SemDeDup for a corpus known to fit one executor:
     the fixed-point integer k-means (same md5 seeds, exact int64
@@ -449,20 +459,12 @@ def _semdedup_local(
     on 66%); norms and the threshold comparison use the identical
     operation order. Pinned bit-equal to the distributed path at
     sf0.001/0.01/0.1 by tests/test_local_kernels.py."""
-    x = F.transform(
-        F.col(vec_col),
-        lambda v: F.floor(v.cast("double") * scale).cast("bigint") + offset,
-    )
     v = emb.select(
-        F.col(id_col).alias("vec_id"),
-        x.alias("x"),
-        as_double(vec_col).alias("e"),
+        "vec_id", grid().alias("x"), as_double("embedding").alias("e")
     )
-    idt = emb.schema[id_col].dataType.simpleString()
+    idt = emb.schema["vec_id"].dataType.simpleString()
 
     def body(t):
-        import hashlib
-
         import numpy as np
 
         ids = t.column("vec_id").to_numpy(zero_copy_only=False).astype(np.int64)
@@ -470,14 +472,7 @@ def _semdedup_local(
         E = _vec_matrix(t.column("e"))
         n = len(ids)
         # seeds: k smallest salted md5 hashes, cluster ids in hash order
-        h = np.asarray(
-            [
-                int(hashlib.md5(f"seed|{i}".encode()).hexdigest()[:15], 16)
-                for i in ids.tolist()
-            ],
-            dtype=np.int64,
-        )
-        seed_idx = np.lexsort((ids, h))[: min(k, n)]
+        seed_idx = np.lexsort((ids, _seed_hashes("seed", ids)))[: min(k, n)]
         cid = np.arange(len(seed_idx), dtype=np.int64)  # ascending ids
         C = X[seed_idx]
         x2 = np.einsum("ij,ij->i", X, X)
@@ -530,10 +525,6 @@ def semdedup(
     k: int = 10,
     iterations: int = 2,
     threshold: float = 0.40,
-    scale: int = 1_000_000,
-    offset: int = 1_000_000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     corpus_rows: int | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): cluster with the deterministic
@@ -544,32 +535,18 @@ def semdedup(
     one bounded count), the cluster-bounded distributed pair join
     otherwise. Returns (vec_id, cluster, keep, dup_of)."""
     if fits(LOCAL_SEMDEDUP_ROWS, corpus_rows, emb):
-        return _semdedup_local(
-            emb, k, iterations, threshold, scale, offset, id_col, vec_col
-        )
+        return _semdedup_local(emb, k, iterations, threshold)
     # Distributed path: the cluster-bounded pair join (see llm_semdedup's
     # registry doc for the scale adjudication).
     assign = (
-        kmeans_fixed_point(
-            emb, k=k, iterations=iterations, scale=scale, offset=offset,
-            id_col=id_col, vec_col=vec_col,
-        )
+        kmeans_fixed_point(emb, k=k, iterations=iterations)
         .select("vec_id", "cluster")
         .localCheckpoint(eager=False)
     )
-    e = emb.select(
-        F.col(id_col).alias("vec_id"), as_double(vec_col).alias("e")
-    )
-    norm = F.sqrt(
-        F.aggregate(
-            F.zip_with("e", "e", lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
+    e = emb.select("vec_id", as_double("embedding").alias("e"))
     av = (
         assign.join(e, "vec_id")
-        .withColumn("nrm", norm)
+        .withColumn("nrm", F.sqrt(dot(F.col("e"), F.col("e"))))
         .localCheckpoint(eager=False)
     )
     a = av.select(
@@ -584,11 +561,7 @@ def semdedup(
         F.col("e").alias("eb"),
         F.col("nrm").alias("nb"),
     )
-    dot_ab = F.aggregate(
-        F.zip_with("ea", "eb", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot_ab = dot(F.col("ea"), F.col("eb"))
     dups = (
         a.join(
             b,
@@ -613,10 +586,7 @@ def knn_pq(
     m: int = 8,
     n_codes: int = 16,
     n_queries: int = 10,
-    scale: int = 1_000_000,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     corpus_rows: int | None = None,
 ) -> DataFrame:
     """Product-quantization ANN with an ADC scan (the Jégou et al. 2011
@@ -624,7 +594,7 @@ def knn_pq(
     scale: 64 doubles compress to ``m`` one-byte codes).
 
     Everything is exact integer arithmetic on the fixed-point grid
-    (floor(x*scale), the :func:`kmeans_fixed_point` convention), so the
+    (``floor(x * GRID_SCALE)``, no offset), so the
     encoding, the distance tables, and the top-k are deterministic and
     bit-identical to the DuckDB oracle:
 
@@ -647,8 +617,8 @@ def knn_pq(
     (query_id, neighbor_id, dist2, rn). Recall vs the exact baseline is
     gated in tests/.
 
-    PRECONDITION (r8 advisory): at least one row must have
-    ``id_col < n_codes`` — the codebook is trained on those rows. With
+    PRECONDITION: at least one row must have
+    ``vec_id < n_codes`` — the codebook is trained on those rows. With
     an EMPTY codebook every downstream join is empty and the result is
     silently empty, INCLUDING the corpus-side wrong-length/NULL
     embedding gate (it is folded into the encode aggregate, which is
@@ -663,21 +633,17 @@ def knn_pq(
     # Size gate: within LOCAL_KNN_ROWS the whole encode/LUT/ADC/top-k
     # chain runs as one job.
     if fits(LOCAL_KNN_ROWS, corpus_rows, emb):
-        return _knn_pq_local(
-            emb, k, m, n_codes, n_queries, scale, dim, id_col, vec_col
-        )
+        return _knn_pq_local(emb, k, m, n_codes, n_queries, dim)
     # Validate dim against the DATA, not just the parameter: a shorter
     # real embedding would make F.slice silently emit short/empty
     # subvectors and zero distances, degrading recall with no
-    # diagnostic (r6 advisory). A NULL or wrong-length embedding
-    # HARD-FAILS the job (documented contract; r7 advisory): the gate
-    # is a per-GROUP check folded into the encode aggregate (min of
-    # the carried array length — NULL sizes make the min NULL, which
-    # also trips the gate) plus a per-row check on the query-side LUT,
-    # which only ever holds n_queries*m*n_codes rows. The r7 per-row
-    # assert_true on the base select defeated whole-stage codegen on
-    # the corpus scan and cost ~0.4 s at sf0.1 (measured r8); this
-    # form keeps the hot scan/explode/join stage branch-free.
+    # diagnostic. A NULL or wrong-length embedding HARD-FAILS the job:
+    # the gate is a per-GROUP check folded into the encode aggregate
+    # (min of the carried array length — NULL sizes make the min NULL,
+    # which also trips the gate) plus a per-row check on the query-side
+    # LUT, which only ever holds n_queries*m*n_codes rows. A per-row
+    # check on the corpus scan would defeat its whole-stage codegen;
+    # this form keeps the hot scan/explode/join stage branch-free.
     sub_d = dim // m
 
     def _dim_gate(out: Column, sz: Column) -> Column:
@@ -691,11 +657,12 @@ def knn_pq(
         )
 
     x = emb.select(
-        F.col(id_col).alias("vec_id"),
+        "vec_id",
         F.transform(
-            as_double(vec_col), lambda e: F.floor(e * scale).cast("bigint")
+            as_double("embedding"),
+            lambda e: F.floor(e * GRID_SCALE).cast("bigint"),
         ).alias("x"),
-        F.size(vec_col).alias("sz"),
+        F.size("embedding").alias("sz"),
     )
     subs = x.select(
         "vec_id",
@@ -713,11 +680,7 @@ def knn_pq(
     cb = subs.filter(F.col("vec_id") < n_codes).select(
         F.col("vec_id").alias("code"), "s", F.col("xs").alias("cs")
     )
-    d2 = F.aggregate(
-        F.zip_with("xs", "cs", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("bigint"),
-        lambda acc, e: acc + e,
-    )
+    d2 = int_d2("xs", "cs")
     enc = (
         subs.filter(F.col("vec_id") >= n_queries)
         .join(F.broadcast(cb), "s")
@@ -762,8 +725,6 @@ def knn_pq_rerank(
     m: int = 16,
     n_codes: int = 16,
     n_queries: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     corpus_rows: int | None = None,
 ) -> DataFrame:
     """PQ shortlist + exact re-rank (the production IVFADC recipe): the
@@ -782,31 +743,16 @@ def knn_pq_rerank(
     # ~10-job PQ chain plus the rerank join/window).
     if fits(LOCAL_KNN_ROWS, corpus_rows, emb):
         return _knn_pq_local(
-            emb,
-            shortlist,
-            m,
-            n_codes,
-            n_queries,
-            1_000_000,
-            64,
-            id_col,
-            vec_col,
-            rerank_k=k,
+            emb, shortlist, m, n_codes, n_queries, 64, rerank_k=k
         )
     cand = knn_pq(
-        emb,
-        k=shortlist,
-        m=m,
-        n_codes=n_codes,
-        n_queries=n_queries,
-        id_col=id_col,
-        vec_col=vec_col,
+        emb, k=shortlist, m=m, n_codes=n_codes, n_queries=n_queries
     ).select("query_id", "neighbor_id")
-    q = emb.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id"), as_double(vec_col).alias("qv")
+    q = emb.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"), as_double("embedding").alias("qv")
     )
     c = emb.select(
-        F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("cv")
+        F.col("vec_id").alias("neighbor_id"), as_double("embedding").alias("cv")
     )
     scored = c.join(F.broadcast(cand.join(q, "query_id")), "neighbor_id").select(
         "query_id", "neighbor_id", cosine(F.col("qv"), F.col("cv")).alias("s")
@@ -889,7 +835,7 @@ def _round_half_up6(x: float) -> float:
 
 
 def _knn_bruteforce_local(
-    queries: DataFrame, corpus: DataFrame, k: int, id_col: str, vec_col: str
+    queries: DataFrame, corpus: DataFrame, k: int
 ) -> DataFrame:
     """Single-task exact knn for a (queries, corpus) pair known to fit
     one executor (gated by :func:`knn_bruteforce`). One Spark job
@@ -899,16 +845,16 @@ def _knn_bruteforce_local(
     identical (desc score, asc neighbor id) tie order, rounded with
     Spark's HALF_UP. Assumes the documented embedding contract
     (uniform-length, non-null vectors)."""
-    idt = queries.schema[id_col].dataType.simpleString()
+    idt = queries.schema["vec_id"].dataType.simpleString()
     tagged = queries.select(
         F.lit(True).alias("is_q"),
-        F.col(id_col).alias("vid"),
-        as_double(vec_col).alias("v"),
+        F.col("vec_id").alias("vid"),
+        as_double("embedding").alias("v"),
     ).unionByName(
         corpus.select(
             F.lit(False).alias("is_q"),
-            F.col(id_col).alias("vid"),
-            as_double(vec_col).alias("v"),
+            F.col("vec_id").alias("vid"),
+            as_double("embedding").alias("v"),
         )
     )
 
@@ -945,10 +891,7 @@ def _knn_pq_local(
     m: int,
     n_codes: int,
     n_queries: int,
-    scale: int,
     dim: int,
-    id_col: str,
-    vec_col: str,
     rerank_k: int | None = None,
 ) -> DataFrame:
     """Single-task PQ ADC scan (and, with ``rerank_k``, the exact
@@ -961,8 +904,8 @@ def _knn_pq_local(
     the dim gate fires with the distributed plan's message and timing
     (execution, not build)."""
     sub_d = dim // m
-    idt = emb.schema[id_col].dataType.simpleString()
-    v = emb.select(F.col(id_col).alias("vid"), as_double(vec_col).alias("v"))
+    idt = emb.schema["vec_id"].dataType.simpleString()
+    v = emb.select(F.col("vec_id").alias("vid"), as_double("embedding").alias("v"))
     gate_msg = f"knn_pq: dim={dim} does not match embedding length "
     out_t = "double" if rerank_k is not None else "bigint"
     score_col = "score" if rerank_k is not None else "dist2"
@@ -973,7 +916,7 @@ def _knn_pq_local(
         qids_o, nids_o, sc_o, rns_o = [], [], [], []
         vids = t.column("vid").to_numpy(zero_copy_only=False).astype(np.int64)
         V = _vec_matrix(t.column("v"), dim=dim, gate_msg=gate_msg)
-        X = np.floor(V * float(scale)).astype(np.int64)
+        X = np.floor(V * float(GRID_SCALE)).astype(np.int64)
         cb_m = np.flatnonzero(vids < n_codes)
         cb_m = cb_m[np.argsort(vids[cb_m], kind="stable")]
         q_m = np.flatnonzero(vids < n_queries)
@@ -1042,22 +985,13 @@ def _kcenter_local(v: DataFrame, k: int) -> DataFrame:
     (guide §1.2)."""
 
     def body(t):
-        import hashlib
-
         import numpy as np
 
         out: list[tuple[int, int, int]] = []
         ids = t.column("vec_id").to_numpy(zero_copy_only=False)
         X = _vec_matrix(t.column("x"), dtype="int64")
-        h = np.asarray(
-            [
-                int(hashlib.md5(f"kc|{i}".encode()).hexdigest()[:15], 16)
-                for i in ids.tolist()
-            ],
-            dtype=np.int64,
-        )
         # seed: smallest (h, vec_id) — ORDER BY h, vec_id LIMIT 1
-        s = int(np.lexsort((ids, h))[0])
+        s = int(np.lexsort((ids, _seed_hashes("kc", ids)))[0])
         out.append((0, int(ids[s]), 0))
         alive = np.ones(len(ids), dtype=bool)
         alive[s] = False
@@ -1083,10 +1017,6 @@ def _kcenter_local(v: DataFrame, k: int) -> DataFrame:
 def kcenter_greedy(
     emb: DataFrame,
     k: int = 8,
-    scale: int = 1_000_000,
-    offset: int = 1_000_000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     corpus_rows: int | None = None,
 ) -> DataFrame:
     """Greedy k-center coreset selection (farthest-point traversal);
@@ -1100,7 +1030,7 @@ def kcenter_greedy(
     optimal k-center cover.
 
     Cross-engine determinism follows `kmeans_fixed_point`'s recipe:
-    fixed-point integer coordinates (floor(v*scale)+offset) so every
+    fixed-point integer coordinates (:func:`grid`) so every
     distance is an exact BIGINT; seed = smallest salted md5; all
     argmax ties break on vec_id.
 
@@ -1113,23 +1043,14 @@ def kcenter_greedy(
     incremental min-distance would be persisted between rounds instead
     of recomputed, leaving one scan per round either way.
     """
-    x = F.transform(
-        F.col(vec_col),
-        lambda v: F.floor(v.cast("double") * scale).cast("bigint") + offset,
-    )
-    v = emb.select(F.col(id_col).cast("bigint").alias("vec_id"), x.alias("x"))
+    v = emb.select(F.col("vec_id").cast("bigint").alias("vec_id"), grid().alias("x"))
     # Size gate: within LOCAL_KCENTER_ROWS the greedy rounds run as one
     # task.
     if fits(LOCAL_KCENTER_ROWS, corpus_rows, v):
         return _kcenter_local(v, k)
 
     def d2_to(center: list) -> Column:
-        arr = F.array(*[F.lit(int(c)) for c in center])
-        return F.aggregate(
-            F.zip_with("x", arr, lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("bigint"),
-            lambda acc, e: acc + e,
-        )
+        return int_d2("x", F.array(*[F.lit(int(c)) for c in center]))
 
     h = md5_int60(F.concat(F.lit("kc|"), F.col("vec_id").cast("string")))
     seed_rows = v.withColumn("h", h).orderBy("h", "vec_id").limit(1).collect()
@@ -1140,9 +1061,9 @@ def kcenter_greedy(
         mind = d2_to(list(seed.x))
         for r in range(1, k):
             # Exclude already-picked ids and stop when the pool runs dry
-            # (k > number of vectors) — the unguarded argmax re-picked
-            # centers with mind=0 forever (r6 advisory). The exclusion
-            # list is <= k ids, a plan literal like the centers.
+            # (k > number of vectors): otherwise the argmax re-picks a
+            # center with mind=0. The exclusion list is <= k ids, a plan
+            # literal like the centers.
             far_rows = (
                 v.filter(~F.col("vec_id").isin([p[1] for p in picked]))
                 .select("vec_id", "x", mind.alias("mind"))
@@ -1160,67 +1081,67 @@ def kcenter_greedy(
     )
 
 
+def _mmr_greedy(ids, rel, X, k: int, lam: float):
+    """The MMR rounds over a candidate pool, one row per candidate:
+    ``ids`` (int64), ``rel`` (the 6dp-rounded relevance) and the vectors
+    ``X``. Round 0 picks the largest ``rel``; every later round the
+    largest ``lam*rel - (1-lam)*maxs``, where ``maxs`` folds with
+    np.maximum the HALF_UP 6dp-rounded left-fold cosine
+    (:func:`_fold_scores`) of each candidate to every pick so far; ties
+    go to the smaller id. Stops after ``k`` picks or when the pool runs
+    dry. Returns the (sel_order, vec_id, relevance, mmr) columns, None
+    for no pick. The rounded inputs are what the chained-CTE oracle
+    consumes, so both engines pick identical argmaxes."""
+    import numpy as np
+
+    rows = []
+    alive = np.ones(len(ids), bool)
+    maxs = None
+    for r in range(min(k, len(ids))):
+        mmr = rel if r == 0 else lam * rel - (1.0 - lam) * maxs
+        ai = np.flatnonzero(alive)
+        pick = ai[np.lexsort((ids[ai], -mmr[ai]))[0]]
+        rows.append((r, int(ids[pick]), float(rel[pick]), float(mmr[pick])))
+        alive[pick] = False
+        sims = _fold_scores(X[pick][None, :], X)[0]
+        srnd = np.array([_round_half_up6(float(s)) for s in sims])
+        maxs = srnd if maxs is None else np.maximum(maxs, srnd)
+    return list(zip(*rows)) if rows else None
+
+
+_MMR_SCHEMA = "sel_order int, vec_id bigint, relevance double, mmr double"
+
+
 def _mmr_rerank_local(
-    emb: DataFrame,
-    query_vec_id: int,
-    k: int,
-    pool: int,
-    lam: float,
-    id_col: str,
-    vec_col: str,
+    emb: DataFrame, query_vec_id: int, k: int, pool: int, lam: float
 ) -> DataFrame:
     """Single-task MMR re-rank for a corpus known to fit one executor
-    (``<= LOCAL_KNN_ROWS`` rows — gated by :func:`mmr_rerank`). One
-    Spark job replaces the knn stage, the pool checkpoint, and the
-    k-round driver loop of ``orderBy().limit(1).collect()`` round trips
-    (each a full pool scan). Arithmetic mirrors
-    the distributed form term-for-term: the identical left-fold cosine
-    (:func:`_fold_scores`), HALF_UP 6dp rounding before every max-fold,
-    ``lam*rel - (1-lam)*maxs`` on the rounded inputs, (desc, asc id)
-    tiebreaks, and np.maximum == F.greatest (NaN wins in both). Above
-    the gate the distributed knn + driver-loop plan runs unchanged —
-    each pick there is a distributed top-1, so it is scale-valid.
-    Equality is pinned by tests/test_local_kernels.py and the chained
-    CTE oracle."""
+    (``<= LOCAL_KNN_ROWS`` rows — gated by :func:`mmr_rerank`): the
+    candidate stage and :func:`_mmr_greedy` in one Spark job. The
+    candidate stage is knn_bruteforce's: top-``pool`` by the unrounded
+    left-fold cosine (desc, asc id), relevance rounded HALF_UP to 6dp.
+    Equality with the distributed branch is pinned by
+    tests/test_local_kernels.py and the chained CTE oracle."""
 
     def body(t):
         import numpy as np
 
-        rows = []
         vids = t.column("vid").to_numpy(zero_copy_only=False).astype(np.int64)
         V = _vec_matrix(t.column("v"))
         qm = np.flatnonzero(vids == query_vec_id)
         cm = np.flatnonzero(vids > query_vec_id)
-        if len(qm) and len(cm):
-            # candidate stage == knn_bruteforce: top-`pool` by the
-            # UNROUNDED fold score (desc, asc id), rel = rounded
-            scores = _fold_scores(V[qm][:1], V[cm])[0]
-            cids = vids[cm]
-            order = np.lexsort((cids, -scores))[:pool]
-            ids = cids[order]
-            rel = np.array([_round_half_up6(float(s)) for s in scores[order]])
-            X = V[cm][order]
-            alive = np.ones(len(ids), bool)
-            maxs = None
-            for r in range(k):
-                if not alive.any():
-                    break
-                mmr = rel if r == 0 else lam * rel - (1.0 - lam) * maxs
-                ai = np.flatnonzero(alive)
-                pick = ai[np.lexsort((ids[ai], -mmr[ai]))[0]]
-                rows.append((r, int(ids[pick]), float(rel[pick]), float(mmr[pick])))
-                alive[pick] = False
-                sims = _fold_scores(X[pick][None, :], X)[0]
-                srnd = np.array([_round_half_up6(float(s)) for s in sims])
-                maxs = srnd if maxs is None else np.maximum(maxs, srnd)
-        return list(zip(*rows)) if rows else None
+        if not (len(qm) and len(cm)):
+            return None
+        scores = _fold_scores(V[qm][:1], V[cm])[0]
+        cids = vids[cm]
+        order = np.lexsort((cids, -scores))[:pool]
+        rel = np.array([_round_half_up6(float(s)) for s in scores[order]])
+        return _mmr_greedy(cids[order], rel, V[cm][order], k, lam)
 
     feed = emb.select(
-        F.col(id_col).alias("vid"), as_double(vec_col).alias("v")
+        F.col("vec_id").alias("vid"), as_double("embedding").alias("v")
     )
-    return single_task(
-        feed, body, "sel_order int, vec_id bigint, relevance double, mmr double"
-    )
+    return single_task(feed, body, _MMR_SCHEMA)
 
 
 def mmr_rerank(
@@ -1229,8 +1150,6 @@ def mmr_rerank(
     k: int = 5,
     pool: int = 20,
     lam: float = 0.5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     corpus_rows: int | None = None,
 ) -> DataFrame:
     """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein
@@ -1239,11 +1158,11 @@ def mmr_rerank(
     Returns (sel_order, vec_id, relevance, mmr).
 
     The distributed stage is candidate generation — `knn_bruteforce`
-    over the full corpus (one scan, per-query top-k window). The
-    re-rank then runs over the pool-sized frame only: it is
-    localCheckpoint'ed once (pool rows), and each of the k rounds is a
-    TakeOrdered(1) over <= pool rows with the selected vectors embedded
-    as array literals — O(k*pool) work regardless of corpus size.
+    over the full corpus (one scan, per-query top-k window). Its
+    ``pool`` rows are localCheckpoint'ed once, and the k rounds
+    (:func:`_mmr_greedy`) run in one ``single_task`` over that
+    checkpoint: ``pool`` bounds the task at any corpus size, and the job
+    count does not grow with k.
 
     Determinism: relevance is the 6dp-rounded knn score; every
     similarity-to-selected is 6dp-rounded before the max-fold, so the
@@ -1251,49 +1170,27 @@ def mmr_rerank(
     identical argmaxes (vec_id tiebreaks). The oracle chains the same
     rounds as CTEs with a cumulative exclusion per round.
     """
-    # Size gate: within LOCAL_KNN_ROWS the whole program — candidate
-    # knn, pool checkpoint, and the k driver-side top-1 round trips —
-    # runs as one task.
+    # Size gate: within LOCAL_KNN_ROWS the candidate knn and the greedy
+    # rounds run as one task.
     if fits(LOCAL_KNN_ROWS, corpus_rows, emb):
-        return _mmr_rerank_local(
-            emb, query_vec_id, k, pool, lam, id_col, vec_col
-        )
-    q = emb.filter(F.col(id_col) == query_vec_id)
-    c = emb.filter(F.col(id_col) > query_vec_id)
-    cand = knn_bruteforce(q, c, k=pool, id_col=id_col, vec_col=vec_col)
-    px = emb.select(F.col(id_col).alias("vec_id"), as_double(vec_col).alias("x"))
+        return _mmr_rerank_local(emb, query_vec_id, k, pool, lam)
+    q = emb.filter(F.col("vec_id") == query_vec_id)
+    c = emb.filter(F.col("vec_id") > query_vec_id)
+    cand = knn_bruteforce(q, c, k=pool)
+    px = emb.select("vec_id", as_double("embedding").alias("x"))
+    # The eager checkpoint keeps the corpus scan out of the one task:
+    # coalesce(1) over the uncheckpointed pool would pull it in.
     pool_df = (
         cand.select(F.col("neighbor_id").alias("vec_id"), F.col("score").alias("rel"))
         .join(px, "vec_id")
         .localCheckpoint(eager=True)
     )
 
-    def lit_vec(vals: list) -> Column:
-        return F.array(*[F.lit(float(v)) for v in vals])
+    def body(t):
+        import numpy as np
 
-    rows = []
-    sel_ids: list = []
-    maxs = None
-    for r in range(k):
-        if r == 0:
-            scored = pool_df.select("vec_id", "rel", "x", F.col("rel").alias("mmr"))
-        else:
-            scored = pool_df.filter(~F.col("vec_id").isin(sel_ids)).select(
-                "vec_id",
-                "rel",
-                "x",
-                (F.lit(lam) * F.col("rel") - F.lit(1.0 - lam) * maxs).alias("mmr"),
-            )
-        top_rows = scored.orderBy(F.desc("mmr"), F.asc("vec_id")).limit(1).collect()
-        if not top_rows:
-            # pool exhausted (fewer candidates than k) — return the
-            # shorter selection instead of IndexError (r6 advisory)
-            break
-        top = top_rows[0]
-        rows.append((r, int(top.vec_id), float(top.rel), float(top.mmr)))
-        sel_ids.append(int(top.vec_id))
-        simr = F.round(cosine(lit_vec(list(top.x)), F.col("x")), 6)
-        maxs = simr if maxs is None else F.greatest(maxs, simr)
-    return emb.sparkSession.createDataFrame(
-        rows, "sel_order INT, vec_id BIGINT, relevance DOUBLE, mmr DOUBLE"
-    )
+        ids = t.column("vec_id").to_numpy(zero_copy_only=False).astype(np.int64)
+        rel = t.column("rel").to_numpy(zero_copy_only=False)
+        return _mmr_greedy(ids, rel, _vec_matrix(t.column("x")), k, lam)
+
+    return single_task(pool_df, body, _MMR_SCHEMA)

@@ -62,7 +62,7 @@ SCALE = 10_000
 SCALE2 = SCALE * SCALE  # product-sum scale (1e8)
 
 
-def _moment_partials(vec_col: str, dim: int):
+def _moment_partials(dim: int):
     """mapInPandas fn: fold each Arrow batch into flat moment rows.
 
     Encoding (summable under groupBy(i, j) + SUM(s)):
@@ -83,7 +83,7 @@ def _moment_partials(vec_col: str, dim: int):
         for pdf in batches:
             if pdf.empty:
                 continue
-            x = np.stack(pdf[vec_col].to_numpy()).astype("float64")
+            x = np.stack(pdf["embedding"].to_numpy()).astype("float64")
             q = np.floor(x * float(SCALE)).astype("int64")
             # int64-overflow guard: bound rows-per-chunk by the largest
             # possible per-term product magnitude in this batch.
@@ -105,10 +105,10 @@ def _moment_partials(vec_col: str, dim: int):
     return fn
 
 
-def _summed_moments(emb: DataFrame, vec_col: str, dim: int) -> DataFrame:
+def _summed_moments(emb: DataFrame, dim: int) -> DataFrame:
     """Exact integer moment totals: (i, j, s DECIMAL(38,0))."""
-    partials = emb.select(vec_col).mapInPandas(
-        _moment_partials(vec_col, dim), schema="i int, j int, s long"
+    partials = emb.select("embedding").mapInPandas(
+        _moment_partials(dim), schema="i int, j int, s long"
     )
     return partials.groupBy("i", "j").agg(
         F.sum(F.col("s").cast("decimal(38,0)")).alias("s")
@@ -121,7 +121,7 @@ def _summed_moments(emb: DataFrame, vec_col: str, dim: int) -> DataFrame:
 LOCAL_MOMENT_ROWS = 100_000
 
 
-def _moments_local(emb: DataFrame, vec_col: str, dim: int) -> DataFrame:
+def _moments_local(emb: DataFrame, dim: int) -> DataFrame:
     """Single-task covariance for a corpus known to fit one executor:
     the distributed row ran 6 jobs / 14 Exchange mentions around
     ~10 ms of numpy at bench scale (2000 x 64). Identical arithmetic:
@@ -141,7 +141,7 @@ def _moments_local(emb: DataFrame, vec_col: str, dim: int) -> DataFrame:
         iu, ju = np.triu_indices(dim)
         sx = np.zeros(dim, dtype=object)
         sxy = np.zeros(len(iu), dtype=object)
-        x = _vec_matrix(t.column(vec_col))
+        x = _vec_matrix(t.column("embedding"))
         q = np.floor(x * float(SCALE)).astype("int64")
         maxq = int(np.abs(q).max()) or 1
         step = max(1, (1 << 62) // (maxq * maxq))
@@ -166,16 +166,15 @@ def _moments_local(emb: DataFrame, vec_col: str, dim: int) -> DataFrame:
             )
         return iu, ju, cov
 
-    return single_task(emb.select(vec_col), body, "i int, j int, cov double")
+    return single_task(emb.select("embedding"), body, "i int, j int, cov double")
 
 
 def embedding_moments(
     emb: DataFrame,
-    vec_col: str = "embedding",
     dim: int = 64,
     corpus_rows: int | None = None,
 ) -> DataFrame:
-    """Upper-triangle covariance of ``vec_col``: rows ``(i, j, cov)``.
+    """Upper-triangle covariance of ``embedding``: rows ``(i, j, cov)``.
 
     ``cov`` is the population covariance of the SCALE-quantized
     components (divide by n), finalized from exact integer sums:
@@ -196,8 +195,8 @@ def embedding_moments(
     identical arithmetic).
     """
     if fits(LOCAL_MOMENT_ROWS, corpus_rows, emb):
-        return _moments_local(emb, vec_col, dim)
-    summed = _summed_moments(emb, vec_col, dim)
+        return _moments_local(emb, dim)
+    summed = _summed_moments(emb, dim)
     n = summed.filter((F.col("i") == -1) & (F.col("j") == -1)).select(
         F.col("s").alias("n")
     )
@@ -236,10 +235,10 @@ def embedding_moments(
 
 
 def _collect_moments(
-    emb: DataFrame, vec_col: str, dim: int
+    emb: DataFrame, dim: int
 ) -> tuple[int, list[int], dict[tuple[int, int], int]]:
     """Driver-side exact integer totals: (n, sx[dim], {(i,j): sxy})."""
-    rows = _summed_moments(emb, vec_col, dim).collect()
+    rows = _summed_moments(emb, dim).collect()
     n = 0
     sx = [0] * dim
     sxy: dict[tuple[int, int], int] = {}
@@ -254,16 +253,10 @@ def _collect_moments(
     return n, sx, sxy
 
 
-def pca_whiten(
-    emb: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int = 64,
-    k: int = 8,
-) -> DataFrame:
-    """Project ``vec_col`` onto its top-``k`` whitened principal axes.
+def pca_whiten(emb: DataFrame, dim: int = 64, k: int = 8) -> DataFrame:
+    """Project ``embedding`` onto its top-``k`` whitened principal axes.
 
-    Returns ``(id_col, pc0..pc{k-1})`` where the components are
+    Returns ``(vec_id, pc0..pc{k-1})`` where the components are
     centered, unit-variance, and mutually decorrelated (cov ~ I) — the
     embedding-whitening step that improves cosine-based near-dup and
     retrieval quality on anisotropic embedding spaces.
@@ -286,7 +279,7 @@ def pca_whiten(
     """
     import numpy as np
 
-    n, sx_l, sxy_d = _collect_moments(emb, vec_col, dim)
+    n, sx_l, sxy_d = _collect_moments(emb, dim)
     sx = np.array(sx_l, dtype="float64")
     sxy = np.zeros((dim, dim))
     for (i, j), s in sxy_d.items():
@@ -306,23 +299,18 @@ def pca_whiten(
         for pdf in batches:
             if pdf.empty:
                 continue
-            x = np.stack(pdf[vec_col].to_numpy()).astype("float64")
+            x = np.stack(pdf["embedding"].to_numpy()).astype("float64")
             z = np.round((x - mean) @ whiten, 4)
-            out = pd.DataFrame({id_col: pdf[id_col].to_numpy()})
+            out = pd.DataFrame({"vec_id": pdf["vec_id"].to_numpy()})
             for c in range(k):
                 out[f"pc{c}"] = z[:, c]
             yield out
 
-    schema = f"{id_col} bigint, " + ", ".join(f"pc{c} double" for c in range(k))
-    return emb.select(id_col, vec_col).mapInPandas(project, schema=schema)
+    schema = "vec_id bigint, " + ", ".join(f"pc{c} double" for c in range(k))
+    return emb.select("vec_id", "embedding").mapInPandas(project, schema=schema)
 
 
-def mahalanobis_diag(
-    emb: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int = 64,
-) -> DataFrame:
+def mahalanobis_diag(emb: DataFrame, dim: int = 64) -> DataFrame:
     """Diagonal-Mahalanobis outlier score per vector: ``(id, maha2)``.
 
     ``maha2 = sum_i ((x_i - mean_i) / std_i)^2`` — the standard cheap
@@ -342,7 +330,7 @@ def mahalanobis_diag(
     """
     import math
 
-    summed = _summed_moments(emb, vec_col, dim)
+    summed = _summed_moments(emb, dim)
     diag = {
         (r["i"], r["j"]): int(r["s"])
         for r in summed.filter(
@@ -361,13 +349,13 @@ def mahalanobis_diag(
         stds.append(round(math.sqrt(var), 6))
     m_arr = F.array(*[F.lit(v) for v in means])
     s_arr = F.array(*[F.lit(v) for v in stds])
-    x = F.transform(F.col(vec_col), lambda v: v.cast("double"))
+    x = F.transform(F.col("embedding"), lambda v: v.cast("double"))
     z2 = F.zip_with(
         F.zip_with(x, m_arr, lambda a, b: a - b),
         s_arr,
         lambda d, s: (d / s) * (d / s),
     )
     return emb.select(
-        id_col,
+        "vec_id",
         F.aggregate(z2, F.lit(0.0), lambda acc, v: acc + v).alias("maha2"),
     )

@@ -1580,10 +1580,7 @@ def llm_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-task kernel (operators/stats.py:_moments_local) with zero
     # gate jobs; the batch-partials plan is unchanged above the gate.
     m = embedding_moments(
-        emb,
-        vec_col="embedding",
-        dim=64,
-        corpus_rows=parquet_row_count(sf_dir, "embeddings"),
+        emb, dim=64, corpus_rows=parquet_row_count(sf_dir, "embeddings")
     )
     return m.select(
         F.col("i").cast("bigint").alias("i"),
@@ -4316,8 +4313,8 @@ def _mmr_oracle(k: int = 5) -> str:
     "retrieval step that plain top-k lacks (near-duplicate hits "
     "crowd out coverage). Candidate generation is the distributed "
     "stage (knn_bruteforce's one corpus scan); the greedy rounds run "
-    "on the checkpointed 20-row pool with selected vectors as array "
-    "literals, O(k*pool) regardless of corpus size. All similarity "
+    "in one single task over the checkpointed 20-row pool, O(k*pool) "
+    "regardless of corpus size and no job per pick. All similarity "
     "inputs are 6dp-rounded before the max-fold so both engines pick "
     "identical argmaxes; the oracle unrolls the same rounds with "
     "cumulative exclusions.",
@@ -4325,8 +4322,8 @@ def _mmr_oracle(k: int = 5) -> str:
 )
 def llm_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
-    # r20: the footer count proves the corpus small with zero jobs and
-    # the whole program (knn + k driver round trips) runs as one task.
+    # The footer count proves the corpus small with zero jobs, and the
+    # whole program (candidate knn + greedy rounds) runs as one task.
     return similarity.mmr_rerank(
         emb,
         query_vec_id=0,
